@@ -6,6 +6,19 @@ in the registry, ClickHouse DDL — ``/root/reference/README.md:96-102,
 registry, explicit load, no runtime inference in the pipeline path
 (parquet footers carry the schema; we validate expected columns).
 
+Schema lookup, not inference per read: the first :func:`load` of a file
+runs Spark's footer inference (one Spark job); every later load passes
+the remembered ``StructType`` to ``spark.read.schema(...)``, which
+submits no job. The lookup key is the file's identity — absolute path,
+size and ``mtime_ns`` (of every file under it, for a directory table) —
+plus the session confs that change what inference returns
+(:data:`_INFER_CONFS`, e.g. ``nanosAsLong``, which ``session.configure``
+flips at runtime). A rewritten file or a flipped conf therefore infers
+afresh. Only the schema is remembered: each call still returns a new
+lazy DataFrame that scans the file, so no plan, frame or result is
+shared between calls. Paths ``os.stat`` cannot see (remote stores) are
+inferred on every read.
+
 At 100 TB these tables are date/key-partitioned parquet/lakehouse tables;
 the loader keeps scans lazy so Catalyst pushes filters and prunes columns
 down to the file scan.
@@ -16,6 +29,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -36,11 +50,53 @@ BROADCAST_DIMS = ("region", "nation")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change the schema parquet inference returns.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (abs path, file identity, inference confs) -> StructType
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _identity(path: str) -> tuple:
+    """``(relpath, size, mtime_ns)`` of the file, or of every file
+    under a directory table: any rewrite changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(d, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy parquet scan of ``path`` under its remembered schema (see
+    the module docstring for the key)."""
+    try:
+        ident = _identity(path)
+    except OSError:  # remote or missing: Spark resolves it, or raises
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), ident,
+           tuple(spark.conf.get(k) for k in _INFER_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # Timestamp normalization. The fixture generator has shipped the same
     # logical column under several physical encodings across rounds:
     #   - TIMESTAMP(NANOS): with legacy nanosAsLong (session.configure) it
@@ -89,7 +145,7 @@ def load_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise FileNotFoundError(
             f"no partsupp fixture for {tag}; run tools/gen_partsupp.py"
         )
-    return spark.read.parquet(path)
+    return _read(spark, path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -133,8 +133,12 @@ from __future__ import annotations
 
 import re
 import uuid
+from collections import ChainMap
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+
+from postgre_to_clickhouse_spark import catalog
 
 __all__ = ["ChSqlError", "ChContext", "ch_select"]
 
@@ -1851,6 +1855,31 @@ def _parse(tokens: list[str]) -> _Parsed:
 
 
 # ---------------------------------------------------------------------------
+class _FixtureTables(Mapping):
+    """Read-only ``name -> DataFrame`` over ``catalog.TABLES`` that
+    loads a table on its first lookup, so a statement pays only for the
+    tables it names. Membership, iteration and length answer from the
+    name list without loading anything."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        self._spark, self._sf_dir = spark, sf_dir
+        self._loaded: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._loaded:  # catalog.load raises KeyError if unknown
+            self._loaded[name] = catalog.load(self._spark, self._sf_dir, name)
+        return self._loaded[name]
+
+    def __contains__(self, name) -> bool:
+        return name in catalog.TABLES
+
+    def __iter__(self):
+        return iter(catalog.TABLES)
+
+    def __len__(self) -> int:
+        return len(catalog.TABLES)
+
+
 class ChContext:
     """Name resolution + per-table CH metadata the clauses need:
     ``final_specs[t] = (entity_key_cols, version_cols)`` enables
@@ -1859,7 +1888,7 @@ class ChContext:
 
     def __init__(
         self,
-        tables: dict[str, DataFrame],
+        tables: Mapping[str, DataFrame],
         final_specs: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] | None = None,
         sample_keys: dict[str, str] | None = None,
         sample_seed: str = "sample-v1",
@@ -1871,19 +1900,13 @@ class ChContext:
 
     @classmethod
     def from_sf_dir(cls, spark: SparkSession, sf_dir: str) -> "ChContext":
-        """The test-fixture context: every TESTDATA table, with the
-        natural SAMPLE BY keys."""
-        from postgre_to_clickhouse_spark import catalog
+        """The test-fixture context: every TESTDATA table, loaded on its
+        first reference, with the natural SAMPLE BY keys."""
         from postgre_to_clickhouse_spark.session import configure
 
         configure(spark)
-        names = (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split()
-        tables = {n: catalog.load(spark, sf_dir, n) for n in names}
         return cls(
-            tables,
+            _FixtureTables(spark, sf_dir),
             sample_keys={"events": "user_id", "documents": "doc_id",
                          "customer": "c_custkey"},
         )
@@ -1899,7 +1922,11 @@ def ch_select(spark: SparkSession, sql: str, ctx: ChContext) -> DataFrame:
     a session temp view UNDER ITS BARE NAME so Spark's parser can
     resolve the subquery — replacing any same-name temp view the
     caller had registered, and leaving the views registered after the
-    call. Statements without predicate subqueries register nothing.
+    call. Registering reads every entry, so a lazily loaded context
+    (:meth:`ChContext.from_sf_dir`) loads all its tables for such a
+    statement — cheap, since :func:`catalog.load` only looks the schema
+    up. Statements without predicate subqueries register nothing and
+    load only the tables they name.
     """
     return _compile(spark, _tokenize(sql.strip().rstrip(";")), ctx)
 
@@ -1910,8 +1937,10 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
         for name, sel_toks in ctes:
             # each CTE compiles through the same pipeline and becomes a
             # resolvable table for the ones after it and the main query
+            # layered over (not copied from) the context's tables, so a
+            # lazily loaded context stays lazy
             ctx = ChContext(
-                {**ctx.tables, name: _compile(spark, sel_toks, ctx)},
+                ChainMap({name: _compile(spark, sel_toks, ctx)}, ctx.tables),
                 ctx.final_specs, ctx.sample_keys, ctx.sample_seed,
             )
         for name, expr_toks in scalars:

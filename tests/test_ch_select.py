@@ -270,6 +270,51 @@ def test_cte_keeps_sample_key_of_base_tables(spark, ctx):
     assert 0 < out[0]["u"]
 
 
+@pytest.fixture
+def loads(monkeypatch):
+    """Names passed to ``catalog.load`` during the test, in order."""
+    names = []
+    real_load = catalog.load
+
+    def recording_load(spark_, sf_dir, name):
+        names.append(name)
+        return real_load(spark_, sf_dir, name)
+
+    monkeypatch.setattr(catalog, "load", recording_load)
+    return names
+
+
+def test_fixture_context_loads_on_first_reference(spark, loads):
+    """``from_sf_dir`` loads nothing up front; membership, iteration and
+    length answer from the table list; a lookup loads once."""
+    lazy = ChContext.from_sf_dir(spark, SF_ORACLE)
+    assert "events" in lazy.tables and "nope" not in lazy.tables
+    assert list(lazy.tables) == list(catalog.TABLES)
+    assert len(lazy.tables) == len(catalog.TABLES)
+    assert loads == []
+    assert lazy.tables["events"] is lazy.tables["events"]
+    assert loads == ["events"]
+    with pytest.raises(ChSqlError, match="unknown table"):
+        ch_select(spark, "SELECT 1 FROM nope", lazy)
+
+
+def test_with_statement_loads_only_named_tables(spark, loads):
+    """CTEs layer over the lazy context instead of copying it, so a
+    WITH statement over events loads only events."""
+    lazy = ChContext.from_sf_dir(spark, SF_ORACLE)
+    out = ch_select(
+        spark,
+        """
+        WITH busy AS (SELECT user_id, count() AS n FROM events GROUP BY user_id),
+        top AS (SELECT user_id FROM busy WHERE n >= 2)
+        SELECT count() AS c FROM top
+        """,
+        lazy,
+    )
+    assert loads == ["events"]
+    assert out.collect()[0]["c"] >= 0
+
+
 def test_inner_join_on_matches_native(spark, ctx):
     """Verbatim CH join chain (aliases, ON, CH function names in the
     aggregate) equals the hand-written DataFrame join."""

@@ -15,11 +15,18 @@ machine load cannot flake it) and bounds them well below the
 one-call-per-term pattern, plus a very generous wall-clock ceiling as
 a safety net for pathologies the call count cannot see (e.g. a huge
 literal converted element-by-element inside ONE call).
+
+It also gates the schema-inference job ``catalog.load`` used to pay on
+every call: a warm load, and a warm build of a CH-dialect statement,
+must submit ZERO Spark jobs (counted per job group through
+``sc.statusTracker()``), and the statement must load only the tables
+it names. Both are exact counts.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
 from contextlib import contextmanager
 
 import pytest
@@ -52,6 +59,23 @@ def _java_calls():
         yield box
     finally:
         _jg.JavaMember.__call__ = orig
+
+
+@contextmanager
+def _spark_jobs(spark):
+    """Count the Spark jobs submitted inside the block (its own job
+    group, read back through the status tracker)."""
+    sc = spark.sparkContext
+    group = f"construction-cost-{uuid.uuid4().hex}"
+    box = {}
+    sc.setJobGroup(group, "construction-cost gate")
+    try:
+        yield box
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        box["n"] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _docs(spark):
@@ -125,3 +149,36 @@ class TestConstructionCost:
             )
 
         _gate(build, max_calls=200)
+
+    def test_warm_load_submits_no_job(self, spark):
+        from postgre_to_clickhouse_spark import catalog
+
+        catalog.load(spark, SF, "events")
+        with _spark_jobs(spark) as jobs:
+            catalog.load(spark, SF, "events")
+        assert jobs["n"] == 0, (
+            f"a warm catalog.load submitted {jobs['n']} Spark jobs; the "
+            "schema lookup is inferring again"
+        )
+
+    def test_ch_dialect_build_loads_only_named_tables(self, spark, monkeypatch):
+        from postgre_to_clickhouse_spark import catalog
+        from postgre_to_clickhouse_spark.queries.ch_dialect import (
+            ch_dialect_hourly,
+        )
+
+        ch_dialect_hourly(spark, SF)  # warm the schema lookup
+        loaded = []
+        real_load = catalog.load
+
+        def counting_load(spark_, sf_dir, name):
+            loaded.append(name)
+            return real_load(spark_, sf_dir, name)
+
+        monkeypatch.setattr(catalog, "load", counting_load)
+        with _spark_jobs(spark) as jobs:
+            ch_dialect_hourly(spark, SF).schema
+        assert loaded == ["events"]
+        assert jobs["n"] == 0, (
+            f"a warm ch_dialect_hourly build submitted {jobs['n']} Spark jobs"
+        )
