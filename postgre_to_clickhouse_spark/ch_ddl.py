@@ -832,7 +832,11 @@ class ChDdlCatalog:
         self._insert_seq: dict[str, int] = {}
         # wire endpoints serve one thread per connection; batch-id
         # allocation takes a lock because duplicate ids would break
-        # versionless-RMT arrival tie-breaking. Concurrent DDL against
+        # versionless-RMT arrival tie-breaking. Concurrent COMMITS are
+        # safe: the manifest protocol lets exactly one writer create
+        # each version, INSERT and TRUNCATE retry on the new snapshot,
+        # and rewrites (OPTIMIZE FINAL, mutations, projection DDL) raise
+        # CommitConflict with nothing committed. Concurrent DDL against
         # the same table (e.g. ALTER ADD COLUMN racing an INSERT's
         # spec.schema read) is NOT synchronized — the wire contract is
         # one DDL author at a time, matching single-writer provisioning
@@ -1956,8 +1960,7 @@ class ChDdlCatalog:
         if len(tokens) < 3 or _kw(tokens[1]) != "TABLE":
             raise ChSqlError("TRUNCATE TABLE <name>?")
         name = self._table_ref(tokens, 2, "TRUNCATE TABLE")
-        t = self.storage_for(name)
-        return t._commit([], note="truncate")
+        return self.storage_for(name)._append([], note="truncate", replace=True)
 
     def _drop(self, tokens: list[str]):
         """CH ``DROP TABLE|VIEW [IF EXISTS] [db.]t``: forget the
@@ -2083,6 +2086,7 @@ class ChDdlCatalog:
         t = self.storage_for(name)
         if not final or spec.engine.upper() == "MERGETREE":
             return t.compact(spark, final=False, min_files_per_bucket=2)
+        m = t.current_manifest()  # the fold's base: read before the fold
         if spec.engine.upper() == "REPLACINGMERGETREE":
             if spec.final_spec is None:
                 raise ChSqlError(
@@ -2101,7 +2105,7 @@ class ChDdlCatalog:
             folded = self._fold_sums(spark, name)
         else:
             raise ChSqlError(f"OPTIMIZE FINAL unsupported for {spec.engine}")
-        return self._rewrite_all(spark, t, folded)
+        return self._rewrite_all(t, m, folded)
 
     def _fold_states(self, spark: SparkSession, name: str) -> DataFrame:
         """One merged state row per sorting key — each AggregateFunction
@@ -2203,24 +2207,25 @@ class ChDdlCatalog:
         folded = df.groupBy(*spec.order_by).agg(*aggs)
         return folded.select(*[f.name for f in spec.schema.fields])
 
-    def _rewrite_all(self, spark: SparkSession, t, folded: DataFrame) -> int:
+    def _rewrite_all(self, t, m: dict, folded: DataFrame) -> int:
         """Commit a snapshot where every non-empty bucket is rewritten
-        from ``folded`` — the manifest protocol's whole-fold commit
-        (new immutable files, atomic pointer flip; crash-safe like
-        every other commit)."""
+        from ``folded``, which was read from snapshot ``m`` or a later
+        one — the manifest protocol's whole-fold commit (new immutable
+        files, one atomic manifest creation on base ``m``; crash-safe
+        like every other commit). An INSERT committed after ``m``
+        makes the commit raise ``CommitConflict`` instead of folding
+        its rows away."""
         if t.projections:
             raise ChSqlError(
                 "OPTIMIZE FINAL with projections declared: drop the "
                 "projections first, fold, re-add (the CH DROP/"
                 "MATERIALIZE loop — same boundary as mutations)"
             )
-        m = t.current_manifest()
-        base = [f for f in m["files"] if not f.get("proj")]
-        if not base:
+        touched = sorted({f["bucket"] for f in m["files"] if not f.get("proj")})
+        if not touched:
             return t.current_version()
-        touched = sorted({f["bucket"] for f in base})
         new_files = t._write_bucket_files(folded, touched)
-        return t._commit(new_files, note="optimize final fold")
+        return t._commit(m, new_files, note="optimize final fold")
 
     def _modify_ttl(self, name: str, toks: list[str]):
         """CH ``MODIFY TTL col + INTERVAL n unit`` (r11): record the
@@ -2367,19 +2372,13 @@ class ChDdlCatalog:
 
                 batch = latest(batch, key, (spec.engine_args[0],))
             else:
-                t.append_parts(sort_key=key, arrival=key)(batch, batch_id)
-                return t.current_version()
+                return t.append_parts(sort_key=key, arrival=key)(batch, batch_id)
         # r16: no touched-bucket discovery pass — an INSERT never reads
         # existing data, so which buckets the batch lands in is decided
         # by the hash write itself (empty partitions write no file),
         # exactly the append_parts funnel. One scan+shuffle per insert
         # deleted; the produced file set is identical.
-        new_files = t._write_part(batch, None)
-        t._commit(
-            t.current_manifest()["files"] + new_files,
-            note=f"append batch_id={batch_id}",
-        )
-        return t.current_version()
+        return t._append(t._write_part(batch, None), note=f"append batch_id={batch_id}")
 
     def _read_stored(self, spark: SparkSession, name: str) -> DataFrame:
         """Read a stored table onto its CURRENT declared schema. For a

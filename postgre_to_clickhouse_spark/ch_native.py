@@ -963,8 +963,10 @@ def serve_ch_native(
         try:
             _Conn(conn, _run, _execute, catalog, spark,
                   max_result_rows).serve()
-        except (EOFError, OSError):
-            pass  # routine client disconnect mid-stream
+        except (EOFError, OSError, ChSqlError):
+            # a client disconnect mid-stream, or a framing error outside
+            # a query (header trust is gone): just close the connection
+            pass
         finally:
             try:
                 conn.close()

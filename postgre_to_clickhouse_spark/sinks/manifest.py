@@ -13,13 +13,16 @@ formats share, dependency-free:
   overwritten — a MERGE writes NEW files for the touched buckets only.
 - **Versioned manifests** under ``_manifests/v{N}.json`` listing the
   files that make up that snapshot (plus lineage metadata).
-- **Atomic commit**: a snapshot becomes current only when the
-  ``_latest`` pointer is atomically replaced (``os.replace`` — POSIX
-  rename atomicity; object stores use put-if-absent on the manifest
-  name instead). A crash at ANY earlier point leaves the previous
-  snapshot fully intact and merely orphans data files, which
-  :meth:`ManifestTable.vacuum` reclaims. Readers always see a complete
-  snapshot — no half-written table, ever.
+- **Atomic commit**: creating ``v{N}.json`` IS the commit, and the
+  current version is the highest ``v{N}.json`` present (the Delta
+  Lake log rule; object stores use put-if-absent on the same name).
+  The manifest is written whole under a temp name and hard-linked to
+  ``v{base+1}.json``; the link fails if a concurrent writer committed
+  that version first, so two writers can never both commit on one
+  base. A crash at ANY earlier point leaves the previous snapshot
+  fully intact and merely orphans data files and a temp manifest,
+  which :meth:`ManifestTable.vacuum` reclaims. Readers always see a
+  complete snapshot — no half-written table, ever.
 - **Idempotent MERGE**: last-wins dedup on (sort_key, arrival) is
   deterministic, so replaying a micro-batch after a crash commits a
   snapshot with identical content.
@@ -49,8 +52,8 @@ from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest
 from postgre_to_clickhouse_spark.session import micro_shape as _micro_shape
 from postgre_to_clickhouse_spark.session import no_aqe as _no_aqe
 
-_LATEST = "_latest"
 _MANIFESTS = "_manifests"
+_VERSION = re.compile(r"v(\d+)\.json")
 _DATA = "data"
 _PROJECTIONS = "_projections.json"
 # a string probe that is a timestamp literal — padded to the fixed
@@ -65,6 +68,11 @@ _TS_STRING = re.compile(
 # stored raw, so matching this shape on the stored side identifies the
 # comparisons where a timestamp-literal probe must be padded.
 _TS_PADDED = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6}$")
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed the version this commit was based on.
+    Nothing was committed; retry against the new current snapshot."""
 
 
 class ManifestTable:
@@ -121,11 +129,9 @@ class ManifestTable:
 
     # -- snapshot bookkeeping ------------------------------------------------
     def current_version(self) -> int:
-        try:
-            with open(os.path.join(self.path, _LATEST)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
+        """The highest committed version (-1 for an empty table)."""
+        found = (_VERSION.fullmatch(n) for n in os.listdir(os.path.join(self.path, _MANIFESTS)))
+        return max((int(m.group(1)) for m in found if m), default=-1)
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.path, _MANIFESTS, f"v{version}.json")
@@ -136,45 +142,31 @@ class ManifestTable:
     def manifest_at(self, version: int) -> dict:
         if version < 0:
             return {"version": -1, "files": []}
-        if version > self.current_version():
-            raise ValueError(f"version {version} not committed (current={self.current_version()})")
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
+        try:
+            with open(self._manifest_path(version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raise ValueError(f"version {version} not committed") from None
 
-    def _commit(self, files: list[dict], note: str) -> int:
-        """Write manifest v{N+1}, then atomically flip the pointer.
+    def _commit(self, base: dict, files: list[dict], note: str) -> int:
+        """Commit ``files`` as version ``base["version"] + 1``.
 
-        The manifest file is claimed with O_EXCL, skipping slots left by
-        crashed committers (a v{N+1} written but never flipped) — replay
-        after a crash claims the next free slot instead of overwriting
-        evidence, and two simultaneous writers can never write the SAME
-        manifest file. The pointer flip remains the single commit
-        point; it is last-writer-wins, so the concurrency contract is
-        one committer at a time (the streaming foreachBatch driver) —
-        true multi-writer needs compare-and-swap on the pointer, which
-        object stores provide as put-if-absent/ETag and POSIX rename
-        does not.
+        The manifest is written whole to a temp file, then hard-linked
+        to ``v{N}.json``. The link fails if that name exists, so its
+        creation IS the commit: of two writers on the same base exactly
+        one wins, and the other gets :class:`CommitConflict` with
+        nothing committed. A crash before the link leaves only the
+        temp file (reclaimed by :meth:`vacuum`), never a half-written
+        ``v{N}.json``.
         """
-        v = self.current_version() + 1
-        while True:
-            try:
-                fd = os.open(self._manifest_path(v), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                v += 1  # crashed or concurrent claim — take the next slot
+        v = base["version"] + 1
         # r17: persist the schema fingerprints the entries reference
-        # (carried entries resolve through the previous manifest's
-        # dict; fresh entries through this process's registry) so any
-        # LATER reader — including a fresh ManifestTable object — can
-        # skip footer inference when one schema covers its file set.
-        fps = {f["sch"] for f in files if f.get("sch")}
-        if fps:
-            known = dict((self.current_manifest().get("schemas") or {}))
-            known.update(self._schema_jsons)
-            self._schema_jsons = known
-            schemas = {fp: known[fp] for fp in sorted(fps) if fp in known}
-        else:
-            schemas = {}
+        # (fresh entries resolve through this object's registry, carried
+        # ones through the base manifest) so any LATER reader — including
+        # a fresh ManifestTable object — can skip footer inference when
+        # one schema covers its file set.
+        known = {**(base.get("schemas") or {}), **self._schema_jsons}
+        schemas = {fp: known[fp] for fp in sorted({f.get("sch") for f in files} & known.keys())}
         manifest = {
             "version": v,
             "committed_at": time.time(),
@@ -183,13 +175,31 @@ class ManifestTable:
         }
         if schemas:
             manifest["schemas"] = schemas
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        tmp = os.path.join(self.path, f"{_LATEST}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}")
+        tmp = os.path.join(self.path, _MANIFESTS, f"tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, os.path.join(self.path, _LATEST))  # THE commit point
+            json.dump(manifest, f)
+        try:
+            os.link(tmp, self._manifest_path(v))  # THE commit point
+        except FileExistsError:
+            raise CommitConflict(
+                f"{self.path}: version {v} was committed by another writer "
+                f"while {note!r} ran; nothing committed, retry"
+            ) from None
+        finally:
+            os.remove(tmp)
         return v
+
+    def _append(self, new_files: list[dict], note: str, replace: bool = False) -> int:
+        """Commit ``new_files`` on top of the current snapshot (in place
+        of its files with ``replace=True``: TRUNCATE). Neither file list
+        depends on what the base holds, so a conflict re-reads the
+        current snapshot and retries on it."""
+        while True:
+            base = self.current_manifest()
+            try:
+                return self._commit(base, ([] if replace else base["files"]) + new_files, note)
+            except CommitConflict:
+                continue
 
     # -- recorded file schemas (r17, VERDICT r16 #3) --------------------------
     def _register_schema(self, schema: "_T.StructType") -> str:
@@ -557,7 +567,7 @@ class ManifestTable:
             proj_files += self._write_projection_files(df, pid, only=name)
         others = [f for f in m["files"] if f.get("proj")]
         return self._commit(
-            new_base + others + proj_files, note=f"add_projection {name}"
+            m, new_base + others + proj_files, note=f"add_projection {name}"
         )
 
     _AGG_FNS = ("sum", "count", "min", "max")
@@ -632,7 +642,7 @@ class ManifestTable:
             proj_files += self._write_projection_files(df, pid, only=name)
         others = [f for f in m["files"] if f.get("proj")]
         return self._commit(
-            new_base + others + proj_files, note=f"add_agg_projection {name}"
+            m, new_base + others + proj_files, note=f"add_agg_projection {name}"
         )
 
     def _agg_partial_exprs(self, spec: dict, dtypes: dict[str, str]):
@@ -718,7 +728,7 @@ class ManifestTable:
         kept = [f for f in m["files"] if f.get("proj") != name]
         if len(kept) == len(m["files"]):
             return self.current_version()
-        return self._commit(kept, note=f"drop_projection {name}")
+        return self._commit(m, kept, note=f"drop_projection {name}")
 
     def _sort_proj_stats_cols(self) -> tuple[str, ...]:
         """Stats columns for sort-projection files: every sort
@@ -1116,7 +1126,9 @@ class ManifestTable:
         Reads ONLY the touched buckets' current files, merges with the
         deduped batch, writes new files for those buckets, and commits a
         manifest carrying every untouched file forward by reference.
-        The pointer flip is the single atomic commit point.
+        The manifest's creation is the single atomic commit point; a
+        batch whose base another writer committed over first raises
+        :class:`CommitConflict` and commits nothing.
         """
 
         if self.projections:
@@ -1158,7 +1170,7 @@ class ManifestTable:
                 new_files = self._write_bucket_files(merged, touched)
             finally:
                 batch.unpersist()
-            self._commit(kept_files + new_files, note=f"merge batch_id={batch_id}")
+            self._commit(m, kept_files + new_files, note=f"merge batch_id={batch_id}")
 
         return _apply
 
@@ -1174,20 +1186,19 @@ class ManifestTable:
         (ReplacingMergeTree ``FINAL``), and :meth:`compact` folds parts
         together in the background exactly like the engine's merges.
         Within-batch redeliveries are still deduped before the write —
-        that state is batch-bounded.
+        that state is batch-bounded. Returns the version the batch
+        committed; a concurrent commit makes it rebase and retry.
         """
 
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        def _apply(batch_df: DataFrame, batch_id: int) -> int:
             batch = dedup_redelivery(batch_df, sort_key, arrival)
             # r16: no touched-bucket discovery pass — an append never
             # reads existing data, so which buckets a batch touches is
             # fully decided by the write itself (empty hash partitions
             # write no file); the old distinct().collect() was one
             # whole extra scan+shuffle of every batch.
-            new_files = self._write_part(batch, None)
-            self._commit(
-                self.current_manifest()["files"] + new_files,
-                note=f"append batch_id={batch_id}",
+            return self._append(
+                self._write_part(batch, None), note=f"append batch_id={batch_id}"
             )
 
         return _apply
@@ -1212,8 +1223,10 @@ class ManifestTable:
         merge ClickHouse runs in the background, Delta's OPTIMIZE).
 
         Same commit protocol as merges — new immutable files, untouched
-        buckets carried by reference, atomic pointer flip; a crash at
-        any point leaves the previous snapshot intact. Readers of
+        buckets carried by reference, one atomic manifest creation; a
+        crash at any point leaves the previous snapshot intact, and a
+        concurrent commit on the same base raises
+        :class:`CommitConflict`. Readers of
         retained versions are unaffected (their files are reclaimed
         only by a later vacuum). Returns the new version, or the
         current one if nothing needed compacting.
@@ -1252,6 +1265,7 @@ class ManifestTable:
             data = latest(data, entity_key=(self.key_col,), version_cols=sort_key[1:] + arrival)
         new_files = self._write_bucket_files(data, touched)
         return self._commit(
+            m,
             kept_files + new_files,
             note=f"compact final={final} buckets={len(touched)}",
         )
@@ -1306,6 +1320,7 @@ class ManifestTable:
         chosen_set = set(chosen)
         kept = [f for f in m["files"] if f.get("part") not in chosen_set]
         return self._commit(
+            m,
             kept + new_files,
             note=f"compact parts final={final} merged={len(chosen)}/{len(groups)}",
         )
@@ -1340,7 +1355,7 @@ class ManifestTable:
         # and the zone maps prove it holds no matching row). The
         # rewrite below still reads every file of a touched bucket.
         candidates = (
-            self.files_for(where, equals=equals, tokens=tokens)
+            self.files_for(where, equals=equals, tokens=tokens, version=m["version"])
             if (where or equals or tokens)
             else m["files"]
         )
@@ -1371,7 +1386,7 @@ class ManifestTable:
         )
         new_files = self._write_bucket_files(survivors, touched)
         return self._commit(
-            kept_files + new_files, note=f"delete_where buckets={len(touched)}"
+            m, kept_files + new_files, note=f"delete_where buckets={len(touched)}"
         )
 
     def update_where(
@@ -1423,7 +1438,7 @@ class ManifestTable:
             return self.current_version()
         by_name = {f["name"]: f for f in m["files"]}
         candidates = (
-            self.files_for(where, equals=equals, tokens=tokens)
+            self.files_for(where, equals=equals, tokens=tokens, version=m["version"])
             if (where or equals or tokens)
             else m["files"]
         )
@@ -1459,6 +1474,7 @@ class ManifestTable:
         )
         new_files = self._write_bucket_files(updated, touched)
         return self._commit(
+            m,
             kept_files + new_files,
             note=(
                 f"update_where buckets={len(touched)} "
@@ -1538,7 +1554,7 @@ class ManifestTable:
             cut_lit = f"TIMESTAMP '{older_than}'"
         predicate = f"{ts_col} < {cut_lit}"
         rng = [(ts_col, None, older_than)] if ts_col in self.stats_cols else None
-        candidates = self.files_for(rng) if rng else m["files"]
+        candidates = self.files_for(rng, version=m["version"]) if rng else m["files"]
         if not candidates:
             return self.current_version()
         with _no_aqe(spark):  # r17: same fixed-shape hit-find as update
@@ -1578,6 +1594,7 @@ class ManifestTable:
         merged = survivors.select(*src.columns).unionByName(rolled)
         new_files = self._write_bucket_files(merged, touched)
         return self._commit(
+            m,
             kept_files + new_files,
             note=(
                 f"ttl_rollup buckets={len(touched)} "
@@ -1628,21 +1645,20 @@ class ManifestTable:
 
     def vacuum(self, keep_versions: int = 2) -> list[str]:
         """Delete data files referenced by NO retained manifest (crash
-        orphans and files superseded more than ``keep_versions`` ago).
-        Safe concurrently with readers of retained versions — the
-        current snapshot's files are never touched."""
+        orphans and files superseded more than ``keep_versions`` ago)
+        and temp manifests a crashed commit never linked. Safe
+        concurrently with readers of retained versions — the current
+        snapshot's files are never touched — but not with writers,
+        whose files are unreferenced until their commit lands."""
+        mdir = os.path.join(self.path, _MANIFESTS)
         current = self.current_version()
         keep = set()
-        removed_manifests = []
-        for v_name in sorted(os.listdir(os.path.join(self.path, _MANIFESTS))):
-            v = int(v_name[1:-5])
-            if v > current:  # manifest written but never committed (crash)
-                os.remove(self._manifest_path(v))
-                removed_manifests.append(v_name)
-                continue
-            if v > current - keep_versions:
-                with open(self._manifest_path(v)) as f:
-                    keep.update(ff["name"] for ff in json.load(f)["files"])
+        for name in os.listdir(mdir):
+            m = _VERSION.fullmatch(name)
+            if m is None:  # a temp manifest whose commit never linked
+                os.remove(os.path.join(mdir, name))
+            elif int(m.group(1)) > current - keep_versions:
+                keep.update(f["name"] for f in self.manifest_at(int(m.group(1)))["files"])
         removed = []
         for name in os.listdir(os.path.join(self.path, _DATA)):
             if name not in keep:

@@ -862,6 +862,7 @@ def test_zstd_frame_refused_loudly(spark, tmp_path):
         ep.stop()
 
 
+@pytest.mark.filterwarnings("error::pytest.PytestUnhandledThreadExceptionWarning")
 def test_implausible_string_length_refuses(natep):
     """r14 hardening: a peer claiming a multi-gigabyte string (stream
     desync, or a non-native client on the port) must fail loudly

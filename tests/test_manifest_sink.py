@@ -66,32 +66,35 @@ def test_merge_prunes_untouched_buckets(spark, tmp_path):
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
 
 
-def test_crash_before_pointer_flip_preserves_snapshot(spark, tmp_path):
-    """Data files written + manifest written, but pointer NOT flipped
-    (crash just before the commit point): readers still see the old
-    snapshot; replaying the batch converges; vacuum reclaims orphans."""
+def test_crash_before_commit_link_preserves_snapshot(spark, tmp_path):
+    """Data files written + manifest written to its temp name, but
+    never linked to ``v{N}.json`` (crash just before the commit point):
+    readers still see the old snapshot; replaying the batch converges;
+    vacuum reclaims the orphan data files and the temp manifest."""
     t = ManifestTable(str(tmp_path / "t"))
     sink = t.merge_upsert()
     sink(_full(spark), 0)
     v_before = t.current_version()
     files_before = {f["name"] for f in t.current_manifest()["files"]}
 
-    # simulate the crash: write orphan data files + an uncommitted manifest
+    # simulate the crash: orphan data files + a temp manifest, never linked
     orphans = t._write_bucket_files(t.read(spark), list(range(t.n_buckets)))
-    with open(t._manifest_path(v_before + 1), "w") as f:
+    with open(os.path.join(t.path, "_manifests", "tmp.crashed"), "w") as f:
         json.dump({"version": v_before + 1, "files": orphans, "note": "crash"}, f)
 
-    # reader is unaffected — pointer still names the old complete snapshot
+    # reader is unaffected — no v{N+1}.json, so the old snapshot is current
     assert t.current_version() == v_before
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
 
-    # replay claims the NEXT free version (O_EXCL skips the crashed
-    # claim rather than overwriting evidence); vacuum removes leavings
+    # replay commits the very version the crash never linked; vacuum
+    # removes the leavings
     sink(_full(spark), 1)
-    assert t.current_version() == v_before + 2
+    assert t.current_version() == v_before + 1
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
     removed = t.vacuum(keep_versions=1)
     assert {o["name"] for o in orphans} <= set(removed) | files_before
+    manifests = set(os.listdir(os.path.join(t.path, "_manifests")))
+    assert manifests == {f"v{v}.json" for v in range(v_before + 2)}  # temp manifest gone
     data_dir = os.path.join(t.path, "data")
     live = {f["name"] for f in t.current_manifest()["files"]}
     assert live <= set(os.listdir(data_dir))
@@ -966,7 +969,7 @@ def test_agg_projection_fallback_and_validation(spark, tmp_path):
     # strip the projection's files from the snapshot → incomplete
     # coverage: strict read raises, fallback recomputes identically
     m = t.current_manifest()
-    t._commit([f for f in m["files"] if not f.get("proj")], "strip")
+    t._commit(m, [f for f in m["files"] if not f.get("proj")], "strip")
     with pytest.raises(RuntimeError, match="cover"):
         t.read_agg(spark, "by_cat", fallback=False)
     assert sorted(map(tuple, t.read_agg(spark, "by_cat").collect())) == want
