@@ -2214,8 +2214,8 @@ class ChDdlCatalog:
         files, one atomic manifest creation on base ``m``; crash-safe
         like every other commit). An INSERT committed after ``m``
         makes the commit raise ``CommitConflict`` instead of folding
-        its rows away."""
-        if t.projections:
+        its rows away. Refused when ``m`` declares projections."""
+        if m.get("projections"):
             raise ChSqlError(
                 "OPTIMIZE FINAL with projections declared: drop the "
                 "projections first, fold, re-add (the CH DROP/"
@@ -2378,7 +2378,7 @@ class ChDdlCatalog:
         # by the hash write itself (empty partitions write no file),
         # exactly the append_parts funnel. One scan+shuffle per insert
         # deleted; the produced file set is identical.
-        return t._append(t._write_part(batch, None), note=f"append batch_id={batch_id}")
+        return t._append_part(batch, note=f"append batch_id={batch_id}")
 
     def _read_stored(self, spark: SparkSession, name: str) -> DataFrame:
         """Read a stored table onto its CURRENT declared schema. For a

@@ -628,12 +628,10 @@ def test_projection_incomplete_falls_back_to_base(spark, tmp_path):
     sink = t.append_parts(sort_key=("uid", "seq"), arrival=("uid",))
     t.add_projection(spark, "by_seq", "seq", n_files=2)
     sink(df.filter(F.col("uid") < 20), 0)
-    # simulate a foreign writer: append a part with NO projection files
-    t.projections, saved = {}, t.projections
-    try:
-        sink(df.filter(F.col("uid") >= 20), 1)
-    finally:
-        t.projections = saved
+    # simulate a foreign writer: commit a part with NO projection files
+    m = t.current_manifest()
+    foreign = t._write_bucket_files(df.filter(F.col("uid") >= 20), None)
+    t._commit(m, m["files"] + [{**f, "part": "foreign"} for f in foreign], "foreign append")
     m = t.current_manifest()
     assert t._projection_files(m, "by_seq") is None
     layout, _ = t.choose_layout(where=[("seq", 0, 5)])
@@ -656,7 +654,7 @@ def test_projection_guards_bucket_scoped_mutations(spark, tmp_path):
     t.append_parts(sort_key=("uid", "seq"), arrival=("uid",))(df, 0)
     t.add_projection(spark, "by_seq", "seq")
     with pytest.raises(NotImplementedError):
-        t.merge_upsert()
+        t.merge_upsert()(df, 1)
     with pytest.raises(NotImplementedError):
         t.delete_where(spark, "seq < 5")
 
@@ -682,7 +680,7 @@ def test_drop_projection_reenables_mutations_and_vacuums(spark, tmp_path):
     # mutations work again; results correct
     t.delete_where(spark, "seq >= 40")
     assert t.read(spark).count() == 40
-    # a fresh handle sees the persisted (empty) projection registry
+    # a fresh handle sees the committed (empty) projection definitions
     assert not ManifestTable(str(tmp_path / "t"), key_col="uid").projections
     # vacuum reclaims the dropped projection's files with the old versions
     t.vacuum(keep_versions=1)
@@ -989,6 +987,34 @@ def test_agg_projection_fallback_and_validation(spark, tmp_path):
             F.count(F.lit(1)).alias("n")).collect())
     )
     assert got == direct
+
+
+def test_time_travel_uses_the_projections_of_the_version_read(spark, tmp_path):
+    """Projection definitions are per-version manifest metadata: after
+    DROP PROJECTION, a read of a version that still had the projection
+    picks its layout and serves its aggregate, while the current
+    version no longer knows it."""
+    import pytest
+
+    t = ManifestTable(
+        str(tmp_path / "t"), key_col="uid", n_buckets=2, stats_cols=("seq",)
+    )
+    t.append_parts(sort_key=("uid", "seq"), arrival=("uid",))(_agg_proj_df(spark), 0)
+    t.add_projection(spark, "by_seq", "seq", n_files=4)
+    t.add_agg_projection(spark, "by_cat", ("cat",), {"n": ("count", "*")})
+    v_with = t.current_version()
+    probe = [("seq", 0, 10)]
+    want = sorted(map(tuple, t.read_agg(spark, "by_cat", fallback=False).collect()))
+    t.drop_projection("by_seq")
+    t.drop_projection("by_cat")
+    assert t.current_version() == v_with + 2 and not t.projections
+
+    assert t.choose_layout(where=probe, version=v_with)[0] == "by_seq"
+    got = t.read_agg(spark, "by_cat", version=v_with, fallback=False).collect()
+    assert sorted(map(tuple, got)) == want
+    assert t.choose_layout(where=probe)[0] == "base"
+    with pytest.raises(ValueError, match="not an aggregate projection"):
+        t.read_agg(spark, "by_cat")
 
 
 def test_describe_parts_matches_table_state(spark, tmp_path):

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') of named registered queries to
-plans/r16/<name>_<tag>.txt (the optimization round's before/after
+plans/<round>/<name>_<tag>.txt (an optimization round's before/after
 evidence). The lifecycle/iterative queries execute eager driver-side
 steps at construction; the dump records the RETURNED frame's plan —
-the per-JOB attribution for those lives in OPTIMIZATION_r16.md.
+the per-JOB attribution for those lives in OPTIMIZATION_<round>.md.
 
-Usage: python tools/plan_capture_r16.py <tag> q1 [q2 ...]
+Usage: python tools/plan_capture.py <round> <tag> q1 [q2 ...]
+e.g.   python tools/plan_capture.py r17 before manifest_projection_read
 """
 
 from __future__ import annotations
@@ -19,9 +20,11 @@ sys.path.insert(0, str(_REPO))
 
 
 def main() -> None:
-    tag, names = sys.argv[1], sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = _REPO / "plans" / "r16"
+    out_dir = _REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
 
     from postgre_to_clickhouse_spark.queries import QUERIES
@@ -34,7 +37,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         (out_dir / f"{name}_{tag}.txt").write_text(txt)
-        print(name, "->", f"plans/r16/{name}_{tag}.txt", len(txt), "chars")
+        print(name, "->", f"plans/{rnd}/{name}_{tag}.txt", len(txt), "chars")
     spark.stop()
 
 
