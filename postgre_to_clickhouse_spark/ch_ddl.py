@@ -830,7 +830,12 @@ class ChDdlCatalog:
         self.n_buckets = n_buckets
         self.storage: dict[str, object] = {}
         self._insert_seq: dict[str, int] = {}
-        # wire endpoints serve one thread per connection; batch-id
+        # wire endpoints serve one thread per connection, and each
+        # connection runs on its own Spark session (ch_http's wire
+        # core: spark.newSession() seeded with the server's SQL
+        # confs), so a write's session conf flips (session.micro_shape)
+        # never reach another connection's plans; catalog methods take
+        # the session to run on as their `spark` argument. Batch-id
         # allocation takes a lock because duplicate ids would break
         # versionless-RMT arrival tie-breaking. Concurrent COMMITS are
         # safe: the manifest protocol lets exactly one writer create
@@ -1688,11 +1693,12 @@ class ChDdlCatalog:
                          cols: list[str] | None = None) -> int:
         """CH ``INSERT INTO t [(cols)] FORMAT JSONEachRow`` data rows
         (the HTTP upload path clients actually use against 8123). Rows
-        are grouped by their PRESENT key set and each group inserts as
+        are grouped by their PRESENT key set and each group conforms as
         its own block, so a field ABSENT from a row materializes the
         column DEFAULT (CH's input_format_defaults_for_omitted_fields
         behavior) while an explicit ``null`` stays NULL — a flat
-        missing→NULL read could not tell the two apart. Values travel
+        missing→NULL read could not tell the two apart. The body
+        commits as one version (:meth:`_insert_blocks`). Values travel
         as strings and take the declared types through conform's cast
         (the CH input coercion); array-typed columns refuse loudly
         (use INSERT SELECT)."""
@@ -1732,19 +1738,29 @@ class ChDdlCatalog:
             groups.setdefault(ks, []).append(row)
         if not groups:
             raise ChSqlError("JSONEachRow body carries no rows")
-        version = None
-        for ks, rs in sorted(groups.items()):
-            schema = ", ".join(f"{k} string" for k in ks)
-            data = [
-                tuple(None if r[k] is None else str(r[k]) for k in ks)
-                for r in rs
-            ]
-            seq = self._next_seq(name)
-            version = self.insert(
-                spark, name, spark.createDataFrame(data, schema),
-                batch_id=f"json{seq}",
-            )
-        return version
+        return self._insert_blocks(spark, name, [
+            spark.createDataFrame(
+                [tuple(None if r[k] is None else str(r[k]) for k in ks)
+                 for r in rs],
+                ", ".join(f"{k} string" for k in ks))
+            for ks, rs in sorted(groups.items())
+        ], "json")
+
+    def _insert_blocks(self, spark: SparkSession, name: str,
+                       blocks: list[DataFrame], batch_prefix: str) -> int:
+        """Insert one upload's blocks as ONE commit: each block
+        conforms on its own (its DEFAULT fill; the binding checks are
+        eager, so a block that cannot bind raises before anything
+        commits), the conformed blocks union, and the union inserts
+        once — all or nothing, one version."""
+        spec = self.tables[name]
+        union = None
+        for df in blocks:
+            # MATERIALIZED columns are computed again by insert's conform
+            df = spec.conform(df).drop(*spec.materialized)
+            union = df if union is None else union.unionByName(df)
+        seq = self._next_seq(name)
+        return self.insert(spark, name, union, batch_id=f"{batch_prefix}{seq}")
 
     def insert_csv_rows(self, spark: SparkSession, name: str,
                         lines: list[str],
@@ -1844,7 +1860,9 @@ class ChDdlCatalog:
         MATERIALIZED/ALIAS columns refuse, a ``cols`` list restricts
         the allowed set. Values arrive TYPED (the block carries CH
         type text per column), so they take the declared schema
-        through conform's cast without a text round-trip."""
+        through conform's cast without a text round-trip. Every block
+        is decoded and checked before any inserts, and the body commits
+        as one version (:meth:`_insert_blocks`)."""
         from postgre_to_clickhouse_spark.ch_native import (
             iter_blocks_bytes,
             spark_type_for_ch_type,
@@ -1858,9 +1876,6 @@ class ChDdlCatalog:
         unknown_cols = sorted(allowed - set(declared))
         if unknown_cols:
             raise ChSqlError(f"INSERT column(s) not declared: {unknown_cols}")
-        # decode + validate EVERY block before inserting ANY — a
-        # mid-body failure must not leave a partial insert behind
-        # (the text upload paths pre-check the same way)
         blocks: list[tuple[list[str], list[str], list[list]]] = []
         total = 0
         for bi, (names, types, data) in enumerate(iter_blocks_bytes(payload)):
@@ -1887,27 +1902,16 @@ class ChDdlCatalog:
             blocks.append((names, types, data))
         if not blocks:
             raise ChSqlError("Native body carries no rows")
-        frames = []
-        for names, types, data in blocks:
-            fields = []
-            for n_, t_ in zip(names, types):
-                st, _nullable = spark_type_for_ch_type(t_)
-                # always nullable on the build side — conform's cast
-                # applies the declared nullability contract
-                fields.append(T.StructField(n_, st, True))
-            df = spark.createDataFrame(
-                list(zip(*data)) if data else [], T.StructType(fields))
-            # dry-run conform NOW (its checks are eager plan-time
-            # python) so a later block that cannot bind — e.g. missing
-            # a non-DEFAULT column — aborts BEFORE any block commits
-            # (the all-or-nothing contract; review fix)
-            spec.conform(df)
-            frames.append(df)
-        version = None
-        for df in frames:
-            seq = self._next_seq(name)
-            version = self.insert(spark, name, df, batch_id=f"nat{seq}")
-        return version
+        # always nullable on the build side — conform's cast applies
+        # the declared nullability contract
+        return self._insert_blocks(spark, name, [
+            spark.createDataFrame(
+                list(zip(*data)) if data else [],
+                T.StructType([
+                    T.StructField(n_, spark_type_for_ch_type(t_)[0], True)
+                    for n_, t_ in zip(names, types)]))
+            for names, types, data in blocks
+        ], "nat")
 
     def insert_tsv_rows(self, spark: SparkSession, name: str,
                         lines: list[str],

@@ -38,6 +38,15 @@ wire client can run its ENTIRE provisioning-and-query session
 verbatim (the curl-against-8123 loop). A fixed-``ChContext`` endpoint
 stays read-only and refuses DDL loudly.
 
+The wire core lives here and serves all three protocols — HTTP,
+MySQL (``ch_mysql.py``) and native (``ch_native.py``): one source
+check (:func:`_catalog_of`), one per-connection :class:`WireHandle`
+that owns the SELECT-or-statement routing and the read-only refusal,
+one bind/accept/thread loop (:func:`serve_wire`; HTTP keeps
+``ThreadingHTTPServer`` and opens its handle in ``setup()``) and one
+endpoint class (:class:`ChWireEndpoint`). Each catalog connection
+runs on its own ``spark.newSession()``; see :func:`_opener`.
+
 Why HTTP and not a Thrift tag: hive-jdbc carries Spark SQL — smuggling
 CH text inside a Spark-SQL string would be a bespoke convention no
 real client speaks, while HTTP + TabSeparated is exactly what
@@ -85,9 +94,15 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from postgre_to_clickhouse_spark.ch_select import ChContext, ChSqlError, ch_select
+from postgre_to_clickhouse_spark.ch_select import (
+    ChContext,
+    ChSqlError,
+    ch_select,
+    collect_bounded,
+)
 
-__all__ = ["ChHttpEndpoint", "serve_ch_http", "register_ch_global_view"]
+__all__ = ["ChWireEndpoint", "WireHandle", "serve_wire", "serve_ch_http",
+           "register_ch_global_view"]
 
 _FORMATS = ("TabSeparated", "TabSeparatedWithNames",
             "TabSeparatedWithNamesAndTypes", "JSONEachRow",
@@ -340,7 +355,6 @@ def _serialize(df: DataFrame, fmt: str, max_rows: int) -> bytes:
         # reusing the wire endpoint's column codecs. Typed NULLs,
         # timestamps and decimals travel natively.
         from postgre_to_clickhouse_spark.ch_native import serialize_native
-        from postgre_to_clickhouse_spark.ch_select import collect_bounded
 
         return serialize_native(df.schema.fields,
                                 collect_bounded(df, max_rows))
@@ -365,8 +379,6 @@ def _serialize(df: DataFrame, fmt: str, max_rows: int) -> bytes:
         buf = io.BytesIO()
         pq.write_table(table, buf)
         return buf.getvalue()
-    from postgre_to_clickhouse_spark.ch_select import collect_bounded
-
     rows = collect_bounded(df, max_rows)
     cols = df.columns
     out: list[str] = []
@@ -457,19 +469,134 @@ def _serialize(df: DataFrame, fmt: str, max_rows: int) -> bytes:
     return (body + "\n" if body else "").encode()
 
 
-class ChHttpEndpoint:
-    def __init__(self, server: ThreadingHTTPServer, host: str, port: int):
-        self._server = server
-        self._thread: threading.Thread | None = None
+class ChWireEndpoint:
+    """A running wire server, whatever its protocol: ``host``, ``port``,
+    ``url`` and :meth:`stop`."""
+
+    def __init__(self, scheme: str, host: str, port: int, stop) -> None:
         self.host = host
         self.port = port
-        self.url = f"http://{host}:{port}/"
+        self.url = f"{scheme}://{host}:{port}/"
+        self._stop = stop
 
     def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
+        self._stop()
+
+
+def _catalog_of(source):
+    """The source check every wire front shares: a fixed
+    :class:`ch_select.ChContext` serves SELECTs only (``None``), a
+    :class:`ch_ddl.ChDdlCatalog` the full terminal (itself)."""
+    if isinstance(source, ChContext):
+        return None
+    if hasattr(source, "query"):  # ChDdlCatalog duck-type
+        return source
+    raise TypeError(
+        f"source must be a ChContext or ChDdlCatalog, got {type(source)}"
+    )
+
+
+class WireHandle:
+    """One wire connection's route into the engine: the session its
+    statements run on, and the SELECT-or-statement routing every
+    protocol shares."""
+
+    def __init__(self, spark: SparkSession, source) -> None:
+        self.catalog = _catalog_of(source)
+        self.spark = spark
+        self.source = source
+
+    def select(self, sql: str) -> DataFrame:
+        """Compile one CH SELECT against the source."""
+        if self.catalog is None:
+            return ch_select(self.spark, sql, self.source)
+        return self.catalog.query(self.spark, sql)
+
+    def run(self, sql: str):
+        """Run one statement: SELECT/WITH compile to a frame; anything
+        else (CREATE / ALTER / INSERT / TRUNCATE / DROP / OPTIMIZE /
+        SHOW ...) executes on a catalog and returns its result — a
+        frame for introspection statements — and refuses on a fixed
+        context, which stays read-only."""
+        sql = sql.strip().rstrip(";")
+        if sql[:6].upper().startswith(("SELECT", "WITH")):
+            return self.select(sql)
+        if self.catalog is None:
+            raise ChSqlError(
+                "this endpoint serves SELECT statements only (fixed "
+                "table context); serve a ChDdlCatalog to accept "
+                "DDL/INSERT over the wire"
+            )
+        return self.catalog.execute(sql, spark=self.spark)
+
+
+def _opener(spark: SparkSession, source):
+    """Check ``source`` and return the function that opens one
+    connection's :class:`WireHandle`.
+
+    A session serves one thread at a time: the conf-scoping helper
+    (:func:`session.micro_shape`) flips session-wide SQL confs around
+    a write, and another thread planning on the same session would see
+    them. So each catalog connection runs on its own
+    ``spark.newSession()`` (own SQL confs and temp views, the shared
+    SparkContext), seeded with the server session's modifiable SQL
+    confs as they stand when the server starts. A connection session
+    is never ``stop()``ped: that would stop the shared SparkContext.
+    A fixed-context connection keeps the context's own session — its
+    frames, and the temp views ``ch_select`` registers for them,
+    belong to that session — and, being read-only, runs no write that
+    flips a conf."""
+    if _catalog_of(source) is None:
+        return lambda: WireHandle(spark, source)
+    confs = {k: v for k, v in spark.conf.getAll.items()
+             if spark.conf.isModifiable(k)}
+
+    def open_handle() -> WireHandle:
+        conn_spark = spark.newSession()
+        for k, v in confs.items():
+            conn_spark.conf.set(k, v)
+        return WireHandle(conn_spark, source)
+
+    return open_handle
+
+
+def serve_wire(spark: SparkSession, source, host: str, port: int,
+               scheme: str, serve_conn) -> ChWireEndpoint:
+    """Serve a socket protocol on ``host:port``: each accepted
+    connection runs ``serve_conn(sock, handle)`` on its own thread with
+    its own :class:`WireHandle`. The socket closes however
+    ``serve_conn`` ends; a client that went away (``OSError``,
+    ``EOFError``) or a stream that can no longer be trusted
+    (``ChSqlError`` outside a statement) ends only its own
+    connection."""
+    open_handle = _opener(spark, source)
+    srv = socket.create_server((host, port))
+    stopped = threading.Event()
+
+    def serve_one(conn: socket.socket) -> None:
+        try:
+            serve_conn(conn, open_handle())
+        except (EOFError, OSError, ChSqlError):
+            pass
+        finally:
+            conn.close()
+
+    def accept_loop() -> None:
+        while not stopped.is_set():
+            try:
+                conn, _addr = srv.accept()
+            except OSError:
+                return
+            threading.Thread(target=serve_one, args=(conn,),
+                             name=f"ch-{scheme}-conn", daemon=True).start()
+
+    def stop() -> None:
+        stopped.set()
+        srv.close()
+
+    threading.Thread(target=accept_loop, name=f"ch-{scheme}",
+                     daemon=True).start()
+    return ChWireEndpoint(scheme, host, srv.getsockname()[1], stop)
 
 
 def serve_ch_http(
@@ -478,30 +605,19 @@ def serve_ch_http(
     host: str = "127.0.0.1",
     port: int = 0,
     max_result_rows: int = 100_000,
-) -> ChHttpEndpoint:
+) -> ChWireEndpoint:
     """Start the CH-dialect HTTP endpoint. ``source`` is either a
     :class:`ch_select.ChContext` (fixed table frames) or a
     :class:`ch_ddl.ChDdlCatalog` with storage (queries run against its
     stored tables via :meth:`ChDdlCatalog.query`). ``port=0`` picks a
-    free port. Stop with :meth:`ChHttpEndpoint.stop`."""
-
-    if isinstance(source, ChContext):
-        def _run(sql: str) -> DataFrame:
-            return ch_select(spark, sql, source)
-
-        _execute = None
-    elif hasattr(source, "query"):  # ChDdlCatalog duck-type
-        def _run(sql: str) -> DataFrame:
-            return source.query(spark, sql)
-
-        def _execute(sql: str):
-            return source.execute(sql, spark=spark)
-    else:
-        raise TypeError(
-            f"source must be a ChContext or ChDdlCatalog, got {type(source)}"
-        )
+    free port. Stop with :meth:`ChWireEndpoint.stop`."""
+    open_handle = _opener(spark, source)
 
     class _Handler(BaseHTTPRequestHandler):
+        def setup(self) -> None:  # once per connection
+            super().setup()
+            self.h = open_handle()
+
         def log_message(self, *a):  # quiet: the endpoint is a library
             pass
 
@@ -568,29 +684,11 @@ def serve_ch_http(
                             "max_result_rows must be a positive integer")
                     cap = min(int(v), max_result_rows)
                 stmt, fmt = _split_format(sql, default)
-                head = stmt.lstrip()[:6].upper()
-                if not (head.startswith("SELECT") or head.startswith("WITH")):
-                    # non-SELECT statements (CREATE / ALTER / INSERT /
-                    # TRUNCATE / DROP / OPTIMIZE) run when the endpoint
-                    # is backed by a ChDdlCatalog — the full CH
-                    # terminal loop over the wire; a fixed-context
-                    # endpoint stays read-only.
-                    if _execute is None:
-                        raise ChSqlError(
-                            "this endpoint serves SELECT statements only "
-                            "(fixed table context); serve a ChDdlCatalog "
-                            "to accept DDL/INSERT over the wire"
-                        )
-                    res = _execute(stmt)
-                    if isinstance(res, DataFrame):
-                        # introspection statements (SHOW / DESCRIBE /
-                        # EXISTS) answer rows like a CH server
-                        body = _serialize(res, fmt, cap)
-                        self._answer(200, body, encoding=enc, level=level)
-                        return
+                res = self.h.run(stmt)
+                if not isinstance(res, DataFrame):  # DDL, INSERT, ...
                     self._answer(200, b"", "text/plain")
                     return
-                body = _serialize(_run(stmt), fmt, cap)
+                body = _serialize(res, fmt, cap)
             except Exception as exc:  # noqa: BLE001 — CH answers errors as text
                 self._answer(
                     500, f"{type(exc).__name__}: {exc}\n".encode(),
@@ -653,7 +751,8 @@ def serve_ch_http(
                     return
             if q and raw.strip():
                 m = _INSERT_DATA.match(q.strip().rstrip(";"))
-                if m is None or _execute is None:
+                cat = self.h.catalog
+                if m is None or cat is None:
                     self._answer(
                         400,
                         b"query in both URL and body is the INSERT-data "
@@ -674,8 +773,8 @@ def serve_ch_http(
                     if up_fmt == "native":
                         # binary body — row bound enforced inside
                         # (blocks carry their own row counts)
-                        source.insert_native_blocks(
-                            spark, name, raw, cols,
+                        cat.insert_native_blocks(
+                            self.h.spark, name, raw, cols,
                             max_rows=max_result_rows,
                         )
                         self._answer(200, b"", "text/plain")
@@ -690,20 +789,21 @@ def serve_ch_http(
                         )
                         return
                     if up_fmt == "jsoneachrow":
-                        source.insert_json_rows(spark, name, lines, cols)
+                        cat.insert_json_rows(
+                            self.h.spark, name, lines, cols)
                     elif up_fmt in ("tabseparated", "tsv",
                                     "tabseparatedwithnames",
                                     "tabseparatedwithnamesandtypes"):
-                        source.insert_tsv_rows(
-                            spark, name, lines, cols,
+                        cat.insert_tsv_rows(
+                            self.h.spark, name, lines, cols,
                             with_names=up_fmt.startswith(
                                 "tabseparatedwithnames"),
                             with_types=(up_fmt
                                         == "tabseparatedwithnamesandtypes"),
                         )
                     else:
-                        source.insert_csv_rows(
-                            spark, name, lines, cols,
+                        cat.insert_csv_rows(
+                            self.h.spark, name, lines, cols,
                             with_names=(up_fmt == "csvwithnames"),
                         )
                 except Exception as exc:  # noqa: BLE001
@@ -718,14 +818,14 @@ def serve_ch_http(
 
     srv = ThreadingHTTPServer((host, port), _Handler)
     srv.daemon_threads = True
-    ep = ChHttpEndpoint(srv, host, srv.server_address[1])
-    t = threading.Thread(target=srv.serve_forever, name="ch-http", daemon=True)
-    t.start()
-    ep._thread = t
-    # readiness probe (mirrors serve_sql_endpoint)
-    probe = socket.create_connection((host, ep.port), 5)
-    probe.close()
-    return ep
+
+    def stop() -> None:
+        srv.shutdown()
+        srv.server_close()
+
+    threading.Thread(target=srv.serve_forever, name="ch-http",
+                     daemon=True).start()
+    return ChWireEndpoint("http", host, srv.server_address[1], stop)
 
 
 def register_ch_global_view(
@@ -737,13 +837,6 @@ def register_ch_global_view(
     HiveServer2 sessions share the catalog and GLOBAL temp views, not
     local ones). Returns the compiled frame."""
     stmt, _fmt = _split_format(ch_sql)
-    if isinstance(source, ChContext):
-        df = ch_select(spark, stmt, source)
-    elif hasattr(source, "query"):
-        df = source.query(spark, stmt)
-    else:
-        raise TypeError(
-            f"source must be a ChContext or ChDdlCatalog, got {type(source)}"
-        )
+    df = WireHandle(spark, source).select(stmt)
     df.createOrReplaceGlobalTempView(name)
     return df

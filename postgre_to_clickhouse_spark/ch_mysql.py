@@ -6,7 +6,8 @@ a MySQL-compatible wire so BI tools speaking mysql can query it).
 This serves the SAME engine the HTTP (8123-analog, `ch_http.py`) and
 Thrift/JDBC endpoints serve: verbatim CH SELECT text compiled by
 `ch_select`, or the full DDL/INSERT terminal when backed by a
-`ChDdlCatalog` — over the documented MySQL client/server protocol
+`ChDdlCatalog`, through the wire core in `ch_http.py` (one session per
+catalog connection) — over the documented MySQL client/server protocol
 (protocol version 10, text resultsets), implemented from the public
 protocol description:
 https://dev.mysql.com/doc/dev/mysql-server/latest/page_protocol_basics.html
@@ -67,9 +68,15 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-from postgre_to_clickhouse_spark.ch_select import ChContext, ChSqlError, ch_select
+from postgre_to_clickhouse_spark.ch_http import (
+    ChWireEndpoint,
+    WireHandle,
+    _cell,
+    serve_wire,
+)
+from postgre_to_clickhouse_spark.ch_select import ChSqlError, collect_bounded
 
-__all__ = ["ChMysqlEndpoint", "serve_ch_mysql"]
+__all__ = ["serve_ch_mysql"]
 
 # -- protocol constants (public MySQL protocol docs) ------------------
 CLIENT_PROTOCOL_41 = 0x00000200
@@ -154,10 +161,13 @@ def _cell_text(v) -> bytes | None:
     if isinstance(v, _dt.date):
         return v.isoformat().encode()
     if isinstance(v, (list, tuple)):
-        from postgre_to_clickhouse_spark.ch_http import _cell
-
         return ("[" + ",".join(_cell(x) for x in v) + "]").encode()
     return str(v).encode()
+
+
+def _text_row(cells) -> bytes:
+    """One text-protocol row: lenenc cells, NULL as 0xFB."""
+    return b"".join(b"\xfb" if c is None else _lenenc_str(c) for c in cells)
 
 
 def _mysql_type(dt) -> int:
@@ -277,10 +287,9 @@ def _decode_bin_value(buf: bytes, at: int, type_code: int,
 class _Conn:
     """One client connection: framing + the two protocol phases."""
 
-    def __init__(self, sock: socket.socket, run, execute, max_rows: int):
+    def __init__(self, sock: socket.socket, h: WireHandle, max_rows: int):
         self.sock = sock
-        self.run = run
-        self.execute = execute
+        self.h = h
         self.max_rows = max_rows
         self.seq = 0
         self.stmts: dict[int, dict] = {}
@@ -378,26 +387,29 @@ class _Conn:
         self._send(self._ok())
         return True
 
-    def _answer_frame(self, df: DataFrame) -> None:
-        from postgre_to_clickhouse_spark.ch_select import collect_bounded
-
+    def _answer(self, res, binary: bool = False) -> None:
+        """A statement's answer: a frame's rows as a text (COM_QUERY)
+        or binary (COM_STMT_EXECUTE) resultset, anything else OK."""
+        if not isinstance(res, DataFrame):
+            self._send(self._ok())
+            return
         try:
-            rows = collect_bounded(df, self.max_rows)
+            rows = collect_bounded(res, self.max_rows)
         except ChSqlError as exc:
             self._send(self._err(str(exc)))
             return
-        fields = df.schema.fields
+        fields = res.schema.fields
+        self._send_col_defs(fields)
+        for r in rows:
+            self._send(self._bin_row(fields, r) if binary
+                       else _text_row(map(_cell_text, r)))
+        self._send(self._eof())
+
+    def _send_col_defs(self, fields, extra_status: int = 0) -> None:
         self._send(_lenenc_int(len(fields)))
         for f in fields:
             self._send(self._col_def(f.name, _mysql_type(f.dataType)))
-        self._send(self._eof())
-        for r in rows:
-            out = b""
-            for v in r:
-                c = _cell_text(v)
-                out += b"\xfb" if c is None else _lenenc_str(c)
-            self._send(out)
-        self._send(self._eof())
+        self._send(self._eof(extra_status))
 
     def _answer_vars(self, sql: str) -> bool:
         """The BI preamble: `SELECT @@a [AS x][, @@b ...]` — answered
@@ -421,10 +433,7 @@ class _Conn:
         for n in names:
             self._send(self._col_def(n, _T_VARSTRING))
         self._send(self._eof())
-        out = b""
-        for v in values:
-            out += b"\xfb" if v is None else _lenenc_str(v)
-        self._send(out)
+        self._send(_text_row(values))
         self._send(self._eof())
         return True
 
@@ -450,25 +459,6 @@ class _Conn:
         if code == _T_DATE:
             return struct.pack("<BHBB", 4, v.year, v.month, v.day)
         return _lenenc_str(_cell_text(v))
-
-    def _answer_frame_binary(self, df: DataFrame) -> None:
-        """Binary-protocol resultset: column defs, then 0x00-headed
-        rows with the null bitmap at offset 2."""
-        from postgre_to_clickhouse_spark.ch_select import collect_bounded
-
-        try:
-            rows = collect_bounded(df, self.max_rows)
-        except ChSqlError as exc:
-            self._send(self._err(str(exc)))
-            return
-        fields = df.schema.fields
-        self._send(_lenenc_int(len(fields)))
-        for f in fields:
-            self._send(self._col_def(f.name, _mysql_type(f.dataType)))
-        self._send(self._eof())
-        for r in rows:
-            self._send(self._bin_row(fields, r))
-        self._send(self._eof())
 
     def _bin_row(self, fields, r) -> bytes:
         """One binary-protocol row: 0x00 header, null bitmap at
@@ -521,7 +511,7 @@ class _Conn:
         if n_params == 0 and head.startswith(("SELECT", "WITH")):
             # exact metadata at prepare time: one Catalyst compile,
             # nothing executes
-            fields = list(self.run(sql.rstrip(";")).schema.fields)
+            fields = list(self.h.run(sql).schema.fields)
         sid = self.next_stmt_id
         self.next_stmt_id += 1
         self.stmts[sid] = {"sql": sql, "n": n_params, "types": None,
@@ -633,12 +623,8 @@ class _Conn:
                     "CURSOR_TYPE_READ_ONLY needs a resultset statement "
                     "(SELECT/WITH)"))
                 return
-            from postgre_to_clickhouse_spark.ch_select import (
-                collect_bounded,
-            )
-
             try:
-                df = self.run(sql.rstrip(";"))
+                df = self.h.run(sql)
                 rows = collect_bounded(df, self.max_rows)
             except Exception as exc:  # noqa: BLE001 — wire errors are ERR
                 self._send(self._err(f"{type(exc).__name__}: {exc}"))
@@ -647,28 +633,12 @@ class _Conn:
             st["cursor"] = {"fields": fields, "rows": rows, "at": 0}
             # cursor-open response: column defs only, EOF carrying
             # SERVER_STATUS_CURSOR_EXISTS — rows travel via FETCH
-            self._send(_lenenc_int(len(fields)))
-            for f in fields:
-                self._send(self._col_def(f.name, _mysql_type(f.dataType)))
-            self._send(self._eof(_STATUS_CURSOR_EXISTS))
+            self._send_col_defs(fields, _STATUS_CURSOR_EXISTS)
             return
         if head.startswith("SET"):
             self._send(self._ok())
             return
-        if head.startswith(("SELECT", "WITH")):
-            self._answer_frame_binary(self.run(sql.rstrip(";")))
-            return
-        if self.execute is None:
-            self._send(self._err(
-                "this endpoint serves SELECT statements only (fixed "
-                "table context); serve a ChDdlCatalog to accept "
-                "DDL/INSERT over the wire"))
-            return
-        res = self.execute(sql.rstrip(";"))
-        if isinstance(res, DataFrame):
-            self._answer_frame_binary(res)
-        else:
-            self._send(self._ok())
+        self._answer(self.h.run(sql), binary=True)
 
     def serve(self) -> None:
         if not self.handshake():
@@ -751,39 +721,10 @@ class _Conn:
                 if head.startswith("SET"):
                     self._send(self._ok())
                     continue
-                if self._answer_vars(sql):
-                    continue
-                if head.startswith(("SELECT", "WITH")):
-                    self._answer_frame(self.run(sql.rstrip(";")))
-                    continue
-                if self.execute is None:
-                    self._send(self._err(
-                        "this endpoint serves SELECT statements only "
-                        "(fixed table context); serve a ChDdlCatalog to "
-                        "accept DDL/INSERT over the wire"))
-                    continue
-                res = self.execute(sql.rstrip(";"))
-                if isinstance(res, DataFrame):
-                    self._answer_frame(res)
-                else:
-                    self._send(self._ok())
+                if not self._answer_vars(sql):
+                    self._answer(self.h.run(sql))
             except Exception as exc:  # noqa: BLE001 — wire errors are ERR packets
                 self._send(self._err(f"{type(exc).__name__}: {exc}"))
-
-
-class ChMysqlEndpoint:
-    def __init__(self, server: socket.socket, host: str, port: int):
-        self._server = server
-        self._stop = threading.Event()
-        self.host = host
-        self.port = port
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._server.close()
-        except OSError:
-            pass
 
 
 def serve_ch_mysql(
@@ -792,57 +733,11 @@ def serve_ch_mysql(
     host: str = "127.0.0.1",
     port: int = 0,
     max_result_rows: int = 100_000,
-) -> ChMysqlEndpoint:
+) -> ChWireEndpoint:
     """Start the MySQL-wire endpoint (the reference's 9004 analog).
     ``source`` is a :class:`ch_select.ChContext` (read-only SELECTs)
     or a :class:`ch_ddl.ChDdlCatalog` (the full terminal). ``port=0``
-    picks a free port; stop with :meth:`ChMysqlEndpoint.stop`."""
-    if isinstance(source, ChContext):
-        def _run(sql: str) -> DataFrame:
-            return ch_select(spark, sql, source)
-
-        _execute = None
-    elif hasattr(source, "query"):
-        def _run(sql: str) -> DataFrame:
-            return source.query(spark, sql)
-
-        def _execute(sql: str):
-            return source.execute(sql, spark=spark)
-    else:
-        raise TypeError(
-            f"source must be a ChContext or ChDdlCatalog, got {type(source)}"
-        )
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind((host, port))
-    srv.listen(16)
-    ep = ChMysqlEndpoint(srv, host, srv.getsockname()[1])
-
-    def _accept_loop() -> None:
-        while not ep._stop.is_set():
-            try:
-                conn, _addr = srv.accept()
-            except OSError:
-                return
-            t = threading.Thread(
-                target=_serve_conn, args=(conn,),
-                name="ch-mysql-conn", daemon=True,
-            )
-            t.start()
-
-    def _serve_conn(conn: socket.socket) -> None:
-        try:
-            _Conn(conn, _run, _execute, max_result_rows).serve()
-        except OSError:
-            pass  # routine client disconnect mid-stream
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
-
-    t = threading.Thread(target=_accept_loop, name="ch-mysql", daemon=True)
-    t.start()
-    probe = socket.create_connection((host, ep.port), 5)
-    probe.close()
-    return ep
+    picks a free port; stop with :meth:`ChWireEndpoint.stop`."""
+    return serve_wire(
+        spark, source, host, port, "mysql",
+        lambda sock, h: _Conn(sock, h, max_result_rows).serve())

@@ -13,7 +13,9 @@ primitives), .../client + .../server (packet inventories, field
 orders, revision gates) and .../columns (column-data encodings) — the
 same published-docs-only posture as the MySQL endpoint. It serves the
 SAME engine as every other endpoint: verbatim CH SELECT text compiled
-by `ch_select`, or the full DDL/INSERT terminal over a `ChDdlCatalog`.
+by `ch_select`, or the full DDL/INSERT terminal over a `ChDdlCatalog`,
+through the wire core in `ch_http.py` (one session per catalog
+connection).
 
 Scope (the uncompressed native protocol):
 
@@ -77,15 +79,18 @@ import decimal as _decimal
 import re
 import socket
 import struct
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from postgre_to_clickhouse_spark.ch_select import ChContext, ChSqlError, ch_select
+from postgre_to_clickhouse_spark.ch_http import (
+    ChWireEndpoint,
+    WireHandle,
+    serve_wire,
+)
+from postgre_to_clickhouse_spark.ch_select import ChSqlError, collect_bounded
 
-__all__ = ["ChNativeClient", "ChNativeEndpoint", "serve_ch_native",
-           "SERVER_REVISION"]
+__all__ = ["ChNativeClient", "serve_ch_native", "SERVER_REVISION"]
 
 # -- revision thresholds (public ProtocolDefines / native-protocol docs)
 REV_TEMPORARY_TABLES = 50264       # Data packets carry a table name
@@ -599,14 +604,10 @@ _INSERT_DANCE = re.compile(
 
 
 class _Conn:
-    def __init__(self, sock: socket.socket, run, execute, catalog,
-                 spark: SparkSession, max_rows: int):
+    def __init__(self, sock: socket.socket, h: WireHandle, max_rows: int):
         self.sock = sock
         self.r = _Reader(sock)
-        self.run = run
-        self.execute = execute
-        self.catalog = catalog
-        self.spark = spark
+        self.h = h
         self.max_rows = max_rows
         self.rev = SERVER_REVISION
         self.compress = False  # per-query, from the Query packet flag
@@ -704,8 +705,6 @@ class _Conn:
         return True
 
     def _answer_frame(self, df: DataFrame) -> None:
-        from postgre_to_clickhouse_spark.ch_select import collect_bounded
-
         rows = collect_bounded(df, self.max_rows)
         fields = df.schema.fields
         cols = [
@@ -723,7 +722,7 @@ class _Conn:
         the sample block is on the wire — an error after that point
         means the client may still be streaming, so the caller closes
         the connection (CH's own behavior) instead of trying to resync."""
-        spec = self.catalog.tables.get(name)
+        spec = self.h.catalog.tables.get(name)
         if spec is None:
             raise ChSqlError(f"unknown table {name!r}")
         insertable = [
@@ -778,9 +777,10 @@ class _Conn:
         schema = T.StructType(
             [T.StructField(f.name, f.dataType, True) for f in insertable]
         )
-        df = self.spark.createDataFrame(rows, schema)
-        seq = self.catalog._next_seq(name)
-        self.catalog.insert(self.spark, name, df, batch_id=f"native{seq}")
+        cat, spark = self.h.catalog, self.h.spark
+        seq = cat._next_seq(name)
+        cat.insert(spark, name, spark.createDataFrame(rows, schema),
+                   batch_id=f"native{seq}")
         self._send(write_varint(S_END_OF_STREAM))
 
     def _read_external_tables(self) -> None:
@@ -844,18 +844,8 @@ class _Conn:
             self._send(self._exception(exc))
             return False
         try:
-            head = sql[:6].upper()
-            if head.startswith(("SELECT", "WITH")):
-                self._answer_frame(self.run(sql))
-                return True
-            if self.execute is None:
-                raise ChSqlError(
-                    "this endpoint serves SELECT statements only (fixed "
-                    "table context); serve a ChDdlCatalog to accept "
-                    "DDL/INSERT over the wire"
-                )
             m = _INSERT_DANCE.fullmatch(sql)
-            if m:
+            if m and self.h.catalog is not None:
                 cols = None
                 if m.group(3):
                     cols = [c.strip() for c in
@@ -869,7 +859,7 @@ class _Conn:
                     self._send(self._exception(exc))
                     return not mid_dance[0]
                 return True
-            res = self.execute(sql)
+            res = self.h.run(sql)
             if isinstance(res, DataFrame):
                 self._answer_frame(res)
             else:
@@ -908,87 +898,21 @@ class _Conn:
                 return
 
 
-class ChNativeEndpoint:
-    def __init__(self, server: socket.socket, host: str, port: int):
-        self._server = server
-        self._stop = threading.Event()
-        self.host = host
-        self.port = port
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._server.close()
-        except OSError:
-            pass
-
-
 def serve_ch_native(
     spark: SparkSession,
     source,
     host: str = "127.0.0.1",
     port: int = 0,
     max_result_rows: int = 100_000,
-) -> ChNativeEndpoint:
+) -> ChWireEndpoint:
     """Start the native-wire endpoint (the reference's 9000 analog).
     ``source`` is a :class:`ch_select.ChContext` (read-only SELECTs)
     or a :class:`ch_ddl.ChDdlCatalog` (the full terminal incl. the
     INSERT block dance). ``port=0`` picks a free port; stop with
-    :meth:`ChNativeEndpoint.stop`."""
-    catalog = None
-    if isinstance(source, ChContext):
-        def _run(sql: str) -> DataFrame:
-            return ch_select(spark, sql, source)
-
-        _execute = None
-    elif hasattr(source, "query"):
-        catalog = source
-
-        def _run(sql: str) -> DataFrame:
-            return source.query(spark, sql)
-
-        def _execute(sql: str):
-            return source.execute(sql, spark=spark)
-    else:
-        raise TypeError(
-            f"source must be a ChContext or ChDdlCatalog, got {type(source)}"
-        )
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind((host, port))
-    srv.listen(16)
-    ep = ChNativeEndpoint(srv, host, srv.getsockname()[1])
-
-    def _serve_conn(conn: socket.socket) -> None:
-        try:
-            _Conn(conn, _run, _execute, catalog, spark,
-                  max_result_rows).serve()
-        except (EOFError, OSError, ChSqlError):
-            # a client disconnect mid-stream, or a framing error outside
-            # a query (header trust is gone): just close the connection
-            pass
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
-
-    def _accept_loop() -> None:
-        while not ep._stop.is_set():
-            try:
-                conn, _addr = srv.accept()
-            except OSError:
-                return
-            threading.Thread(
-                target=_serve_conn, args=(conn,),
-                name="ch-native-conn", daemon=True,
-            ).start()
-
-    threading.Thread(target=_accept_loop, name="ch-native",
-                     daemon=True).start()
-    probe = socket.create_connection((host, ep.port), 5)
-    probe.close()
-    return ep
+    :meth:`ChWireEndpoint.stop`."""
+    return serve_wire(
+        spark, source, host, port, "clickhouse",
+        lambda sock, h: _Conn(sock, h, max_result_rows).serve())
 
 
 class ChNativeClient:

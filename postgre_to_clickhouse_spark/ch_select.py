@@ -1925,13 +1925,33 @@ def ch_select(spark: SparkSession, sql: str, ctx: ChContext) -> DataFrame:
     call. Registering reads every entry, so a lazily loaded context
     (:meth:`ChContext.from_sf_dir`) loads all its tables for such a
     statement — cheap, since :func:`catalog.load` only looks the schema
-    up. Statements without predicate subqueries register nothing and
-    load only the tables they name.
+    up. Statements without predicate subqueries register nothing under
+    a table's name and load only the tables they name.
+
+    The uuid-named views compiling registers for its FROM sources are
+    dropped again once the statement's frame is analysed: the frame
+    keeps their plans, so a long-running server's session does not
+    grow a view per statement.
     """
-    return _compile(spark, _tokenize(sql.strip().rstrip(";")), ctx)
+    views: list[tuple[SparkSession, str]] = []
+    try:
+        return _compile(spark, _tokenize(sql.strip().rstrip(";")), ctx, views)
+    finally:
+        for session, name in views:
+            session.catalog.dropTempView(name)
 
 
-def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFrame:
+def _temp_view(df: DataFrame, views: list, prefix: str = "__ch_src") -> str:
+    """Register ``df`` as a temp view under a fresh name in its own
+    session, and note it in ``views`` for :func:`ch_select` to drop."""
+    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+    df.createOrReplaceTempView(name)
+    views.append((df.sparkSession, name))
+    return name
+
+
+def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext,
+             views: list) -> DataFrame:
     if tokens and _kw(tokens[0]) == "WITH":
         ctes, scalars, tokens = _parse_with(tokens)
         for name, sel_toks in ctes:
@@ -1940,7 +1960,8 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
             # layered over (not copied from) the context's tables, so a
             # lazily loaded context stays lazy
             ctx = ChContext(
-                ChainMap({name: _compile(spark, sel_toks, ctx)}, ctx.tables),
+                ChainMap({name: _compile(spark, sel_toks, ctx, views)},
+                         ctx.tables),
                 ctx.final_specs, ctx.sample_keys, ctx.sample_seed,
             )
         for name, expr_toks in scalars:
@@ -1970,7 +1991,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
     if len(arms) > 1:
         out = None
         for tag, arm in arms:
-            df = _compile(spark, arm, ctx)
+            df = _compile(spark, arm, ctx, views)
             if out is None:
                 out = df
                 continue
@@ -2007,7 +2028,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
 
     def _resolve(ref: _TableRef) -> DataFrame:
         if ref.subquery is not None:
-            return _compile(spark, ref.subquery, ctx)
+            return _compile(spark, ref.subquery, ctx, views)
         if ref.table_fn is not None:
             _fn, args = ref.table_fn
             off, n = (0, args[0]) if len(args) == 1 else (args[0], args[1])
@@ -2041,9 +2062,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
         return df
 
     def _register(ref: _TableRef) -> str:
-        view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-        _resolve(ref).createOrReplaceTempView(view)
-        return f"{view} AS {ref.alias or ref.name}"
+        return f"{_temp_view(_resolve(ref), views)} AS {ref.alias or ref.name}"
 
     if p.array_join is not None:
         # PREWHERE runs at storage level in CH — BEFORE the ARRAY JOIN
@@ -2065,8 +2084,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
                         "semantics explicitly"
                     )
         exploded = _compile_array_join(_resolve(p.from_ref), *p.array_join)
-        view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-        exploded.createOrReplaceTempView(view)
+        view = _temp_view(exploded, views)
         from_text = f"{view} AS {p.from_ref.alias or p.from_ref.name}"
     elif any(jn.jtype.startswith("ASOF") for jn in p.joins):
         if len(p.joins) != 1:
@@ -2077,9 +2095,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
         joined, rename = _compile_asof(
             _resolve(p.from_ref), _resolve(jn.ref), la, ra, jn
         )
-        view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-        joined.createOrReplaceTempView(view)
-        from_text = view
+        from_text = _temp_view(joined, views)
         # the joined frame is flat — remap alias-qualified refs in every
         # compiled expression to the flat (possibly suffixed) names.
         # The remap must not reach inside string/backtick literals
@@ -2131,9 +2147,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
                 _resolve(p.from_ref), _resolve(jn.ref), lorder, rorder)
         except ValueError as e:
             raise ChSqlError(str(e)) from None
-        view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-        joined.createOrReplaceTempView(view)
-        from_text = view
+        from_text = _temp_view(joined, views)
     else:
         left_any = [jn for jn in p.joins
                     if jn.any_dedup and jn.any_side in ("left", "both")]
@@ -2164,8 +2178,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
             ldf = _resolve(p.from_ref)
             la = p.from_ref.alias or p.from_ref.name
             keys = _any_side_keys(jn, ldf, la)
-            view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-            _any_dedup_frame(ldf, keys).createOrReplaceTempView(view)
+            view = _temp_view(_any_dedup_frame(ldf, keys), views)
             from_text = f"{view} AS {la}"
         else:
             from_text = _register(p.from_ref)
@@ -2173,8 +2186,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
             if jn.any_dedup and jn.any_side in ("right", "both"):
                 rdf = _resolve(jn.ref)
                 keys = _any_right_keys(jn, rdf)
-                view = f"__ch_src_{uuid.uuid4().hex[:12]}"
-                _any_dedup_frame(rdf, keys).createOrReplaceTempView(view)
+                view = _temp_view(_any_dedup_frame(rdf, keys), views)
                 seg = f"{view} AS {jn.ref.alias or jn.ref.name}"
             else:
                 seg = _register(jn.ref)
@@ -2224,8 +2236,7 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext) -> DataFram
             )
         n, bycols = p.limit_by
         inner_df = spark.sql(sel)
-        inner = f"__ch_lb_{uuid.uuid4().hex[:12]}"
-        inner_df.createOrReplaceTempView(inner)
+        inner = _temp_view(inner_df, views, "__ch_lb")
         keep = ", ".join(f"`{c}`" for c in inner_df.columns)
         part = ", ".join(bycols)
         order = ", ".join(p.order_by)

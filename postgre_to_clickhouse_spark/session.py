@@ -58,67 +58,44 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def no_aqe(spark: SparkSession):
-    """Run one micro-batch lifecycle ACTION without adaptive execution
-    (r16 optimization). AQE materializes every exchange of a query as
-    its own stage-submission JOB, so a small fixed-shape action (a
-    bucket write, a part-sized index read-back, an MV partial-state
-    append) pays one scheduling+planning round per exchange where a
-    non-adaptive plan pays one total — and re-planning has nothing to
-    decide for these: widths are explicit or micro-batch-bounded and
-    there is no join strategy to revisit. Restores the session's
-    setting on exit; everything analytical keeps AQE.
+def micro_shape(spark: SparkSession, width: int | str | None = "derived"):
+    """Run one micro-batch-bounded ACTION non-adaptively (r16
+    optimization) — the one conf-scoping helper. AQE materializes every
+    exchange of a query as its own stage-submission JOB (~50-100 ms of
+    driver gap apiece), so a small fixed-shape action (a bucket write,
+    a part-sized index read-back, an MV partial-state append) pays one
+    scheduling+planning round per exchange where a non-adaptive plan
+    pays one total — and re-planning has nothing to decide for these:
+    widths are explicit or micro-batch-bounded and there is no join
+    strategy to revisit. Everything analytical keeps AQE.
 
-    CONCURRENCY CONTRACT (r17, VERDICT r16 #6 / ADVICE): this (and
-    :func:`micro_shape`) flips SESSION-scoped SQL confs for the
-    duration — any action planned concurrently on the SAME session
-    from another thread would see the flipped values (notably the
-    agg-projection writer, whose output FILE COUNT depends on AQE
-    coalescing). Every current call site runs serially on the caller's
-    thread (synchronous lifecycle methods; foreachBatch bodies, which
-    Structured Streaming serializes per query and runs on a CLONED
-    session anyway). If concurrent multi-query use of one session ever
-    arrives, route these actions through ``spark.newSession()`` (own
-    SQLConf, shared context) instead of adding a lock — a lock would
-    still leak the flipped confs to the other thread's plans."""
-    try:
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-    except Exception:  # pragma: no cover - conf always readable in practice
-        old = "true"
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-@contextmanager
-def micro_shape(spark: SparkSession, width: int | None = None):
-    """Run one micro-batch-bounded ACTION non-adaptively at a narrow,
-    cluster-derived shuffle width (r16 optimization). The MV sinks'
-    partial-state appends shuffle state rows bounded by the GROUPS a
-    batch touches — kilobytes — yet each exchange under AQE costs a
-    stage-submission job (~50-100 ms of driver gap apiece), and under
-    plain no_aqe costs ``shuffle.partitions`` near-empty tasks (the
+    ``width`` is the shuffle width for the duration. The default pins
+    ``max(2, defaultParallelism // 8)``: the MV sinks' partial-state
+    appends shuffle kilobytes of state rows, and AQE off at the full
+    ``shuffle.partitions`` runs that many near-empty tasks (the
     measured 3.2 -> 5.9 s regression recorded in agg_mv.apply_batch).
-    Pinning BOTH — AQE off and width max(2, defaultParallelism/8) —
-    takes one planning round AND a task count matched to the state's
-    size. Width scales with the cluster, not a local constant; at any
-    scale the shuffled bytes stay batch-group-bounded by construction.
+    Width scales with the cluster, not a local constant. ``width=None``
+    keeps the session's width (only AQE goes off), for actions whose
+    width is explicit anyway. The confs are restored on exit.
 
-    Same single-threaded-session contract as :func:`no_aqe` (see its
-    docstring): the flipped confs are session-visible for the duration."""
-    if width is None:
+    A session serves one thread at a time: the flipped confs are
+    session-wide for the duration, so a plan made on the same session
+    by another thread would see them. The wire core
+    (``ch_http.serve_wire`` / ``serve_ch_http``) gives each catalog
+    connection its own session."""
+    if width == "derived":
         width = max(2, spark.sparkContext.defaultParallelism // 8)
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    confs = {"spark.sql.adaptive.enabled": "false"}
+    if width is not None:
+        confs["spark.sql.shuffle.partitions"] = str(width)
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def configure(spark: SparkSession) -> SparkSession:

@@ -100,7 +100,7 @@ class AggregateMV:
             return False
         staging = os.path.join(self.path, f"_staging.{uuid.uuid4().hex[:12]}")
         try:
-            # r16: plain session.no_aqe regressed here (AQE's 1-2
+            # r16: AQE off at the session's width regressed here (AQE's 1-2
             # coalesced reduce tasks beat 32 fixed ones: topk_mv 3.2 ->
             # 5.9 s at sf0.1), but micro_shape — AQE off AND the width
             # pinned to a cluster-derived handful — beats both for the

@@ -55,7 +55,6 @@ from pyspark.sql import types as _T
 
 from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest
 from postgre_to_clickhouse_spark.session import micro_shape as _micro_shape
-from postgre_to_clickhouse_spark.session import no_aqe as _no_aqe
 
 _MANIFESTS = "_manifests"
 _VERSION = re.compile(r"v(\d+)\.json")
@@ -511,7 +510,7 @@ class ManifestTable:
         merged = branches[0]
         for b in branches[1:]:
             merged = merged.unionByName(b, allowMissingColumns=True)
-        # r17: micro_shape (was no_aqe) — the per-file aggregates are
+        # r17: micro_shape at the derived width — the per-file aggregates are
         # batch-file-bounded, so the fixed-shape collect runs its agg
         # exchange at the cluster-derived narrow width instead of the
         # session's full static shuffle.partitions (probe: 40 -> ~12
@@ -799,7 +798,7 @@ class ManifestTable:
                     spec["n_files"], F.col(spec["sort_col"])
                 ).sortWithinPartitions(spec["sort_col"])
                 fp, out = fp_sort, sort_out
-                with _no_aqe(df.sparkSession):
+                with _micro_shape(df.sparkSession, width=None):
                     writer.write.mode("overwrite").parquet(staging)
             try:
                 for i, part in enumerate(
@@ -1022,13 +1021,13 @@ class ManifestTable:
 
         width = len(buckets) if buckets else self.n_buckets
         staging = os.path.join(self.path, f"_staging.{uuid.uuid4().hex[:12]}")
-        # r17: micro_shape instead of plain no_aqe — the batch's dedup
+        # r17: micro_shape at the derived width, not the session's — the batch's dedup
         # window (and any other upstream exchange) otherwise shuffles at
         # the session's full shuffle.partitions for micro-batch-bounded
         # bytes; the file-deciding repartition width stays the explicit
         # bucket count either way, so the produced file set is
         # IDENTICAL. Alternating A/B at sf0.1 (3 rounds, warm minima,
-        # no_aqe vs micro_shape): bloom 2.92->2.41, update 3.24->3.05,
+        # session width vs derived width): bloom 2.92->2.41, update 3.24->3.05,
         # ttl_rollup 3.22->2.87, zonemap 2.38->2.04, projection
         # 4.75->4.18, agg_projection 3.73->3.66 — every member favors
         # micro_shape; width is cluster-derived (defaultParallelism/8),
@@ -1348,7 +1347,7 @@ class ManifestTable:
             return self.current_version()
         # r17: fixed-shape metadata action (scan + one distinct
         # exchange) — one planning round instead of one per AQE stage
-        with _no_aqe(spark):
+        with _micro_shape(spark, width=None):
             hit_paths = (
                 self._read_entries(spark, candidates, m)
                 .filter(predicate)
@@ -1431,7 +1430,7 @@ class ManifestTable:
             return self.current_version()
         # r17: fixed-shape metadata action (scan + one distinct
         # exchange) — one planning round instead of one per AQE stage
-        with _no_aqe(spark):
+        with _micro_shape(spark, width=None):
             hit_paths = (
                 self._read_entries(spark, candidates, m)
                 .filter(predicate)
@@ -1542,7 +1541,7 @@ class ManifestTable:
         candidates = self.files_for(rng, version=m["version"]) if rng else m["files"]
         if not candidates:
             return self.current_version()
-        with _no_aqe(spark):  # r17: same fixed-shape hit-find as update
+        with _micro_shape(spark, width=None):  # r17: same fixed-shape hit-find as update
             hits = (
                 self._read_entries(spark, candidates, m)
                 .filter(predicate)

@@ -1538,6 +1538,59 @@ def test_native_blocks_all_or_nothing_on_unbindable_block(spark, tmp_path):
     assert cat.query(spark, "SELECT a FROM t").count() == 0
 
 
+def test_upload_body_commits_one_version_or_nothing(spark, tmp_path):
+    """An upload body commits as ONE version: a JSONEachRow body whose
+    rows group by key set, or a multi-block Native body, advances the
+    version by exactly 1, and a body with a group that cannot bind
+    (missing a column without a DEFAULT) commits nothing."""
+    from postgre_to_clickhouse_spark.ch_native import serialize_native
+
+    cat = ChDdlCatalog(storage_root=str(tmp_path))
+    cat.execute("CREATE TABLE t (a Int64, b Int64, c Int64 DEFAULT 7) "
+                "ENGINE = MergeTree ORDER BY a")
+    with pytest.raises(ChSqlError):
+        cat.insert_json_rows(spark, "t", ['{"a": 1, "b": 2}', '{"a": 3, "c": 4}'])
+    assert cat.query(spark, "SELECT a FROM t").count() == 0
+
+    cat.execute("INSERT INTO t VALUES (0, 0, 0)", spark=spark)
+    t = cat.storage_for("t")
+    base = t.current_version()
+    v = cat.insert_json_rows(spark, "t", ['{"a": 1, "b": 2}', '{"a": 3, "b": 4, "c": 5}'])
+    assert v == t.current_version() == base + 1
+    ab = [T.StructField("a", T.LongType(), False), T.StructField("b", T.LongType(), False)]
+    abc = ab + [T.StructField("c", T.LongType(), False)]
+    payload = serialize_native(ab, [(5, 6)]) + serialize_native(abc, [(8, 9, 10)])
+    v = cat.insert_native_blocks(spark, "t", payload)
+    assert v == t.current_version() == base + 2
+    rows = cat.query(spark, "SELECT a, b, c FROM t ORDER BY a").collect()
+    assert [tuple(r) for r in rows] == [(0, 0, 0), (1, 2, 7), (3, 4, 5), (5, 6, 7), (8, 9, 10)]
+
+
+def test_statement_temp_views_are_dropped(spark, tmp_path):
+    """The uuid-named views a statement registers for its FROM sources
+    are dropped once its frame is analysed, and the frame still
+    answers: the session's view count stays flat however many
+    statements run."""
+    def ch_views() -> int:
+        return sum(t.name.startswith("__ch_") for t in spark.catalog.listTables())
+
+    cat = ChDdlCatalog(storage_root=str(tmp_path))
+    cat.execute("CREATE TABLE t (k UInt32, g String) ENGINE = MergeTree ORDER BY k")
+    cat.execute("INSERT INTO t VALUES (1, 'a'), (2, 'a'), (3, 'b')", spark=spark)
+    statements = [
+        ("SELECT g, count() AS n FROM t GROUP BY g ORDER BY g", [("a", 2), ("b", 1)]),
+        ("SELECT x.k, y.g FROM t AS x JOIN t AS y ON x.k = y.k WHERE x.k = 2", [(2, "a")]),
+        ("SELECT g, k FROM t ORDER BY g, k LIMIT 1 BY g", [("a", 1), ("b", 3)]),
+        ("SELECT k FROM t WHERE k = 1 UNION ALL SELECT k FROM t WHERE k = 3", [(1,), (3,)]),
+    ]
+    before = ch_views()
+    for _ in range(10):
+        frames = [(cat.query(spark, sql), want) for sql, want in statements]
+        assert ch_views() == before
+    for df, want in frames:
+        assert sorted(tuple(r) for r in df.collect()) == sorted(want)
+
+
 def test_ctas_if_not_exists_is_a_silent_noop(spark, tmp_path):
     """r13 s3 (review 3): CREATE TABLE IF NOT EXISTS ... AS SELECT
     over an existing table is CH's silent no-op (and the SELECT never

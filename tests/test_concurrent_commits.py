@@ -4,13 +4,17 @@ readers never see the version go backwards, INSERTs over every wire
 endpoint lose no row, and a rewrite whose base went stale commits
 nothing. Projection DDL commits its definition and its files in one
 manifest, so it never leaves a declared projection that fails to cover
-the snapshot, however it interleaves with appends."""
+the snapshot, however it interleaves with appends. Each catalog wire
+connection runs on its own Spark session, so the confs a write flips
+reach neither the server's session nor another connection's plans."""
 
 from __future__ import annotations
 
+import re
 import sys
 import threading
 import time
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +23,7 @@ from postgre_to_clickhouse_spark.ch_ddl import ChDdlCatalog
 from postgre_to_clickhouse_spark.ch_http import serve_ch_http
 from postgre_to_clickhouse_spark.ch_mysql import serve_ch_mysql
 from postgre_to_clickhouse_spark.ch_native import serve_ch_native
+from postgre_to_clickhouse_spark.sinks import manifest
 from postgre_to_clickhouse_spark.sinks.manifest import CommitConflict, ManifestTable
 from tests.test_ch_http import _post
 from tests.test_ch_mysql import _Client as _MysqlClient
@@ -131,6 +136,13 @@ _WIRES = {
     "native": (serve_ch_native, _native_sender),
 }
 
+_SHAPE_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _shape(spark) -> tuple[str, ...]:
+    """The session confs ``session.micro_shape`` flips around a write."""
+    return tuple(spark.conf.get(k) for k in _SHAPE_CONFS)
+
 
 @pytest.mark.parametrize("wire", sorted(_WIRES))
 def test_concurrent_wire_inserts_all_land(spark, tmp_path, wire, monkeypatch):
@@ -145,6 +157,7 @@ def test_concurrent_wire_inserts_all_land(spark, tmp_path, wire, monkeypatch):
     monkeypatch.setattr(ManifestTable, "current_manifest", slow_read)
     cat = ChDdlCatalog(storage_root=str(tmp_path))
     cat.execute("CREATE TABLE t (id UInt32, conn UInt32) ENGINE = MergeTree ORDER BY id", spark=spark)
+    shape_before = _shape(spark)
     ep = serve(spark, cat)
     n_conns, per_conn = 6, 4
     start = threading.Barrier(n_conns)
@@ -164,9 +177,79 @@ def test_concurrent_wire_inserts_all_land(spark, tmp_path, wire, monkeypatch):
     finally:
         ep.stop()
     assert not errors, errors
+    # the writes flipped confs on their connections' sessions only
+    assert _shape(spark) == shape_before
     ids = sorted(r.id for r in cat.query(spark, "SELECT id FROM t").collect())
     assert ids == list(range(n_conns * per_conn))
     assert cat.storage_for("t").current_version() == n_conns * per_conn - 1
+
+
+def _plan_over(wire: str, ep, sql: str) -> str:
+    """The rows a one-column statement answers over ``wire``, one line each."""
+    if wire == "http":
+        code, body = _post(ep, sql)
+        assert code == 200, body
+        return body
+    if wire == "mysql":
+        c = _MysqlClient(ep.host, ep.port)
+        c.handshake()
+        reply = c.query(sql)
+    else:
+        c = _NativeClient(ep.host, ep.port)
+        reply = c.query(sql)
+    c.close()
+    assert reply[0] == "rows", reply
+    return "\n".join(str(r[0]) for r in reply[-1])
+
+
+@pytest.mark.parametrize("wire", sorted(_WIRES))
+def test_query_planned_during_a_write_keeps_its_session_shape(spark, tmp_path, wire, monkeypatch):
+    """While one connection's INSERT is held inside ``micro_shape``
+    (AQE off at a narrow width), a query planned on another connection
+    is adaptive at its own session's shuffle width."""
+    cat = ChDdlCatalog(storage_root=str(tmp_path))
+    cat.execute("CREATE TABLE t (id UInt32, conn UInt32) ENGINE = MergeTree ORDER BY id", spark=spark)
+    cat.execute("INSERT INTO t VALUES (0, 0)", spark=spark)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    held, release = threading.Event(), threading.Event()
+    held_shape: list[tuple[str, ...]] = []
+    micro_shape = manifest._micro_shape
+
+    @contextmanager
+    def hold_first_write(session, *args, **kwargs):
+        with micro_shape(session, *args, **kwargs):
+            if not held.is_set():
+                held_shape.append(_shape(session))
+                held.set()
+                release.wait(120)
+            yield
+
+    monkeypatch.setattr(manifest, "_micro_shape", hold_first_write)
+    serve, connect = _WIRES[wire]
+    ep = serve(spark, cat)
+    writer_err: list = []
+
+    def writer():
+        send, close = connect(ep)
+        try:
+            writer_err.append(send("INSERT INTO t VALUES (1, 1)"))
+        finally:
+            close()
+
+    th = threading.Thread(target=writer)
+    th.start()
+    try:
+        assert held.wait(120), "the INSERT never entered micro_shape"
+        plan = _plan_over(wire, ep, "EXPLAIN SELECT conn, count() AS n FROM t GROUP BY conn")
+    finally:
+        release.set()
+        th.join(120)
+        ep.stop()
+    assert not th.is_alive()
+    assert writer_err == [None]
+    assert held_shape and held_shape[0][0] == "false"  # the writer really was inside the flip
+    assert "AdaptiveSparkPlan" in plan, plan
+    assert re.findall(r"hashpartitioning\(conn#\d+L?, (\d+)\)", plan) == [width], plan
 
 
 def test_stale_optimize_final_conflicts_and_keeps_insert(spark, tmp_path, monkeypatch):
