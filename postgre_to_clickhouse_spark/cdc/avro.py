@@ -1,17 +1,12 @@
-"""Confluent-framed Avro glue + schema-registry client (SURVEY.md §4.3).
+"""Confluent framing + schema-registry client (SURVEY.md §4.3).
 
 The reference's ingest format is ``AvroConfluent`` with a registry lookup
 (``/root/reference/README.md:201-202``): every Kafka value is
-``magic(0x0, 1B) + schemaId(4B big-endian) + avro-binary``. Spark's
-``from_avro`` takes a plain schema and does not understand the framing,
-so the framing is handled here with built-in column expressions (JVM-side,
-codegen-friendly — no Python in the hot path) and only the Avro byte
-decode itself delegates to ``from_avro``.
-
-``from_avro`` needs the external spark-avro jar; availability is probed
-lazily and a clear error raised if absent (tests skip). The framing
-functions themselves are jar-free and unit-tested against hand-framed
-golden bytes.
+``magic(0x0, 1B) + schemaId(4B big-endian) + avro-binary``. :func:`frame`
+builds that header (the producer side) and :func:`unframe` checks and
+strips it (the consumer side). The Avro bytes themselves are decoded by
+``cdc.avro_py.decode_confluent_frames``, which dispatches each record on
+its schema id and resolves it to one reader schema.
 """
 
 from __future__ import annotations
@@ -21,23 +16,8 @@ import struct
 import urllib.request
 from functools import lru_cache
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MAGIC_BYTE = b"\x00"
 HEADER_LEN = 5
-
-
-def schema_id_expr(value_col: str = "value") -> Column:
-    """Extract the 4-byte big-endian schema id from a framed Kafka value."""
-    # substring is 1-indexed; bytes 2..5 are the id. conv() parses the hex.
-    return F.conv(F.hex(F.substring(F.col(value_col), 2, 4)), 16, 10).cast("int").alias("schema_id")
-
-
-def avro_payload(value_col: str = "value") -> Column:
-    """Strip the 5-byte Confluent header, leaving raw Avro binary."""
-    c = value_col
-    return F.expr(f"substring({c}, {HEADER_LEN + 1}, length({c}) - {HEADER_LEN})")
 
 
 def frame(avro_binary: bytes, schema_id_: int) -> bytes:
@@ -45,29 +25,16 @@ def frame(avro_binary: bytes, schema_id_: int) -> bytes:
     return MAGIC_BYTE + struct.pack(">I", schema_id_) + avro_binary
 
 
-def encode_confluent_avro(struct_col: Column, schema_json: str, schema_id_: int) -> Column:
-    """Typed struct → Confluent-framed Avro bytes (A5, the producer path):
-    to_avro payload prefixed with magic 0x0 + 4-byte BE schema id, all as
-    JVM column expressions (concat on binary)."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-    except ImportError as e:  # pragma: no cover
-        raise ImportError("pyspark.sql.avro requires the spark-avro jar on the classpath") from e
-    header = bytes(MAGIC_BYTE) + struct.pack(">I", schema_id_)
-    return F.concat(F.lit(bytearray(header)), to_avro(struct_col, schema_json))
-
-
-def decode_confluent_avro(value_col: str, reader_schema_json: str) -> Column:
-    """Framed Kafka value → typed struct column via spark-avro's from_avro.
-
-    Raises ImportError with guidance when the spark-avro jar is missing
-    (pip pyspark ships without it); callers in tests skip in that case.
-    """
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as e:  # pragma: no cover
-        raise ImportError("pyspark.sql.avro requires the spark-avro jar on the classpath") from e
-    return from_avro(avro_payload(value_col), reader_schema_json, {"mode": "PERMISSIVE"})
+def unframe(value: bytes) -> tuple[int, bytes]:
+    """Framed Kafka value → (schema id, Avro payload). Raises
+    ``ValueError`` when the value is shorter than the header or does
+    not start with the magic byte: such a value is not a Confluent
+    frame, and its bytes must not be decoded as one."""
+    if len(value) < HEADER_LEN:
+        raise ValueError(f"{len(value)}-byte value is shorter than the {HEADER_LEN}-byte Confluent header")
+    if value[:1] != MAGIC_BYTE:
+        raise ValueError(f"magic byte is 0x{value[0]:02x}, not 0x00: not a Confluent frame")
+    return struct.unpack(">I", value[1:HEADER_LEN])[0], value[HEADER_LEN:]
 
 
 class SchemaRegistryClient:

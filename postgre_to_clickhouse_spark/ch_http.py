@@ -45,7 +45,9 @@ that owns the SELECT-or-statement routing and the read-only refusal,
 one bind/accept/thread loop (:func:`serve_wire`; HTTP keeps
 ``ThreadingHTTPServer`` and opens its handle in ``setup()``) and one
 endpoint class (:class:`ChWireEndpoint`). Each catalog connection
-runs on its own ``spark.newSession()``; see :func:`_opener`.
+runs on its own ``spark.newSession()``; see :func:`_opener`. HTTP
+answers HTTP/1.1 with keep-alive, so a client that reuses its
+connection reuses that session too.
 
 Why HTTP and not a Thrift tag: hive-jdbc carries Spark SQL — smuggling
 CH text inside a Spark-SQL string would be a bespoke convention no
@@ -153,6 +155,10 @@ def _accept_encodings(header: str) -> dict[str, float]:
 # runs, defeating the endpoint's stated OOM posture. 64 MiB is far
 # above any max_result_rows-legal text body.
 _MAX_REQUEST_BODY = 64 * 1024 * 1024
+
+# An HTTP keep-alive connection idle this long is closed: each open
+# connection holds a server thread and its Spark session.
+_KEEPALIVE_IDLE_S = 10
 
 
 def _http_compress(body: bytes, encoding: str, level: int) -> bytes:
@@ -614,8 +620,18 @@ def serve_ch_http(
     open_handle = _opener(spark, source)
 
     class _Handler(BaseHTTPRequestHandler):
+        # keep-alive: every answer goes through _answer, which sends
+        # Content-Length, so a client can reuse the connection (and
+        # its WireHandle) for its next request
+        protocol_version = "HTTP/1.1"
+        timeout = _KEEPALIVE_IDLE_S
+
         def setup(self) -> None:  # once per connection
             super().setup()
+            # headers and body go out as two writes; on a kept-alive
+            # connection Nagle holds the body until the client's
+            # delayed ACK (~40 ms per answer) unless NODELAY is set
+            self.connection.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             self.h = open_handle()
 
         def log_message(self, *a):  # quiet: the endpoint is a library

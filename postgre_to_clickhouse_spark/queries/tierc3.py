@@ -514,7 +514,7 @@ def cdc_avro_decode_pipeline(spark, sf_dir):
     MIGRATION (versions v0/v1 under writer schema id 1, v2/v3 under id
     2 which adds ``plan_rank`` — the registry BACKWARD-compat surface),
     then decoded per record under its writer schema and resolved to the
-    v2 reader (`decode_confluent_avro_arrow_evolving`: added column
+    v2 reader (`decode_confluent_frames`: added column
     reads as its default for old records), and reduced latest-wins per
     user. Every byte of the Avro binary encoding, zig-zag varints,
     union branch indices, framing, per-record schema dispatch and
@@ -544,7 +544,7 @@ def cdc_avro_decode_pipeline(spark, sf_dir):
                 rec["plan_rank"] = u % 5
                 frames.append((bytearray(A.frame(AP.encode_record(rec, _USERS_V2_AVRO), 2)),))
     df = spark.createDataFrame(frames, "value binary").repartition(8)
-    decoded = AP.decode_confluent_avro_arrow_evolving(
+    decoded = AP.decode_confluent_frames(
         df, {1: USERS_AVRO_SCHEMA, 2: _USERS_V2_AVRO}, _USERS_V2_AVRO
     )
     return latest(decoded, entity_key=("user_id",), version_cols=("updated_at", "created_at"))

@@ -77,9 +77,9 @@ class ClickHouseSink:
 
     def foreach_batch(self, num_partitions: int | None = None):
         """foreachBatch body: stream micro-batches into ClickHouse —
-        the drop-in alternative to the parquet upsert sink in
-        ``streaming.pipeline`` when the target is the reference's own
-        store."""
+        the ``sink`` to pass ``streaming.pipeline`` in place of
+        ``ManifestTable.merge_upsert()`` when the target is the
+        reference's own store."""
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
             self.write(batch_df, num_partitions=num_partitions)

@@ -1,5 +1,7 @@
-"""Manifest-committed MERGE table — the transactional swap point the
-parquet upsert sinks stand in for (SURVEY.md A8; VERDICT r1 #8).
+"""Manifest-committed MERGE table — the package's one commit protocol
+for stored tables (SURVEY.md A8): both streaming CDC pipelines
+(``streaming.pipeline``) sink through :meth:`ManifestTable.merge_upsert`,
+and the CH-DDL store keeps its MergeTree tables here.
 
 The reference's ClickHouse target is a ReplacingMergeTree
 (`/root/reference/README.md:176-177`): writers append, the engine

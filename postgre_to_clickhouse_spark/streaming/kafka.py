@@ -3,18 +3,18 @@
 The reference consumes topic ``shop.public.users`` as consumer group
 ``clickhouse`` in AvroConfluent format (``/root/reference/README.md:
 197-202``). The Spark equivalent needs the external
-``spark-sql-kafka-0-10`` jar (absent in this container — no broker here
-either), so construction raises a clear error when unavailable; the
-decode chain itself (Confluent framing → from_avro) is the tested glue
-in ``cdc.avro``.
+``spark-sql-kafka-0-10`` jar, which pip-installed pyspark does not ship,
+and a broker, so construction raises a clear error when unavailable. The
+source's ``value``/``offset``/``timestamp``/``partition`` columns are
+what ``cdc.avro_py.decode_confluent_frames`` reads: it decodes each
+value under the writer schema its Confluent id names and carries the
+transport metadata through as ``kafka_offset``/``kafka_timestamp``/
+``kafka_partition`` (A5/A7 + A17).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from postgre_to_clickhouse_spark.cdc.avro import avro_payload, schema_id_expr
 
 DEFAULT_TOPIC = "shop.public.users"  # <server>.<schema>.<table> (README.md:133)
 DEFAULT_GROUP = "clickhouse"  # README.md:200
@@ -48,21 +48,6 @@ def read_cdc_topic(
         .option("kafka.group.id", group_id)
         .option("startingOffsets", starting_offsets)
         .load()
-    )
-
-
-def decode_cdc_records(kafka_df: DataFrame, reader_schema_json: str) -> DataFrame:
-    """Kafka records → typed envelope + transport metadata columns
-    (A5/A7 + A17): strip Confluent framing, from_avro the payload, and
-    surface _timestamp/_offset as the MV's virtual columns."""
-    from postgre_to_clickhouse_spark.cdc.avro import decode_confluent_avro
-
-    return kafka_df.select(
-        decode_confluent_avro("value", reader_schema_json).alias("event"),
-        F.col("timestamp").alias("kafka_timestamp"),
-        F.col("offset").alias("kafka_offset"),
-        F.col("partition").alias("kafka_partition"),
-        schema_id_expr("value"),
     )
 
 

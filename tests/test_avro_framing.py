@@ -1,23 +1,20 @@
-"""Golden-byte tests for the Confluent Avro framing glue (SURVEY.md §4.3).
+"""Golden-byte tests for the Confluent Avro framing and the one
+Confluent decoder (SURVEY.md §4.3).
 
 The reference ingests ``AvroConfluent``-framed Kafka values
 (/root/reference/README.md:201-202): magic 0x0 + 4-byte BE schema id +
-Avro binary. Framing is pure column arithmetic (jar-free); the Avro byte
-decode itself needs the external spark-avro jar and is skipped when absent.
+Avro binary. ``cdc.avro.frame``/``unframe`` build and check the header;
+``cdc.avro_py`` encodes the Avro bytes and decodes them, per record,
+under the writer schema the id names (``decode_confluent_frames``).
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
 
 from postgre_to_clickhouse_spark.cdc import avro as A
-
-
-def _frame_df(spark, payloads):
-    rows = [(bytearray(A.frame(p, sid)),) for p, sid in payloads]
-    return spark.createDataFrame(rows, StructType([StructField("value", BinaryType())]))
 
 
 def test_frame_roundtrip_golden_bytes():
@@ -26,31 +23,13 @@ def test_frame_roundtrip_golden_bytes():
     assert framed[0] == 0 and len(framed) == A.HEADER_LEN + 5
 
 
-def test_schema_id_and_payload_extraction(spark):
-    df = _frame_df(spark, [(b"abc", 1), (b"\xff\x00\xff", 131074), (b"", 7)])
-    out = df.select(A.schema_id_expr("value"), A.avro_payload("value").alias("p")).collect()
-    assert [(r.schema_id, bytes(r.p)) for r in out] == [
-        (1, b"abc"),
-        (131074, b"\xff\x00\xff"),
-        (7, b""),
-    ]
-
-
-def test_framing_is_jvm_side(spark):
-    # The framing must stay in whole-stage codegen (no Python UDF at 100 TB).
-    df = _frame_df(spark, [(b"abc", 1)]).select(A.schema_id_expr("value"))
-    assert "BatchEvalPython" not in df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def test_decode_confluent_avro_gated(spark):
-    try:
-        from pyspark.sql.avro.functions import from_avro  # noqa: F401
-    except ImportError:
-        pytest.skip("spark-avro python shim unavailable")
-    # Python shim imports fine on pip pyspark; the jar-backed call fails
-    # lazily. Just assert our wrapper builds a Column without error.
-    col = A.decode_confluent_avro("value", '{"type":"record","name":"r","fields":[]}')
-    assert col is not None
+def test_schema_id_and_payload_extraction():
+    for payload, sid in [(b"abc", 1), (b"\xff\x00\xff", 131074), (b"", 7)]:
+        assert A.unframe(A.frame(payload, sid)) == (sid, payload)
+    with pytest.raises(ValueError, match="shorter than"):
+        A.unframe(b"\x00\x00\x01")
+    with pytest.raises(ValueError, match="magic byte is 0x01"):
+        A.unframe(b"\x01\x00\x00\x00\x07abc")
 
 
 def test_static_registry():
@@ -116,8 +95,9 @@ def test_avro_py_roundtrip_property():
 
 def test_avro_py_end_to_end_confluent_decode(spark):
     """Full spine on real bytes: typed rows → avro-encode → Confluent
-    frame → Spark binary column → Arrow-batched decode → values equal
-    the source. This is the reference's AvroConfluent consumer behavior
+    frame → Kafka-shaped Spark frame → Arrow-batched decode → values
+    equal the source, with the Kafka offset/timestamp/partition carried
+    through. This is the reference's AvroConfluent consumer behavior
     (README.md:201-202) executed, not just framed."""
     from postgre_to_clickhouse_spark.cdc import avro_py as AP
     from postgre_to_clickhouse_spark.cdc.schemas import USERS_AVRO_SCHEMA
@@ -130,19 +110,55 @@ def test_avro_py_end_to_end_confluent_decode(spark):
         {"user_id": 3, "username": "cindy", "account_type": None,
          "updated_at": 1700000002500000, "created_at": 1690000002000000},
     ]
-    framed = [(bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 42)),) for r in rows]
-    df = spark.createDataFrame(framed, StructType([StructField("value", BinaryType())]))
+    ts = dt.datetime(2024, 3, 1, 10, 0, 0)
+    framed = [
+        (bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 42)), 100 + i,
+         ts + dt.timedelta(seconds=i), 3)
+        for i, r in enumerate(rows)
+    ]
+    df = spark.createDataFrame(
+        framed, "value binary, offset long, timestamp timestamp, partition int")
 
-    # schema id survives the framing
-    ids = [r.schema_id for r in df.select(A.schema_id_expr("value")).collect()]
-    assert ids == [42, 42, 42]
-
-    out = AP.decode_confluent_avro_arrow(df, USERS_AVRO_SCHEMA)
+    out = AP.decode_confluent_frames(df, {42: USERS_AVRO_SCHEMA}, USERS_AVRO_SCHEMA)
+    assert out.columns[-3:] == ["kafka_offset", "kafka_timestamp", "kafka_partition"]
     got = sorted((r.asDict() for r in out.collect()), key=lambda r: r["user_id"])
-    assert got == rows
+    assert got == [
+        {**r, "kafka_offset": 100 + i, "kafka_timestamp": ts + dt.timedelta(seconds=i),
+         "kafka_partition": 3}
+        for i, r in enumerate(rows)
+    ]
     # Arrow path, not row-at-a-time Python
     plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
     assert "BatchEvalPython" not in plan
+    # the schema id selects the writer schema: id 42 is not registered
+    # under id 7, so the decoder refuses the frame instead of guessing
+    with pytest.raises(Exception, match=r"record at offset 10[0-2]: unknown schema id 42"):
+        AP.decode_confluent_frames(df, {7: USERS_AVRO_SCHEMA}, USERS_AVRO_SCHEMA).collect()
+
+
+def test_decoder_rejects_values_that_are_not_confluent_frames(spark):
+    """A value shorter than the 5-byte header, or whose first byte is
+    not the magic 0x00, is refused with the record's offset (its batch
+    index when the frame carries no offset), never decoded as Avro."""
+    from postgre_to_clickhouse_spark.cdc import avro_py as AP
+    from postgre_to_clickhouse_spark.cdc.schemas import USERS_AVRO_SCHEMA
+
+    rec = {"user_id": 1, "username": "a", "account_type": "b", "updated_at": 2, "created_at": 3}
+    good = A.frame(AP.encode_record(rec, USERS_AVRO_SCHEMA), 1)
+    bad_magic = b"\x01" + good[1:]
+    schemas = {1: USERS_AVRO_SCHEMA}
+
+    with_offsets = spark.createDataFrame(
+        [(bytearray(good), 8), (bytearray(bad_magic), 9)], "value binary, offset long"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: record at offset 9: magic byte is 0x01"):
+        AP.decode_confluent_frames(with_offsets, schemas, USERS_AVRO_SCHEMA).collect()
+
+    values_only = spark.createDataFrame(
+        [(bytearray(good),), (bytearray(good[:3]),)], "value binary"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: record at index 1: 3-byte value is shorter"):
+        AP.decode_confluent_frames(values_only, schemas, USERS_AVRO_SCHEMA).collect()
 
 
 # -- schema evolution (round 4) ---------------------------------------------
@@ -186,7 +202,7 @@ def test_evolving_decode_mixed_versions(spark):
     framed += [(bytearray(A.frame(AP.encode_record(r, USERS_V2_AVRO_SCHEMA), 2)),) for r in v2_rows]
     df = spark.createDataFrame(framed, "value binary")
 
-    out = AP.decode_confluent_avro_arrow_evolving(
+    out = AP.decode_confluent_frames(
         df, {1: USERS_AVRO_SCHEMA, 2: USERS_V2_AVRO_SCHEMA}, USERS_V2_AVRO_SCHEMA
     )
     got = {r.user_id: (r.username, r.email) for r in out.collect()}
@@ -195,7 +211,7 @@ def test_evolving_decode_mixed_versions(spark):
     assert dict(out.dtypes)["user_id"] == "bigint"  # int -> long promotion
 
     # FORWARD direction: old reader over new records drops the column
-    back = AP.decode_confluent_avro_arrow_evolving(
+    back = AP.decode_confluent_frames(
         df, {1: USERS_AVRO_SCHEMA, 2: USERS_V2_AVRO_SCHEMA}, USERS_AVRO_SCHEMA
     )
     assert "email" not in back.columns and back.count() == 4

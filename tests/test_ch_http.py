@@ -138,6 +138,43 @@ def test_max_result_rows_guard(spark):
         ep3.stop()
 
 
+def test_http_keep_alive_reuses_one_connection(spark, monkeypatch):
+    """HTTP/1.1 keep-alive: a POST with a body, a failing query (500)
+    and a GET all answer on ONE socket, and the server opens one
+    WireHandle (one connection session) for the three of them."""
+    import http.client
+
+    from postgre_to_clickhouse_spark import ch_http
+
+    opened = []
+
+    class CountingHandle(ch_http.WireHandle):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            opened.append(self)
+
+    monkeypatch.setattr(ch_http, "WireHandle", CountingHandle)
+    ep4 = serve_ch_http(spark, ChContext({"users": _users(spark)}))
+    conn = http.client.HTTPConnection("127.0.0.1", ep4.port, timeout=120)
+    try:
+        conn.request("POST", "/", body=b"SELECT count() FROM users")
+        r = conn.getresponse()
+        assert (r.status, r.read()) == (200, b"3\n")
+        sock = conn.sock
+        assert sock is not None  # the server kept the connection open
+        conn.request("POST", "/", body=b"SELECT nope FROM users")
+        r = conn.getresponse()
+        assert r.status == 500 and b"nope" in r.read()
+        conn.request("GET", "/?query=" + urllib.parse.quote("SELECT max(user_id) FROM users"))
+        r = conn.getresponse()
+        assert (r.status, r.read()) == (200, b"2\n")
+        assert conn.sock is sock
+        assert len(opened) == 1
+    finally:
+        conn.close()
+        ep4.stop()
+
+
 def test_ch_view_served_over_thrift_jdbc(spark):
     """The JDBC bridge: verbatim CH text (FINAL + LIMIT BY) compiled
     into a global temp view, then fetched over a REAL hive-jdbc wire

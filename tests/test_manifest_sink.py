@@ -1,6 +1,7 @@
 """Manifest-committed MERGE sink (sinks/manifest.py): golden
-convergence, streaming restart idempotency, snapshot isolation under
-crashes at every protocol step, bucket-level pruning, and vacuum."""
+convergence, snapshot isolation under crashes at every protocol step,
+bucket-level pruning, and vacuum. The streaming pipelines' restart and
+redelivery runs through this sink are in ``test_streaming.py``."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
 from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
 from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
-from postgre_to_clickhouse_spark.streaming import pipeline as P
 
 
 def _latest_map(df):
@@ -120,25 +120,6 @@ def test_time_travel_reads_retained_versions(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         t.manifest_at(99)
-
-
-def test_streaming_pipeline_through_manifest_sink(spark, tmp_path):
-    """run_pipeline with the manifest MERGE as the foreachBatch body:
-    checkpoint restart must not change the committed content."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    t = ManifestTable(str(tmp_path / "t"))
-    P.write_events_as_json(users_cdc_events(spark), src, n_files=3)
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt, batch_hook=t.merge_upsert())
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
-    n1, v1 = t.read(spark).count(), t.current_version()
-    # restart on the same checkpoint: no new data → no new commits
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt, batch_hook=t.merge_upsert())
-    assert (t.read(spark).count(), t.current_version()) == (n1, v1)
-    # fresh checkpoint: full redelivery → same content, higher version
-    P.run_pipeline(spark, src, str(tmp_path / "unused"), ckpt + "2", batch_hook=t.merge_upsert())
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
-    assert t.read(spark).count() == n1
 
 
 # -- compaction + TTL (r5: ClickHouse background-merge / TTL parity) -------

@@ -1,21 +1,25 @@
 """Streaming parity tests (SURVEY.md §5.2.4): the same operators driven
 through Structured Streaming with availableNow triggers, asserting
 batch ≡ streaming results, checkpoint restart idempotency, and the
-watermarked windowed aggregation mode (B18)."""
+watermarked windowed aggregation mode (B18). Both CDC pipelines commit
+through a ``ManifestTable``."""
 
 from __future__ import annotations
+
+import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
 
-from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
+from postgre_to_clickhouse_spark.cdc import dedup_redelivery, mv_users, unwrap
 from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
+from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
 from postgre_to_clickhouse_spark.streaming import pipeline as P
 
 
 @pytest.fixture()
 def stream_dirs(tmp_path):
-    return str(tmp_path / "src"), str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+    return str(tmp_path / "src"), ManifestTable(str(tmp_path / "tbl")), str(tmp_path / "ckpt")
 
 
 def _latest_map(df):
@@ -26,53 +30,94 @@ def _latest_map(df):
 
 
 def test_streaming_pipeline_matches_batch_golden(spark, stream_dirs):
-    src, tbl, ckpt = stream_dirs
+    src, t, ckpt = stream_dirs
     events = users_cdc_events(spark)
     P.write_events_as_json(events, src, n_files=3)  # 3 micro-batches
-    P.run_pipeline(spark, src, tbl, ckpt)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
     # all-versions view matches the batch pipeline applied directly
-    batch = P.read_all_versions(spark, tbl)
-    assert batch.count() == 6  # GOLDEN_ALL_VERSIONS cardinality
+    assert t.read(spark).count() == 6  # GOLDEN_ALL_VERSIONS cardinality
 
 
 def test_streaming_restart_is_idempotent(spark, stream_dirs):
-    src, tbl, ckpt = stream_dirs
+    src, t, ckpt = stream_dirs
     P.write_events_as_json(users_cdc_events(spark), src, n_files=2)
-    P.run_pipeline(spark, src, tbl, ckpt)
-    n1 = P.read_all_versions(spark, tbl).count()
-    P.run_pipeline(spark, src, tbl, ckpt)  # same checkpoint: no new data
-    n2 = P.read_all_versions(spark, tbl).count()
-    assert n1 == n2 == 6
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    n1, v1 = t.read(spark).count(), t.current_version()
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)  # same checkpoint: no new data
+    # no new data → no new commit, not merely the same content
+    assert (t.read(spark).count(), t.current_version()) == (n1, v1)
+    assert n1 == 6
 
 
 def test_streaming_redelivered_batch_is_idempotent(spark, stream_dirs):
     """Replaying the same source into a FRESH checkpoint (simulating
     at-least-once redelivery of every batch) must converge to the same
-    table — the upsert merge is deterministic."""
-    src, tbl, ckpt = stream_dirs
-    P.write_events_as_json(users_cdc_events(spark), src, n_files=1)
-    P.run_pipeline(spark, src, tbl, ckpt)
-    P.run_pipeline(spark, src, tbl, ckpt + "_2")  # fresh checkpoint → full replay
-    assert P.read_all_versions(spark, tbl).count() == 6
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
+    table — the manifest merge is deterministic."""
+    src, t, ckpt = stream_dirs
+    P.write_events_as_json(users_cdc_events(spark), src, n_files=3)
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt + "_2")  # fresh checkpoint → full replay
+    assert t.read(spark).count() == 6
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
 
 
 def test_streaming_transform_equals_batch_transform(spark, stream_dirs):
-    """A27 unification: identical operator chain under read vs readStream."""
-    src, tbl, ckpt = stream_dirs
+    """A27 unification: identical operator chain under read vs
+    readStream — the streamed table holds exactly the batch transform's
+    rows, one per (user_id, updated_at) after redelivery dedup."""
+    src, t, ckpt = stream_dirs
     events = users_cdc_events(spark)
     P.write_events_as_json(events, src, n_files=2)
 
-    batch_out = mv_users(unwrap(events)).orderBy("kafka_offset").collect()
+    batch_out = dedup_redelivery(mv_users(unwrap(events)))
+    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
+    stream_out = t.read(spark).select(*batch_out.columns)
+    assert sorted(map(tuple, stream_out.collect())) == sorted(map(tuple, batch_out.collect()))
 
-    collected = []
-    P.run_pipeline(
-        spark, src, tbl, ckpt,
-        batch_hook=lambda df, bid: collected.extend(df.collect()),
+
+def test_equal_versions_tie_break_on_kafka_offset_in_both_pipelines(spark, tmp_path):
+    """Two distinct events with equal (user_id, updated_at) resolve by
+    Kafka offset in the JSON and the Avro pipeline alike: the
+    first-delivered (offset 7) row is kept, though the source file
+    lists offset 9 first."""
+    from postgre_to_clickhouse_spark.cdc import avro as A
+    from postgre_to_clickhouse_spark.cdc import avro_py as AP
+    from postgre_to_clickhouse_spark.cdc.schemas import KAFKA_CDC_RECORD, USERS_AVRO_SCHEMA
+
+    updated, created = 1_700_000_000_000_000, 1_690_000_000_000_000
+    ts = dt.datetime(2024, 3, 1, 10, 0, 0)
+
+    def row(name):
+        return {"user_id": 1, "username": name, "account_type": "free",
+                "updated_at": updated, "created_at": created}
+
+    arrivals = [(9, row("at_offset_9")), (7, row("at_offset_7"))]
+
+    json_t = ManifestTable(str(tmp_path / "json_tbl"))
+    events = spark.createDataFrame(
+        [{"event": {"before": None, "after": r, "source": None, "op": "u", "ts_ms": 0},
+          "kafka_timestamp": ts, "kafka_offset": off, "kafka_partition": 0}
+         for off, r in arrivals],
+        KAFKA_CDC_RECORD,
     )
-    stream_out = sorted(collected, key=lambda r: r.kafka_offset)
-    assert [tuple(r) for r in stream_out] == [tuple(r) for r in batch_out]
+    P.write_events_as_json(events, str(tmp_path / "json_src"))
+    P.run_pipeline(spark, str(tmp_path / "json_src"), json_t.merge_upsert(),
+                   str(tmp_path / "json_ckpt"))
+
+    avro_t = ManifestTable(str(tmp_path / "avro_tbl"))
+    frames = [(bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 1)), off, ts)
+              for off, r in arrivals]
+    spark.createDataFrame(frames, "value binary, offset long, timestamp timestamp") \
+        .coalesce(1).write.parquet(str(tmp_path / "frames"))
+    P.run_pipeline_avro_frames(spark, str(tmp_path / "frames"), avro_t.merge_upsert(),
+                               str(tmp_path / "avro_ckpt"), {1: USERS_AVRO_SCHEMA},
+                               USERS_AVRO_SCHEMA)
+
+    for t in (json_t, avro_t):
+        got = [(r.username, r.kafka_offset) for r in t.read(spark).collect()]
+        assert got == [("at_offset_7", 7)]
+        assert [r.username for r in t.read_latest(spark).collect()] == ["at_offset_7"]
 
 
 def test_watermarked_window_agg_stream(spark, tmp_path):
@@ -111,101 +156,19 @@ def test_watermarked_window_agg_stream(spark, tmp_path):
     assert got == batch
 
 
-def test_upsert_crash_window_recovery(spark, tmp_path):
-    """Kill-between-write-and-swap simulation: at every instant of the
-    swap protocol either the table dir or its ``.old`` sibling holds a
-    complete previous version, and replaying the batch after any of the
-    three possible crash points converges back to the golden state."""
-    import os
-    import shutil
-
-    tbl = str(tmp_path / "tbl")
-    full = mv_users(unwrap(users_cdc_events(spark)))
-    sink = P.upsert_batch(tbl)
-    sink(full, 0)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-    # crash point 1: tmp written, swap not started
-    shutil.copytree(tbl, tbl + ".tmp")
-    sink(full, 1)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".tmp") and not os.path.exists(tbl + ".old")
-
-    # crash point 2: old renamed away, new not yet renamed in (table MISSING)
-    shutil.copytree(tbl, tbl + ".tmp")
-    os.rename(tbl, tbl + ".old")
-    sink(full, 2)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".tmp") and not os.path.exists(tbl + ".old")
-
-    # crash point 3: new renamed in, old not yet deleted
-    shutil.copytree(tbl, tbl + ".old")
-    sink(full, 3)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    assert not os.path.exists(tbl + ".old")
-
-
-def _bucket_snapshot(tbl):
-    """(relative file path → (size, mtime_ns)) per bucket directory."""
-    import os
-
-    snap = {}
-    for dirpath, _, files in os.walk(tbl):
-        for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
-            full = os.path.join(dirpath, fn)
-            rel = os.path.relpath(full, tbl)
-            st = os.stat(full)
-            snap[rel] = (st.st_size, st.st_mtime_ns)
-    return snap
-
-
-def test_bucketed_upsert_matches_golden_and_prunes_rewrites(spark, tmp_path):
-    """The partition-pruned sink must (a) converge to the same latest
-    state as the whole-table-rewrite sink, (b) be idempotent under batch
-    redelivery, and (c) leave untouched bucket partitions byte-identical
-    — the property that makes it viable at 100 TB."""
-    tbl = str(tmp_path / "tbl_bucketed")
-    full = mv_users(unwrap(users_cdc_events(spark)))
-    sink = P.upsert_batch_bucketed(tbl)
-
-    sink(full, 0)
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-    n1 = P.read_all_versions(spark, tbl).count()
-    sink(full, 1)  # full redelivery of every row → no change
-    assert P.read_all_versions(spark, tbl).count() == n1
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-    # single-key update batch: only that key's bucket may be rewritten
-    one = full.orderBy(F.col("kafka_offset").desc()).limit(1)
-    key = one.collect()[0].user_id
-    before = _bucket_snapshot(tbl)
-    sink(one, 2)
-    after = _bucket_snapshot(tbl)
-
-    touched_bucket = f"__bucket={[r['__bucket'] for r in spark.read.parquet(tbl).filter(F.col('user_id') == key).select('__bucket').distinct().collect()][0]}"
-    untouched_before = {p: v for p, v in before.items() if not p.startswith(touched_bucket)}
-    untouched_after = {p: v for p, v in after.items() if not p.startswith(touched_bucket)}
-    assert untouched_before, "fixture keys all hashed to one bucket — raise n_buckets"
-    assert untouched_before == untouched_after  # byte-identical: never rewritten
-    assert _latest_map(P.read_latest(spark, tbl)) == GOLDEN_LATEST
-
-
 # -- Avro-framed streaming with schema evolution (round 4) ------------------
 def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     """Two micro-batch files: v1-schema records then v2 (adds nullable
     email, widens user_id). One streaming query ingests both, the final
     latest-state table carries the reader-schema columns, and replaying
-    with the same checkpoint is a no-op (restart idempotency)."""
+    with the same checkpoint commits nothing (restart idempotency)."""
     from postgre_to_clickhouse_spark.cdc import avro as A
     from postgre_to_clickhouse_spark.cdc import avro_py as AP
     from postgre_to_clickhouse_spark.cdc.schemas import USERS_AVRO_SCHEMA
-    from postgre_to_clickhouse_spark.streaming.pipeline import run_pipeline_avro_frames
     from tests.test_avro_framing import USERS_V2_AVRO_SCHEMA
 
     frames_dir = str(tmp_path / "frames")
-    table = str(tmp_path / "table")
+    t = ManifestTable(str(tmp_path / "table"))
     ckpt = str(tmp_path / "ckpt")
 
     v1 = [
@@ -219,26 +182,27 @@ def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
         {"user_id": 3, "username": "cat", "account_type": "free", "updated_at": 30,
          "created_at": 3, "email": None},
     ]
-    f1 = [(bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 1)),) for r in v1]
-    f2 = [(bytearray(A.frame(AP.encode_record(r, USERS_V2_AVRO_SCHEMA), 2)),) for r in v2]
-    spark.createDataFrame(f1, "value binary").coalesce(1).write.mode("append").parquet(frames_dir)
-    spark.createDataFrame(f2, "value binary").coalesce(1).write.mode("append").parquet(frames_dir)
+    ts = dt.datetime(2024, 3, 1, 10, 0, 0)
+    kafka = "value binary, offset long, timestamp timestamp"
+    f1 = [(bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 1)), i, ts)
+          for i, r in enumerate(v1)]
+    f2 = [(bytearray(A.frame(AP.encode_record(r, USERS_V2_AVRO_SCHEMA), 2)), 2 + i, ts)
+          for i, r in enumerate(v2)]
+    spark.createDataFrame(f1, kafka).coalesce(1).write.mode("append").parquet(frames_dir)
+    spark.createDataFrame(f2, kafka).coalesce(1).write.mode("append").parquet(frames_dir)
 
     schemas = {1: USERS_AVRO_SCHEMA, 2: USERS_V2_AVRO_SCHEMA}
-    run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
+    P.run_pipeline_avro_frames(spark, frames_dir, t.merge_upsert(), ckpt, schemas,
+                               USERS_V2_AVRO_SCHEMA)
 
-    from postgre_to_clickhouse_spark.cdc.dedup import latest
-
-    final = latest(
-        spark.read.parquet(table), entity_key=("user_id",), version_cols=("updated_at",)
-    )
-    got = {r.user_id: (r.username, r.email) for r in final.collect()}
+    got = {r.user_id: (r.username, r.email) for r in t.read_latest(spark).collect()}
     assert got == {1: ("ann2", "ann@example.org"), 2: ("bob", None), 3: ("cat", None)}
 
-    n_before = spark.read.parquet(table).count()
-    # restart with the SAME checkpoint: source fully drained -> no-op
-    run_pipeline_avro_frames(spark, frames_dir, table, ckpt, schemas, USERS_V2_AVRO_SCHEMA)
-    assert spark.read.parquet(table).count() == n_before
+    n_before, v_before = t.read(spark).count(), t.current_version()
+    # restart with the SAME checkpoint: source fully drained -> no commit
+    P.run_pipeline_avro_frames(spark, frames_dir, t.merge_upsert(), ckpt, schemas,
+                               USERS_V2_AVRO_SCHEMA)
+    assert (t.read(spark).count(), t.current_version()) == (n_before, v_before)
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
