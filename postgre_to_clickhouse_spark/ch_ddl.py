@@ -306,8 +306,7 @@ def _parse_type(toks: list[str]) -> tuple[T.DataType, bool]:
         # ch_select -State algebra's: count -> bigint, sum ->
         # decimal(30,6) (exact, closed under merge), avg -> (sum,
         # count) struct, min/max -> T itself, uniq -> binary (HLL
-        # sketch). Other functions refuse with a pointer to the
-        # native MV sinks.
+        # sketch). Other functions refuse.
         parts = [p for p in inner if p != ","]
         if not parts:
             raise ChSqlError("AggregateFunction needs a function name")
@@ -358,8 +357,7 @@ def _parse_type(toks: list[str]) -> tuple[T.DataType, bool]:
         raise ChSqlError(
             f"AggregateFunction({fn}) is outside the subset — "
             "count/sum/avg/min/max/uniq/uniqExact/quantile/topK map to "
-            "ch_select's -State algebra; other sketch states live in "
-            "sinks/agg_mv.py"
+            "ch_select's -State algebra"
         )
     raise ChSqlError(f"unsupported ClickHouse type {head}(...)")
 
@@ -2346,7 +2344,7 @@ class ChDdlCatalog:
         return t
 
     def insert(self, spark: SparkSession, name: str, df: DataFrame,
-               batch_id: int | str = 0) -> int:
+               batch_id: int | str = 0, app_id: str | None = None) -> int:
         """CH ``INSERT INTO <name>`` against the catalog's storage:
         conform the block to the declared schema (the cast CH applies
         on insert), then land it as immutable part files — the
@@ -2357,32 +2355,46 @@ class ChDdlCatalog:
         MergeTree rows accumulate, SummingMergeTree and
         AggregatingMergeTree rows fold at merge/read time, exactly
         the CH contract (r11 fix: the dedup was wrongly applied to
-        all engines and silently dropped same-key MergeTree rows)."""
+        all engines and silently dropped same-key MergeTree rows).
+
+        ``app_id`` names the stream a foreachBatch insert belongs to;
+        with it ``batch_id`` must be an int, and a batch whose id the
+        table already records for that stream (a replay after a
+        restart) commits nothing — the manifest's ``txns`` record.
+        Without it an insert never skips: wire INSERTs number their
+        batches per catalog object, so equal ids are not replays. A
+        batch that writes no file commits nothing either way. Returns
+        the table's version after the insert."""
         spec = self.tables.get(name)
         if spec is None:
             raise ChSqlError(f"unknown table {name!r}")
+        txn = None
+        if app_id is not None:
+            if not isinstance(batch_id, int):
+                raise ChSqlError(
+                    f"insert with app_id needs an int batch_id, got {batch_id!r}"
+                )
+            txn = (app_id, batch_id)
         t = self.storage_for(name)
         batch = spec.conform(df)
         if spec.engine.upper() == "REPLACINGMERGETREE":
-            key = tuple(spec.order_by)
-            if spec.engine_args:
-                # r12: VERSIONED RMT — CH's insert-block dedup keeps
-                # the MAX-version row per sort key within the block
-                # (the version argument decides, not arrival order);
-                # the unversioned engine below keeps a deterministic
-                # arbitrary row, the documented instance of CH's
-                # "last inserted" arrival-order contract
-                from postgre_to_clickhouse_spark.cdc import latest
+            from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest
 
+            key = tuple(spec.order_by)
+            # r12: VERSIONED RMT — CH's insert-block dedup keeps the
+            # MAX-version row per sort key within the block (the
+            # version argument decides, not arrival order); the
+            # unversioned engine keeps a deterministic arbitrary row,
+            # the documented instance of CH's "last inserted"
+            # arrival-order contract
+            if spec.engine_args:
                 batch = latest(batch, key, (spec.engine_args[0],))
             else:
-                return t.append_parts(sort_key=key, arrival=key)(batch, batch_id)
+                batch = dedup_redelivery(batch, key, key)
         # r16: no touched-bucket discovery pass — an INSERT never reads
         # existing data, so which buckets the batch lands in is decided
-        # by the hash write itself (empty partitions write no file),
-        # exactly the append_parts funnel. One scan+shuffle per insert
-        # deleted; the produced file set is identical.
-        return t._append_part(batch, note=f"append batch_id={batch_id}")
+        # by the hash write itself (empty partitions write no file).
+        return t._append_part(batch, note=f"append batch_id={batch_id}", txn=txn)
 
     def _read_stored(self, spark: SparkSession, name: str) -> DataFrame:
         """Read a stored table onto its CURRENT declared schema. For a

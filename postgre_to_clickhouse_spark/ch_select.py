@@ -631,17 +631,16 @@ def _apply(name: str, args: list[str]) -> str:
             f"{name!r}: only the count/sum/avg/min/max/uniq/uniqExact/"
             "quantile/quantileExact -State/-Merge combinators (plus the "
             "parameterized topKState(k)/topKMerge(k)) are mapped — the "
-            "AggregatingMergeTree MV pattern (r11/r12); other sketch "
-            "states live in the native MV sinks (sinks/agg_mv.py)"
+            "AggregatingMergeTree MV pattern (r11/r12); other states are "
+            "outside the subset"
         )
     return f"{name}({', '.join(args)})"  # standard SQL — Spark validates
 
 
 # r11 (VERDICT r10 missing #3): the canonical AggregatingMergeTree MV
 # combinators. A `fnState` call produces a MERGEABLE state column and
-# `fnMerge` folds state columns back — the states are the same algebra
-# sinks/agg_mv.py uses (exact decimal(30,6) sums so merge order can
-# never perturb a result; avg as a (sum, count) struct; uniq as a
+# `fnMerge` folds state columns back (exact decimal(30,6) sums so
+# merge order can never perturb a result; avg as a (sum, count) struct; uniq as a
 # Datasketches HLL sketch — hll_union_agg is per-register max, so
 # replays and re-merges are idempotent). Sum/avg states are CLOSED
 # under merge (the merge casts back to the state type) so a merged
@@ -697,21 +696,19 @@ _STATE_MERGE = {
 
 # r12 (VERDICT r11 #3): quantile and topK join the -State/-Merge
 # family, closing the AggregatingMergeTree pattern for the two
-# remaining CH-idiomatic aggregates. Representations (the same algebra
-# sinks/agg_mv.py QuantileMV/TopKMV hold natively, re-expressed as
-# pure-SQL aggregate expressions so they compile inside a verbatim
-# -State MV SELECT):
+# remaining CH-idiomatic aggregates. Representations (pure-SQL
+# aggregate expressions, so they compile inside a verbatim -State MV
+# SELECT):
 #
 # * quantileState(x) → sorted ``array<struct<v double, w bigint>>`` —
 #   a weighted value histogram with unit weights (NULL inputs skipped,
 #   like CH). This is EXACTLY ClickHouse ``quantileExactState``'s
 #   bound: CH's exact state stores every value, O(rows) per group; the
-#   cardinality-compressed / GK-bounded variants live in
-#   sinks/agg_mv.py QuantileMV and operators/sketch.py. Closed under
+#   GK-bounded variant lives in operators/sketch.py. Closed under
 #   merge: concatenating state arrays IS a valid state.
 # * quantileMerge(q)(s) → flatten + sort all states once, then the
 #   exact-weighted finalize rule (the smallest v whose cumulative
-#   weight reaches q·W — QuantileMV.read_final's rule; every output is
+#   weight reaches q·W — the quantileExactWeighted rule; every output is
 #   a RAW input value, no interpolation). Computed entirely JVM-side
 #   with nested higher-order functions; the collect_list/sum
 #   aggregates sit OUTSIDE every lambda (Spark rejects aggregates
@@ -719,18 +716,17 @@ _STATE_MERGE = {
 #   transform-over-singleton-array trick. Empty state → NULL (the
 #   engine's documented OrNull reading of empty aggregates).
 # * topKState(k)(x) → ``struct<tk array<struct<item string,
-#   ub bigint>>, d bigint>`` — the SpaceSaving-style capped summary
-#   TopKMV holds: the ≤k heaviest items with upper-bound counts plus
-#   the error floor d (largest dropped mass; 0 in the exact regime
-#   where per-group distinct ≤ k). Item counts are computed
+#   ub bigint>>, d bigint>`` — the SpaceSaving-style capped summary:
+#   the ≤k heaviest items with upper-bound counts plus the error floor
+#   d (largest dropped mass; 0 in the exact regime where per-group
+#   distinct ≤ k). Item counts are computed
 #   per-distinct-item with filter/size over the collected list —
 #   O(distinct × rows) comparisons per group, all inside whole-stage
 #   codegen, no array re-copying.
-# * topKMerge(k)(s) → the conservative composition TopKMV._merge
-#   implements (D = Σ dᵢ; merged ub = D + Σ (ubᵢ − dᵢ) over summaries
-#   containing the item), finalized to CH's topK output: the array of
-#   the k heaviest items (ub desc, item asc — deterministic tie, the
-#   repo-wide convention). Exact whenever every input state has d = 0.
+# * topKMerge(k)(s) → the conservative composition (D = Σ dᵢ; merged
+#   ub = D + Σ (ubᵢ − dᵢ) over summaries containing the item),
+#   finalized to CH's topK output: the array of the k heaviest items
+#   (ub desc, item asc — deterministic tie, the repo-wide convention). Exact whenever every input state has d = 0.
 def _q_state_sql(x: str) -> str:
     return (
         f"sort_array(collect_list(CASE WHEN ({x}) IS NOT NULL THEN "
@@ -830,7 +826,7 @@ def _topk_fold_sql(s: str, k: int) -> str:
     conservative composition, re-capped to ``k`` and emitted as a
     struct state — closed under merge, so the folded part stays
     re-mergeable (the AggregatingMergeTree contract). The new error
-    floor is max(ΣD, largest evicted ub) — TopKMV._merge's rule."""
+    floor is max(ΣD, largest evicted ub)."""
     fin = (
         f"named_struct('tk', transform(slice(hs, 1, {k}), "
         f"e -> named_struct('item', e.item, 'ub', e.ub)), "

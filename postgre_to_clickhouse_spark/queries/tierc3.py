@@ -50,6 +50,41 @@ def _pin(out):
         return out.localCheckpoint(eager=True)
 
 
+def _state_mv(spark, name, ddl, frame, batch_of, read):
+    """Fold ``frame`` through the AggregatingMergeTree ``states`` and
+    its -State MV ``states_mv`` (declared by ``ddl`` over source
+    ``src``) on a tempdir-backed ``ChDdlCatalog``: four micro-batches
+    tagged with stream id ``name``, batch 1 REPLAYED (the manifest's
+    ``txns`` record must make it commit nothing — an explicit raise,
+    not an assert, so ``python -O`` keeps the check) and ``OPTIMIZE
+    TABLE states FINAL`` folding the first three parts after batch 2.
+    ``read(cat)`` answers from the states; the answer is pinned on the
+    executors before the tempdir goes."""
+    import shutil
+    import tempfile
+
+    from postgre_to_clickhouse_spark.ch_ddl import ChDdlCatalog
+
+    root = tempfile.mkdtemp(prefix=f"p2c_{name}_")
+    try:
+        cat = ChDdlCatalog(storage_root=root)
+        cat.execute(ddl)
+        table = cat.storage_for("states")
+        for b in range(4):
+            batch = cat.apply_mv(spark, "states_mv", {"src": frame.filter(batch_of == b)})
+            cat.insert(spark, "states", batch, batch_id=b, app_id=name)
+            if b == 1:  # crash/redelivery replay: must commit nothing
+                v = table.current_version()
+                cat.insert(spark, "states", batch, batch_id=b, app_id=name)
+                if table.current_version() != v:
+                    raise RuntimeError(f"{name}: replayed batch 1 double-committed")
+            if b == 2:  # background merge mid-stream: folds parts 0-2
+                cat.execute("OPTIMIZE TABLE states FINAL", spark=spark)
+        return _pin(read(cat))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 @register(
     "document_chunks",
     oracle="""
@@ -216,44 +251,41 @@ def pack_sequences(spark, sf_dir):
 )
 def agg_mv_incremental(spark, sf_dir):
     """A12 incremental aggregate MV end-to-end: the events table is fed
-    through ``AggregateMV`` (ClickHouse AggregatingMergeTree parity —
-    mergeable per-part partial states, exactly-once batch commit,
-    background compaction) as four micro-batches, with one batch
-    REPLAYED (must be a no-op) and a mid-stream compaction folding the
-    first parts, then read back finalized. The oracle recomputes the
-    same aggregates from raw events in DuckDB — equality proves that
-    batch boundaries, replay, and compaction never leak into results
-    (associative exact-decimal states). Reference behavior: ClickHouse
-    materialized views over Kafka streams (/root/reference/README.md,
-    MV + SummingMergeTree pattern)."""
-    import os
-    import shutil
-    import tempfile
-
-    from postgre_to_clickhouse_spark.sinks.agg_mv import AggregateMV
-
+    through a sum/count/min/max ``-State`` MV into an
+    AggregatingMergeTree (see ``_state_mv``: four micro-batches, one
+    REPLAYED, a mid-stream OPTIMIZE FINAL) and read back with the
+    ``-Merge`` combinators. The sum state is exact decimal(30,6) —
+    every fixture value has at most 2 decimals, so it equals the
+    oracle's decimal(30,4) sum. The oracle recomputes the same
+    aggregates from raw events in DuckDB — equality proves that batch
+    boundaries, replay and folds never leak into results. Reference
+    behavior: ClickHouse materialized views over Kafka streams (the
+    reference README's MV + SummingMergeTree pattern)."""
     ev = _t(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    path = tempfile.mkdtemp(prefix="p2c_agg_mv_")
-    try:
-        mv = AggregateMV(path, keys=("event_type",), value_col="value", scale=4)
-        # four deterministic micro-batches (id-hash partitioned, like a
-        # Kafka partition split); NULL ids land in batch 0 via coalesce
-        batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
-        for b in range(4):
-            applied = mv.apply_batch(ev.filter(batch_of == b), batch_id=b)
-            # exactly-once contract enforced with explicit raises (NOT
-            # bare asserts, which `python -O` strips — a double-commit
-            # must fail loudly, not flow into a wrong result)
-            if not applied:
-                raise RuntimeError(f"agg_mv: batch {b} was not applied")
-            if b == 1:  # crash/redelivery replay: must commit nothing
-                if mv.apply_batch(ev.filter(batch_of == b), batch_id=b) is not False:
-                    raise RuntimeError("agg_mv: replayed batch 1 double-committed")
-            if b == 2:  # background merge mid-stream: folds parts 0-2
-                mv.compact(spark)
-        return _pin(mv.read_final(spark))
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    ddl = """
+    CREATE TABLE states (event_type String,
+        s AggregateFunction(sum, Float64), n AggregateFunction(count, Float64),
+        lo AggregateFunction(min, Float64), hi AggregateFunction(max, Float64))
+    ENGINE = AggregatingMergeTree ORDER BY (event_type);
+    CREATE MATERIALIZED VIEW states_mv TO states AS
+    SELECT event_type, sumState(value) AS s, countState(value) AS n,
+           minState(value) AS lo, maxState(value) AS hi
+    FROM src GROUP BY event_type
+    """
+    # four deterministic micro-batches (id-hash partitioned, like a
+    # Kafka partition split); NULL ids land in batch 0 via coalesce
+    batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
+    return _state_mv(
+        spark, "agg_mv_incremental", ddl, ev, batch_of,
+        lambda cat: cat.query(
+            spark,
+            "SELECT event_type, toFloat64(sumMerge(s)) AS value_sum, "
+            "countMerge(n) AS value_count, minMerge(lo) AS value_min, "
+            "maxMerge(hi) AS value_max, "
+            "toFloat64(sumMerge(s)) / countMerge(n) AS value_avg "
+            "FROM states GROUP BY event_type",
+        ),
+    )
 
 
 @register("bpe_tokenize_documents")  # golden oracle (queries/goldens.py)
@@ -440,39 +472,32 @@ def manifest_zonemap_read(spark, sf_dir):
 def uniq_mv_incremental(spark, sf_dir):
     """r7, A12: the uniqState/uniqMerge MATERIALIZED VIEW — THE
     canonical ClickHouse AggregatingMergeTree pattern (store a
-    distinct-count state per group, merge at read) — driven end-to-end:
-    events stream through ``UniqMV`` (Datasketches HLL partial states
-    in the same batch-id-addressed part log as the sum/count MV) as
-    four micro-batches with one REPLAYED batch (skip enforced by
-    explicit raise) and a mid-stream compaction, then the finalized
-    per-type distinct-user counts read back. HLL register union is
-    commutative/associative/IDEMPOTENT, so replay, batch boundaries
-    and compaction are all provably invisible; at the fixtures'
-    cardinality the sketch sits in its exact sparse regime, making the
-    DuckDB exact-DISTINCT oracle an equality check (the approximate
-    regime's bounds are pytest-gated in the uniq_merge_rollup family).
-    """
-    import shutil
-    import tempfile
-
-    from postgre_to_clickhouse_spark.sinks.agg_mv import UniqMV
-
+    distinct-count state per group, merge at read) — driven end-to-end
+    through ``_state_mv`` (four micro-batches, one REPLAYED, a
+    mid-stream OPTIMIZE FINAL), then the finalized per-type
+    distinct-user counts read back. The state is a Datasketches HLL
+    sketch (lg_k 12) whose register union is commutative, associative
+    and IDEMPOTENT, so replay, batch boundaries and folds are all
+    provably invisible; at the fixtures' cardinality the sketch sits
+    in its exact sparse regime, making the DuckDB exact-DISTINCT
+    oracle an equality check (the approximate regime's bounds are
+    pytest-gated in the uniq_merge_rollup family)."""
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id", "event_id")
-    path = tempfile.mkdtemp(prefix="p2c_uniq_mv_")
-    try:
-        mv = UniqMV(path, keys=("event_type",), value_col="user_id")
-        batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
-        for b in range(4):
-            if not mv.apply_batch(ev.filter(batch_of == b), batch_id=b):
-                raise RuntimeError(f"uniq_mv: batch {b} was not applied")
-            if b == 1:  # redelivery: must be a committed-part skip
-                if mv.apply_batch(ev.filter(batch_of == b), batch_id=b) is not False:
-                    raise RuntimeError("uniq_mv: replayed batch 1 double-committed")
-            if b == 2:
-                mv.compact(spark)
-        return _pin(mv.read_final(spark))
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    ddl = """
+    CREATE TABLE states (event_type String, u AggregateFunction(uniq, Int64))
+    ENGINE = AggregatingMergeTree ORDER BY (event_type);
+    CREATE MATERIALIZED VIEW states_mv TO states AS
+    SELECT event_type, uniqState(user_id) AS u FROM src GROUP BY event_type
+    """
+    batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
+    return _state_mv(
+        spark, "uniq_mv_incremental", ddl, ev, batch_of,
+        lambda cat: cat.query(
+            spark,
+            "SELECT event_type, uniqMerge(u) AS uniq_values "
+            "FROM states GROUP BY event_type",
+        ),
+    )
 
 
 _USERS_V2_AVRO = """
@@ -575,44 +600,34 @@ def cdc_avro_decode_pipeline(spark, sf_dir):
     """,
 )
 def quantile_mv_incremental(spark, sf_dir):
-    """r9, A12: the quantileExactWeightedState/-Merge MATERIALIZED VIEW
-    (ClickHouse AggregatingMergeTree's quantile pattern — the state IS
-    a value→count histogram) driven end-to-end: events stream through
-    ``QuantileMV`` as four micro-batches with one REPLAYED batch (skip
-    enforced by explicit raise) and a mid-stream compaction, then
+    """r9, A12: the quantileState/-Merge MATERIALIZED VIEW (ClickHouse
+    AggregatingMergeTree's quantile pattern — the state IS a weighted
+    value histogram) driven end-to-end through ``_state_mv`` (four
+    micro-batches, one REPLAYED, a mid-stream OPTIMIZE FINAL), then
     p50/p90/p99 per event type read back via the quantileExactWeighted
     rule (smallest value whose cumulative weight reaches q·W, a JVM
-    fold over the bounded state array — no window, no explode at
-    read). Histogram-count merge is commutative/associative and the
-    part log is exactly-once, so batch boundaries, replay and
-    compaction are provably invisible; every output is a RAW input
-    value, so the DuckDB cumulative-weight oracle is an equality
-    check, not an approximation bound.
-
-    Scale: ingest is O(batch groups × batch-distinct values); the view
-    stores per-group histograms bounded by value cardinality (CH's own
-    quantileExactWeighted bound), never facts."""
-    import shutil
-    import tempfile
-
-    from postgre_to_clickhouse_spark.sinks.agg_mv import QuantileMV
-
+    fold over the state array). Histogram concatenation is
+    commutative/associative and the replay commits nothing, so batch
+    boundaries, replay and folds are provably invisible; every output
+    is a RAW input value, so the DuckDB cumulative-weight oracle is an
+    equality check, not an approximation bound."""
     ev = _t(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    path = tempfile.mkdtemp(prefix="p2c_quantile_mv_")
-    try:
-        mv = QuantileMV(path, keys=("event_type",), value_col="value")
-        batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
-        for b in range(4):
-            if not mv.apply_batch(ev.filter(batch_of == b), batch_id=b):
-                raise RuntimeError(f"quantile_mv: batch {b} was not applied")
-            if b == 1:
-                if mv.apply_batch(ev.filter(batch_of == b), batch_id=b) is not False:
-                    raise RuntimeError("quantile_mv: replayed batch 1 double-committed")
-            if b == 2:
-                mv.compact(spark)
-        return _pin(mv.read_final(spark))
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    ddl = """
+    CREATE TABLE states (event_type String, q AggregateFunction(quantile, Float64))
+    ENGINE = AggregatingMergeTree ORDER BY (event_type);
+    CREATE MATERIALIZED VIEW states_mv TO states AS
+    SELECT event_type, quantileState(value) AS q FROM src GROUP BY event_type
+    """
+    batch_of = F.coalesce(F.pmod("event_id", F.lit(4)), F.lit(0))
+    return _state_mv(
+        spark, "quantile_mv_incremental", ddl, ev, batch_of,
+        lambda cat: cat.query(
+            spark,
+            "SELECT event_type, quantileMerge(0.5)(q) AS p50, "
+            "quantileMerge(0.9)(q) AS p90, quantileMerge(0.99)(q) AS p99 "
+            "FROM states GROUP BY event_type",
+        ),
+    )
 
 
 @register(
@@ -638,50 +653,46 @@ def quantile_mv_incremental(spark, sf_dir):
 def topk_mv_incremental(spark, sf_dir):
     """r9, A12: the topKState/topKMerge MATERIALIZED VIEW — the fourth
     mergeable state family (SpaceSaving summaries) driven end-to-end:
-    per-language document tokens stream through ``TopKMV`` as four
-    micro-batches with one REPLAYED batch (skip enforced by explicit
-    raise) and a mid-stream compaction, then the per-language top-10
-    tokens read back. Capacity 4096 exceeds per-batch vocabularies at
-    this SF, so every error floor is 0 and the conservative
-    SpaceSaving merge is EXACT — the DuckDB exact-count oracle is an
-    equality check (truncated-regime bounds are pytest-gated in
-    test_agg_mv.py); the in-query contract raises if any state left
-    the exact regime.
-
-    Scale: state per group is capacity-bounded regardless of history;
-    batch ingest is one partial agg + per-group top-capacity."""
-    import shutil
-    import tempfile
-
+    per-language document tokens go through ``_state_mv`` (four
+    micro-batches, one REPLAYED, a mid-stream OPTIMIZE FINAL), one
+    more OPTIMIZE FINAL folds each language to a single ``topK(4096)``
+    state, and its ranked items are the per-language top-10. Capacity
+    4096 exceeds the vocabularies at this SF, so every error floor is
+    0 and the conservative SpaceSaving merge is EXACT — the DuckDB
+    exact-count oracle is an equality check (truncated-regime bounds
+    are pytest-gated in test_state_quantile_topk.py); the query raises
+    if any state left the exact regime."""
     from postgre_to_clickhouse_spark.operators.sketch import tokens_of
-    from postgre_to_clickhouse_spark.sinks.agg_mv import TopKMV
+    from postgre_to_clickhouse_spark.session import micro_shape
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", tokens_of(docs).alias("item"))
-    path = tempfile.mkdtemp(prefix="p2c_topk_mv_")
-    try:
-        mv = TopKMV(path, keys=("lang",), value_col="item", capacity=4096)
-        batch_of = F.pmod("doc_id", F.lit(4))
-        for b in range(4):
-            if not mv.apply_batch(toks.filter(batch_of == b), batch_id=b):
-                raise RuntimeError(f"topk_mv: batch {b} was not applied")
-            if b == 1:
-                if mv.apply_batch(toks.filter(batch_of == b), batch_id=b) is not False:
-                    raise RuntimeError("topk_mv: replayed batch 1 double-committed")
-            if b == 2:
-                mv.compact(spark)
-        # r17: fixed-shape 1-row contract check — one planning round
-        # (the AQE form paid six stage-submission jobs in the probe)
-        from postgre_to_clickhouse_spark.session import micro_shape
+    ddl = """
+    CREATE TABLE states (lang String, t AggregateFunction(topK(4096), String))
+    ENGINE = AggregatingMergeTree ORDER BY (lang);
+    CREATE MATERIALIZED VIEW states_mv TO states AS
+    SELECT lang, topKState(4096)(item) AS t FROM src GROUP BY lang
+    """
 
+    def read(cat):
+        cat.execute("OPTIMIZE TABLE states FINAL", spark=spark)
+        st = cat.query(spark, "SELECT lang, t FROM states")
+        # r17: fixed-shape 1-row contract check — one planning round
         with micro_shape(spark):
-            floors = mv.read_states(spark).agg(F.max("s_d")).collect()[0][0]
+            floors = st.agg(F.max("t.d")).collect()[0][0]
         if floors != 0:
             raise RuntimeError(
                 f"topk_mv left the exact regime (max error floor {floors}) — "
                 "raise capacity"
             )
-        out = mv.read_final(spark, k=10).select("lang", "rank", "item", "cnt")
-        return _pin(out)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+        ranked = st.select("lang", F.posexplode("t.tk").alias("pos", "e"))
+        return ranked.filter(F.col("pos") < 10).select(
+            "lang",
+            (F.col("pos") + 1).cast("bigint").alias("rank"),
+            F.col("e.item").alias("item"),
+            F.col("e.ub").alias("cnt"),
+        )
+
+    return _state_mv(
+        spark, "topk_mv_incremental", ddl, toks, F.pmod("doc_id", F.lit(4)), read
+    )

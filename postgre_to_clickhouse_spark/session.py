@@ -70,10 +70,10 @@ def micro_shape(spark: SparkSession, width: int | str | None = "derived"):
     strategy to revisit. Everything analytical keeps AQE.
 
     ``width`` is the shuffle width for the duration. The default pins
-    ``max(2, defaultParallelism // 8)``: the MV sinks' partial-state
-    appends shuffle kilobytes of state rows, and AQE off at the full
-    ``shuffle.partitions`` runs that many near-empty tasks (the
-    measured 3.2 -> 5.9 s regression recorded in agg_mv.apply_batch).
+    ``max(2, defaultParallelism // 8)``: micro-batch part writes
+    shuffle kilobytes of rows, and AQE off at the full
+    ``shuffle.partitions`` runs that many near-empty tasks (a measured
+    3.2 -> 5.9 s regression on a topK state-MV ingest at sf0.1).
     Width scales with the cluster, not a local constant. ``width=None``
     keeps the session's width (only AQE goes off), for actions whose
     width is explicit anyway. The confs are restored on exit.

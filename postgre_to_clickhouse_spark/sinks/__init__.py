@@ -1,1 +1,3 @@
-"""Sinks + table-maintenance jobs (SURVEY.md A8 + §7.4)."""
+"""Sinks: the manifest-committed table store (``manifest``), bucketed
+layouts (``maintenance``), training-data shards (``shards``,
+``webdataset``) — SURVEY.md A8 + §7.4."""

@@ -1,10 +1,6 @@
-"""Table maintenance: compaction + bucketed layouts (SURVEY.md §7.4).
-
-Streaming upserts produce many small files (one batch = one file set);
-at 100 TB the reader's task count explodes and scan throughput dies.
-:func:`compact` is the background job — the engine's analogue of
-ClickHouse's background merge, run explicitly and deterministically
-instead of eventually.
+"""Table maintenance: bucketed layouts (SURVEY.md §7.4). Compaction of
+stored tables is :meth:`sinks.manifest.ManifestTable.compact`, which
+commits through the manifest like every other write.
 
 :func:`write_bucketed` persists a table bucketed by a join key so
 repeated large-large joins (lineitem⋈orders on orderkey) read
@@ -14,39 +10,7 @@ assertion in tests/test_scale_layouts.py.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
-def compact(
-    spark: SparkSession,
-    table_path: str,
-    target_file_bytes: int = TARGET_FILE_BYTES,
-) -> int:
-    """Rewrite a parquet table into ≈target-sized files. Returns the new
-    file count. Uses the table's on-disk size (not row count) to choose
-    the file count — row width varies wildly across tables."""
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(table_path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, round(size / target_file_bytes))
-    df = spark.read.parquet(table_path)
-    df.persist()
-    df.count()
-    df.coalesce(n_files).write.mode("overwrite").parquet(table_path + ".compact")
-    df.unpersist()
-    import shutil
-
-    shutil.rmtree(table_path)
-    os.rename(table_path + ".compact", table_path)
-    return n_files
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(

@@ -33,6 +33,13 @@ formats share, dependency-free:
 - **Idempotent MERGE**: last-wins dedup on (sort_key, arrival) is
   deterministic, so replaying a micro-batch after a crash commits a
   snapshot with identical content.
+- **Idempotent appends** (Delta Lake's transaction identifiers): each
+  manifest carries ``txns``, ``{app_id: last batch_id}``, forward
+  from its base on every commit. An append tagged ``(app_id,
+  batch_id)`` is skipped when the id is ``<=`` the one recorded for
+  that app, and otherwise records it in the same hard-link commit, so
+  a replayed foreachBatch commits nothing. An untagged append never
+  skips, and a batch that writes no file commits nothing.
 
 Scale: a batch touching b of ``n_buckets`` buckets reads and rewrites
 only those buckets' files (manifest-level pruning — the untouched
@@ -156,11 +163,19 @@ class ManifestTable:
         return self.current_manifest().get("projections", {})
 
     def _commit(
-        self, base: dict, files: list[dict], note: str, projections: dict | None = None
+        self,
+        base: dict,
+        files: list[dict],
+        note: str,
+        projections: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Commit ``files`` as version ``base["version"] + 1``, with
         ``projections`` as its projection definitions (None carries
-        the base's forward).
+        the base's forward). The base's ``txns`` map (``{app_id: last
+        batch_id}``) is always carried forward, so folds, mutations and
+        projection DDL keep it; ``txn`` = ``(app_id, batch_id)``
+        records that batch in this commit.
 
         The manifest is written whole to a temp file, then hard-linked
         to ``v{N}.json``. The link fails if that name exists, so its
@@ -173,6 +188,9 @@ class ManifestTable:
         v = base["version"] + 1
         if projections is None:
             projections = base.get("projections", {})
+        txns = dict(base.get("txns", {}))
+        if txn is not None:
+            txns[txn[0]] = txn[1]
         # r17: persist the schema fingerprints the entries reference
         # (fresh entries resolve through this object's registry, carried
         # ones through the base manifest) so any LATER reader — including
@@ -190,6 +208,8 @@ class ManifestTable:
             manifest["schemas"] = schemas
         if projections:
             manifest["projections"] = projections
+        if txns:
+            manifest["txns"] = txns
         tmp = os.path.join(self.path, _MANIFESTS, f"tmp.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -204,13 +224,28 @@ class ManifestTable:
             os.remove(tmp)
         return v
 
+    @staticmethod
+    def _replayed(m: dict, txn: tuple[str, int] | None) -> bool:
+        """Whether snapshot ``m`` already records batch ``txn``."""
+        if txn is None:
+            return False
+        app_id, batch_id = txn
+        done = m.get("txns", {}).get(app_id)
+        return done is not None and batch_id <= done
+
     def _append(
-        self, new_files: list[dict], note: str, replace: bool = False, base: dict | None = None
+        self,
+        new_files: list[dict],
+        note: str,
+        replace: bool = False,
+        base: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Commit ``new_files`` on top of the current snapshot (in place
         of its files with ``replace=True``: TRUNCATE). Neither file list
         depends on what the base holds, so a conflict re-reads the
-        current snapshot and retries on it.
+        current snapshot and retries on it. No files and no
+        ``replace`` commit nothing: the base version is returned.
 
         ``base`` is the snapshot ``new_files`` were written against
         (tried first). Its projection definitions decided which
@@ -218,11 +253,19 @@ class ManifestTable:
         while the current snapshot has the same definitions; a
         definition change raises :class:`CommitConflict` (Delta's rule:
         a metadata change conflicts with concurrent writes). Every
-        declared projection thus keeps covering every part."""
+        declared projection thus keeps covering every part.
+
+        ``txn`` = ``(app_id, batch_id)`` is checked against every base
+        tried, a rebased retry included: a batch some writer already
+        recorded commits nothing and returns that base's version."""
+        if not new_files and not replace:
+            return self.current_version() if base is None else base["version"]
         projs = None if base is None else base.get("projections", {})
         while True:
             if base is None:
                 base = self.current_manifest()
+            if self._replayed(base, txn):
+                return base["version"]
             if projs is not None and base.get("projections", {}) != projs:
                 raise CommitConflict(
                     f"{self.path}: projections changed from {sorted(projs)} to "
@@ -230,15 +273,24 @@ class ManifestTable:
                     "nothing committed, retry"
                 )
             try:
-                return self._commit(base, ([] if replace else base["files"]) + new_files, note)
+                return self._commit(
+                    base, ([] if replace else base["files"]) + new_files, note, txn=txn
+                )
             except CommitConflict:
                 base = None
 
-    def _append_part(self, df: DataFrame, note: str) -> int:
+    def _append_part(
+        self, df: DataFrame, note: str, txn: tuple[str, int] | None = None
+    ) -> int:
         """Write ``df`` as one new part (with the current snapshot's
-        projection copies) and append it — the MergeTree INSERT."""
+        projection copies) and append it — the MergeTree INSERT. A
+        ``txn`` the current snapshot already records returns before
+        any Spark job."""
         m = self.current_manifest()
-        return self._append(self._write_part(df, None, m.get("projections", {})), note, base=m)
+        if self._replayed(m, txn):
+            return m["version"]
+        files = self._write_part(df, None, m.get("projections", {}))
+        return self._append(files, note, base=m, txn=txn)
 
     # -- recorded file schemas (r17, VERDICT r16 #3) --------------------------
     def _register_schema(self, schema: "_T.StructType") -> str:
@@ -1143,6 +1195,9 @@ class ManifestTable:
             touched = sorted(
                 r["__bucket"] for r in with_bucket.select("__bucket").distinct().collect()
             )  # bounded by n_buckets — a layout constant
+            if not touched:  # an empty batch writes and commits nothing
+                batch.unpersist()
+                return
             touched_files = [f for f in m["files"] if f["bucket"] in touched]
             kept_files = [f for f in m["files"] if f["bucket"] not in touched]
             if touched_files:

@@ -1893,3 +1893,191 @@ def test_explain_estimate_with_query_targets_top_level_from(spark, tmp_path):
     with _pytest.raises(ChSqlError, match="subquery"):
         cat.execute("EXPLAIN ESTIMATE SELECT * FROM "
                     "(SELECT id FROM small)", spark=spark)
+
+
+# --- replay-skip: the manifest's txns record ---------------------------
+
+# engine -> (CREATE TABLE, MV SELECT over `src (k, v)` or None, answer)
+_REPLAY_ENGINES = {
+    "MergeTree": (
+        "CREATE TABLE t (k String, v UInt32) ENGINE = MergeTree ORDER BY (k)",
+        None,
+        "SELECT sum(v) AS s FROM t",
+    ),
+    "SummingMergeTree": (
+        "CREATE TABLE t (k String, v UInt32) "
+        "ENGINE = SummingMergeTree ORDER BY (k)",
+        None,
+        "SELECT sum(v) AS s FROM t",
+    ),
+    "AggregatingMergeTree": (
+        "CREATE TABLE t (k String, v AggregateFunction(sum, UInt32)) "
+        "ENGINE = AggregatingMergeTree ORDER BY (k)",
+        "SELECT k, sumState(v) AS v FROM src GROUP BY k",
+        "SELECT toFloat64(sumMerge(v)) AS s FROM t",
+    ),
+    "ReplacingMergeTree": (
+        "CREATE TABLE t (k String, v UInt32) "
+        "ENGINE = ReplacingMergeTree(v) ORDER BY (k)",
+        None,
+        "SELECT sum(v) AS s FROM t",
+    ),
+}
+
+
+def _replay_table(spark, tmp_path, engine):
+    """A catalog with table ``t`` of ``engine`` and an ``ingest(df,
+    **kw)`` that inserts raw ``(k, v)`` rows (through the -State MV
+    when the engine stores states) and returns the version after."""
+    ddl, mv, answer = _REPLAY_ENGINES[engine]
+    c = ChDdlCatalog(storage_root=str(tmp_path))
+    c.execute(ddl)
+    if mv is not None:
+        c.execute(f"CREATE MATERIALIZED VIEW t_mv TO t AS {mv}")
+
+    def ingest(df, **kw):
+        block = df if mv is None else c.apply_mv(spark, "t_mv", {"src": df})
+        return c.insert(spark, "t", block, **kw)
+
+    def total():
+        return c.query(spark, answer).collect()[0]["s"]
+
+    return c, ingest, total
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k string, v int")
+
+
+@pytest.mark.parametrize("engine", sorted(_REPLAY_ENGINES))
+def test_replayed_batch_commits_nothing(spark, tmp_path, engine):
+    """A foreachBatch replay — the same (app_id, batch_id) again —
+    commits no version on any MergeTree engine, so folding engines
+    cannot count it twice (SummingMergeTree read 60, not 30, before
+    the record existed)."""
+    c, ingest, total = _replay_table(spark, tmp_path, engine)
+    b0 = _kv(spark, [("a", 10), ("b", 20)])
+    v0 = ingest(b0, batch_id=0, app_id="s")
+    assert ingest(b0, batch_id=0, app_id="s") == v0
+    t = c.storage_for("t")
+    assert t.current_version() == v0 == 0
+    assert t.current_manifest()["txns"] == {"s": 0}
+    assert total() == 30
+
+
+def test_replay_record_survives_optimize_final(spark, tmp_path):
+    c, ingest, total = _replay_table(spark, tmp_path, "AggregatingMergeTree")
+    b1 = _kv(spark, [("a", 5)])
+    ingest(_kv(spark, [("a", 10), ("b", 20)]), batch_id=0, app_id="s")
+    ingest(b1, batch_id=1, app_id="s")
+    c.execute("OPTIMIZE TABLE t FINAL", spark=spark)
+    t = c.storage_for("t")
+    folded = t.current_version()
+    assert t.current_manifest()["txns"] == {"s": 1}
+    assert ingest(b1, batch_id=1, app_id="s") == folded
+    assert ingest(b1, batch_id=0, app_id="s") == folded  # older ids skip too
+    assert t.current_version() == folded and total() == 35
+
+
+def test_replay_record_is_per_app_id(spark, tmp_path):
+    c, ingest, total = _replay_table(spark, tmp_path, "SummingMergeTree")
+    b0 = _kv(spark, [("a", 10), ("b", 20)])
+    ingest(b0, batch_id=0, app_id="s")
+    assert ingest(b0, batch_id=0, app_id="other") == 1
+    assert c.storage_for("t").current_manifest()["txns"] == {"s": 0, "other": 0}
+    assert total() == 60
+
+
+def test_insert_without_app_id_never_skips(spark, tmp_path):
+    """Wire INSERTs number their batches per catalog object, so an
+    insert with no app_id is never a replay: equal ids both commit,
+    and no txns record is written."""
+    c, ingest, total = _replay_table(spark, tmp_path, "SummingMergeTree")
+    b0 = _kv(spark, [("a", 10), ("b", 20)])
+    assert ingest(b0, batch_id=0) == 0
+    assert ingest(b0, batch_id=0) == 1
+    assert "txns" not in c.storage_for("t").current_manifest()
+    assert total() == 60
+    with pytest.raises(ChSqlError, match="int batch_id"):
+        ingest(b0, batch_id="sql0", app_id="s")
+
+
+def test_empty_insert_commits_nothing(spark, tmp_path):
+    """A batch with no rows writes no file and makes no version, and
+    records no txn (replaying it is empty too)."""
+    c, ingest, total = _replay_table(spark, tmp_path, "MergeTree")
+    assert ingest(_kv(spark, [("a", 10)]), batch_id=0) == 0
+    empty = _kv(spark, [])
+    assert ingest(empty, batch_id=1) == 0
+    t = c.storage_for("t")
+    assert t.current_version() == 0
+    assert ingest(empty, batch_id=2, app_id="s") == 0
+    assert t.current_version() == 0 and "txns" not in t.current_manifest()
+    c.execute("TRUNCATE TABLE t", spark=spark)  # TRUNCATE still commits
+    assert t.current_version() == 1 and total() is None
+
+
+def test_state_mv_through_streaming_foreachbatch(spark, tmp_path):
+    """A12: a -State MV folds a real file stream via foreachBatch into
+    an AggregatingMergeTree. A restart on the same checkpoint commits
+    nothing, and a fresh checkpoint re-delivers the same batch ids,
+    which the table's txns record skips under the fixed app id."""
+    from pyspark.sql import functions as F
+
+    from postgre_to_clickhouse_spark import catalog
+    from tests.conftest import SF_SMALL
+
+    ev = catalog.load(spark, SF_SMALL, "events").select("event_id", "event_type", "value")
+    truth = {
+        r.event_type: (round(r.s, 2), r.c, r.mn, r.mx)
+        for r in ev.groupBy("event_type").agg(
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("s"),
+            F.count("value").alias("c"),
+            F.min("value").alias("mn"),
+            F.max("value").alias("mx"),
+        ).collect()
+    }
+    src = str(tmp_path / "src")
+    ev.coalesce(3).write.json(src)
+    c = ChDdlCatalog(storage_root=str(tmp_path / "store"))
+    c.execute(
+        "CREATE TABLE stats (event_type String, "
+        "s AggregateFunction(sum, Float64), n AggregateFunction(count, Float64), "
+        "lo AggregateFunction(min, Float64), hi AggregateFunction(max, Float64)) "
+        "ENGINE = AggregatingMergeTree ORDER BY (event_type);"
+        "CREATE MATERIALIZED VIEW events_mv TO stats AS "
+        "SELECT event_type, sumState(value) AS s, countState(value) AS n, "
+        "minState(value) AS lo, maxState(value) AS hi "
+        "FROM events GROUP BY event_type"
+    )
+
+    def ingest(batch_df, batch_id):
+        s = batch_df.sparkSession  # foreachBatch hands over a session clone
+        c.insert(s, "stats", c.apply_mv(s, "events_mv", {"events": batch_df}),
+                 batch_id=batch_id, app_id="events_mv")
+
+    def run(ckpt):
+        (spark.readStream.schema("event_id long, event_type string, value double")
+         .json(src).writeStream.foreachBatch(ingest)
+         .option("checkpointLocation", str(tmp_path / ckpt))
+         .trigger(availableNow=True).start().awaitTermination())
+
+    def got():
+        return {
+            r.event_type: (round(r.s, 2), r.n, r.lo, r.hi)
+            for r in c.query(
+                spark,
+                "SELECT event_type, toFloat64(sumMerge(s)) AS s, countMerge(n) AS n, "
+                "minMerge(lo) AS lo, maxMerge(hi) AS hi FROM stats GROUP BY event_type",
+            ).collect()
+        }
+
+    t = c.storage_for("stats")
+    run("ckpt")
+    assert got() == truth
+    v = t.current_version()
+    run("ckpt")  # same checkpoint: nothing replays
+    assert t.current_version() == v
+    run("ckpt2")  # fresh checkpoint: batch 0 again, skipped
+    assert t.current_version() == v
+    assert got() == truth

@@ -2,9 +2,10 @@
 the commit, so concurrent appends all land (rebasing on a conflict),
 readers never see the version go backwards, INSERTs over every wire
 endpoint lose no row, and a rewrite whose base went stale commits
-nothing. Projection DDL commits its definition and its files in one
-manifest, so it never leaves a declared projection that fails to cover
-the snapshot, however it interleaves with appends. Each catalog wire
+nothing (two overlapping OPTIMIZE FINAL folds included). Projection
+DDL commits its definition and its files in one manifest, so it never
+leaves a declared projection that fails to cover the snapshot, however
+it interleaves with appends. Each catalog wire
 connection runs on its own Spark session, so the confs a write flips
 reach neither the server's session nor another connection's plans."""
 
@@ -279,6 +280,40 @@ def test_stale_optimize_final_conflicts_and_keeps_insert(spark, tmp_path, monkey
     assert t.current_manifest()["note"].startswith("append")
     rows = cat.query(spark, "SELECT id, v FROM t FINAL ORDER BY id").collect()
     assert [tuple(r) for r in rows] == [(1, 2), (2, 1), (3, 1)]
+
+
+def test_overlapping_optimize_finals_fold_once(spark, tmp_path, monkeypatch):
+    """Two OPTIMIZE FINAL on one AggregatingMergeTree at once: both
+    fold the same base, the first to commit wins, and the other gets
+    CommitConflict — so no two folded copies of one state are ever
+    both visible, and every sum stays what it was."""
+    cat = ChDdlCatalog(storage_root=str(tmp_path))
+    cat.execute(
+        "CREATE TABLE s (k String, v AggregateFunction(sum, Float64)) "
+        "ENGINE = AggregatingMergeTree ORDER BY (k);"
+        "CREATE MATERIALIZED VIEW mv TO s AS SELECT k, sumState(v) AS v FROM src GROUP BY k"
+    )
+    src = spark.createDataFrame([(f"k{i % 3}", float(i)) for i in range(9)], "k string, v double")
+    for b in range(3):
+        batch = src.filter(F.floor(F.col("v") / 3) == b)  # every key in every part
+        cat.insert(spark, "s", cat.apply_mv(spark, "mv", {"src": batch}))
+    read = "SELECT k, toFloat64(sumMerge(v)) AS total FROM s GROUP BY k ORDER BY k"
+    before = [tuple(r) for r in cat.query(spark, read).collect()]
+    t = cat.storage_for("s")
+    write = t._write_bucket_files
+    folds = []
+
+    def write_while_another_fold_commits(*args, **kwargs):
+        monkeypatch.setattr(t, "_write_bucket_files", write)  # overlap once
+        folds.append(cat.execute("OPTIMIZE TABLE s FINAL", spark=spark))
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(t, "_write_bucket_files", write_while_another_fold_commits)
+    with pytest.raises(CommitConflict):
+        cat.execute("OPTIMIZE TABLE s FINAL", spark=spark)
+    assert folds == [3] and t.current_version() == 3  # one fold committed
+    assert cat.query(spark, "SELECT count() AS n FROM s").collect()[0]["n"] == 3  # was 9
+    assert [tuple(r) for r in cat.query(spark, read).collect()] == before
 
 
 _SINK = dict(sort_key=("uid", "seq"), arrival=("uid",))

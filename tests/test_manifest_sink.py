@@ -38,6 +38,18 @@ def test_merge_converges_to_golden_and_is_idempotent(spark, tmp_path):
     assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
 
 
+def test_empty_merge_upsert_batch_commits_nothing(spark, tmp_path):
+    """A micro-batch left empty (e.g. only deletes after ``unwrap``)
+    touches no bucket, so it writes no file and makes no version."""
+    t = ManifestTable(str(tmp_path / "t"))
+    sink = t.merge_upsert()
+    sink(_full(spark), 0)
+    v = t.current_version()
+    sink(_full(spark).limit(0), 1)
+    assert t.current_version() == v
+    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+
+
 def test_merge_prunes_untouched_buckets(spark, tmp_path):
     """A single-key batch must carry every untouched bucket's files into
     the new manifest BY REFERENCE (same immutable file names)."""

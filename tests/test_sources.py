@@ -53,21 +53,6 @@ def test_write_partitioned_prunes(spark, tmp_path):
     assert back.count() == o.filter(F.col("yr") == 1995).count()
 
 
-def test_clickhouse_sink_writer_options(spark):
-    """The terminal ClickHouse hop (gated: no server/driver here) —
-    writer builds fully configured without connecting; append mode so
-    ReplacingMergeTree owns the last-wins merge as in the reference."""
-    from postgre_to_clickhouse_spark.sinks.clickhouse import ClickHouseSink
-
-    sink = ClickHouseSink(host="ch", port=9123, database="shop", table="users", async_insert=True)
-    assert sink.url == "jdbc:clickhouse://ch:9123/shop?async_insert=1&wait_for_async_insert=1"
-    df = spark.range(3).withColumnRenamed("id", "user_id")
-    w = sink.writer(df, num_partitions=4)
-    assert w is not None
-    batch_fn = sink.foreach_batch(num_partitions=2)
-    assert callable(batch_fn)
-
-
 def test_partsupp_fixture_matches_generator():
     """The committed partsupp parquet must stay byte-derivable from the
     generator (tools/gen_partsupp.py) — the spec-true TPC-H variants and

@@ -86,7 +86,7 @@ def test_topk_conservative_merge_invariants(spark):
     """Beyond capacity the merge is the conservative SpaceSaving
     composition: every kept item's ub ≥ its true count, and any item
     whose true count exceeds the merged error floor is PRESENT — the
-    heavy-hitter guarantee (TopKMV's property, now in dialect SQL)."""
+    heavy-hitter guarantee of SpaceSaving summaries."""
     # 1 group, 12 distinct items, capacity 4 — capping definitely fires
     rows = []
     freq = {f"i{j:02d}": 40 - 3 * j for j in range(12)}
@@ -245,6 +245,54 @@ def test_optimize_final_folds_quantile_topk_states(spark, tmp_path):
     assert n_state_rows == len(before)  # one folded row per key
     after = sorted(map(tuple, cat.query(spark, read).collect()))
     assert after == before
+
+
+def test_topk_state_table_exact_regime_and_truncated_bounds(spark, tmp_path):
+    """topK states through a catalog AggregatingMergeTree and its
+    OPTIMIZE FINAL fold: with capacity >= per-batch distincts
+    (topK(64)) the folded state's ranked items are the true counts
+    and every floor is 0; with capacity 4 the SpaceSaving invariants
+    hold on the folded state — true count <= ub for every kept item,
+    a floor > 0, and the unambiguous heavy hitter (true count > floor)
+    is PRESENT."""
+    from collections import Counter
+
+    rows = [("g", f"i{(x * x) % 23}") for x in range(600)]
+    rows += [("g", "i1")] * 250  # one unambiguous heavy hitter
+    df = spark.createDataFrame(rows, "grp string, item string")
+    true = Counter(i for _, i in rows)
+
+    def folded(k):
+        cat = ChDdlCatalog(storage_root=str(tmp_path / f"k{k}"))
+        cat.execute(
+            f"CREATE TABLE s (grp String, t AggregateFunction(topK({k}), String)) "
+            "ENGINE = AggregatingMergeTree ORDER BY (grp);"
+            "CREATE MATERIALIZED VIEW mv TO s AS "
+            f"SELECT grp, topKState({k})(item) AS t FROM src GROUP BY grp;"
+        )
+        for b in range(3):
+            batch = df.filter(F.length("item") % 3 == b)
+            cat.insert(spark, "s", cat.apply_mv(spark, "mv", {"src": batch}),
+                       batch_id=b, app_id="mv")
+        v = cat.storage_for("s").current_version()
+        cat.insert(spark, "s", cat.apply_mv(spark, "mv", {"src": df}),
+                   batch_id=0, app_id="mv")  # a replay commits nothing
+        assert cat.storage_for("s").current_version() == v
+        cat.execute("OPTIMIZE TABLE s FINAL", spark=spark)
+        (state,) = cat.query(spark, "SELECT t FROM s").collect()
+        return [(e["item"], e["ub"]) for e in state["t"]["tk"]], state["t"]["d"]
+
+    kept, floor = folded(64)
+    want = sorted(true.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert floor == 0 and kept == want
+
+    kept, floor = folded(4)
+    assert len(kept) == 4
+    for item, ub in kept:
+        assert true[item] <= ub, (item, true[item], ub)
+    assert floor > 0  # truncation really happened
+    heaviest = max(true.items(), key=lambda kv: (kv[1], kv[0]))[0]
+    assert true[heaviest] > floor and heaviest in dict(kept), (floor, kept)
 
 
 def test_param_validation_refuses_loudly(spark, ctx):
