@@ -3,7 +3,8 @@
 The reference pipeline: Debezium emits Avro change events to Kafka topic
 ``shop.public.users``; a ClickHouse Kafka-engine table consumes them, a
 materialized view projects/casts per block into a ReplacingMergeTree
-table (``/root/reference/README.md:126-230``). Here each hop is a pure
+table (``README.md:126-230``; the view runs verbatim
+through ``ch_ddl.ChDdlCatalog``). Here each hop is a pure
 ``DataFrame -> DataFrame`` function so the identical code runs under
 ``spark.read`` and ``spark.readStream`` (batch-first, streaming-second —
 the reference's snapshot-then-stream unification, README.md:137).
@@ -11,6 +12,5 @@ the reference's snapshot-then-stream unification, README.md:137).
 
 from postgre_to_clickhouse_spark.cdc.dedup import dedup_redelivery, latest
 from postgre_to_clickhouse_spark.cdc.envelope import unwrap
-from postgre_to_clickhouse_spark.cdc.transform import mv_users
 
-__all__ = ["unwrap", "mv_users", "dedup_redelivery", "latest"]
+__all__ = ["unwrap", "dedup_redelivery", "latest"]

@@ -1,24 +1,18 @@
-"""The reference's streaming materialized view, as a DataFrame transform.
+"""The reference MV's µs→s cast as a DataFrame column expression.
 
-``CREATE MATERIALIZED VIEW kafka_shop.consumer__users TO shop.users AS
-SELECT user_id, username, account_type, toDateTime(updated_at/1000000),
-toDateTime(created_at/1000000), _timestamp AS kafka_time, _offset AS
-kafka_offset`` (``/root/reference/README.md:212-230``).
-
-Covers SURVEY.md A12–A18: projection, aliasing, the µs→s arithmetic, the
-truncating timestamp cast, Kafka virtual columns, nullable propagation.
+The materialized view ``kafka_shop.consumer__users`` converts the
+Kafka table's epoch-microsecond columns with ``toDateTime(updated_at
+/ 1000000)`` (the reference ``README.md:212-230``); the view itself
+runs through ``ch_ddl.ChDdlCatalog``.
 
 Cast parity note (SURVEY.md §7.5.4): ClickHouse ``toDateTime(x/1000000)``
 on a UInt64 µs value floor-divides to epoch *seconds* — sub-second
 precision is truncated, not rounded. We reproduce with
 ``timestamp_seconds(floor(us / 1e6))``; golden tests pin it.
-
-Stateless map-only stage — fused into the scan at any scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -26,16 +20,3 @@ from pyspark.sql.types import LongType
 def us_to_timestamp(col: F.Column) -> F.Column:
     """Epoch-microseconds → second-precision timestamp (CH toDateTime parity)."""
     return F.timestamp_seconds(F.floor(col / F.lit(1_000_000)).cast(LongType()))
-
-
-def mv_users(df: DataFrame) -> DataFrame:
-    """Unwrapped users change rows + Kafka metadata → `shop.users` shape."""
-    return df.select(
-        F.col("user_id"),
-        F.col("username"),
-        F.col("account_type"),
-        us_to_timestamp(F.col("updated_at")).alias("updated_at"),
-        us_to_timestamp(F.col("created_at")).alias("created_at"),
-        F.col("kafka_timestamp").alias("kafka_time"),
-        F.col("kafka_offset"),
-    )

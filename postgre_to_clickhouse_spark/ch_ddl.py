@@ -13,9 +13,9 @@ unchanged — into the engine's objects:
 - ``CREATE TABLE ... ENGINE = MergeTree/ReplacingMergeTree`` → a
   :class:`ChTableSpec`: a Spark ``StructType`` (CH→Spark type map
   below), the ORDER BY sort key, and the engine's dedup semantics —
-  ReplacingMergeTree's sort-key collapse IS the engine's
-  ``dedup_redelivery`` operator (A19), and an explicit version column
-  (``ReplacingMergeTree(ver)``) additionally enables ``FINAL`` via
+  ReplacingMergeTree collapses sort-key duplicates within each
+  inserted block, the last row winning ties (A19), and an explicit
+  version column (``ReplacingMergeTree(ver)``) additionally enables ``FINAL`` via
   ``cdc.latest`` (A20);
 - ``CREATE TABLE ... ENGINE = Kafka SETTINGS ...`` → a source
   declaration: topic/broker/group/format captured for
@@ -26,6 +26,9 @@ unchanged — into the engine's objects:
   verbatim SELECT body compiled by :mod:`ch_select` when applied, plus
   a declared-schema conformance step (CH coerces inserted blocks to
   the target table's types; ``conform`` mirrors that cast);
+  :meth:`ChDdlCatalog.kafka_sink` runs every view reading a Kafka
+  table over each streamed block and inserts the results (the CDC
+  ingest path of both ``streaming.pipeline`` pipelines);
 - ``CREATE VIEW v AS SELECT ...`` (r14) → the ordinary View engine: a
   stored query expanded at READ time (views on views compose, cycles
   refuse loudly at read; DROP VIEW / DROP TABLE both detach it, and
@@ -82,7 +85,12 @@ from postgre_to_clickhouse_spark.ch_select import (
     ch_select,
 )
 
-__all__ = ["ChTableSpec", "ChMvSpec", "ChDdlCatalog"]
+__all__ = ["ChTableSpec", "ChMvSpec", "ChDdlCatalog", "KAFKA_VIRTUAL"]
+
+# Kafka metadata column of a decoded batch -> the Kafka engine's virtual
+# column an MV over a Kafka table reads it as
+KAFKA_VIRTUAL = {"kafka_offset": "_offset", "kafka_timestamp": "_timestamp",
+                 "kafka_partition": "_partition"}
 
 
 _SIMPLE_TYPES = {
@@ -660,7 +668,7 @@ class ChTableSpec:
     @property
     def dedup_key(self) -> tuple[str, ...]:
         """ReplacingMergeTree collapses rows with an identical ORDER BY
-        tuple — the engine's ``dedup_redelivery`` key (A19)."""
+        tuple (A19)."""
         if self.engine.upper() != "REPLACINGMERGETREE":
             raise ChSqlError(f"{self.engine} has no dedup semantics")
         return tuple(self.order_by)
@@ -671,8 +679,7 @@ class ChTableSpec:
         only when the RMT declares an explicit version column
         (``ReplacingMergeTree(ver)``); without one, CH keeps the last
         INSERTED row among sort-key duplicates (arrival order, not a
-        data column), which is ``dedup_redelivery`` territory, not a
-        deterministic latest-wins view.
+        data column), which is not a deterministic latest-wins view.
 
         CH dedups on the FULL sorting key: with
         ``ReplacingMergeTree(ver) ORDER BY (k, ver)`` rows differing
@@ -834,9 +841,10 @@ class ChDdlCatalog:
         # confs), so a write's session conf flips (session.micro_shape)
         # never reach another connection's plans; catalog methods take
         # the session to run on as their `spark` argument. Batch-id
-        # allocation takes a lock because duplicate ids would break
-        # versionless-RMT arrival tie-breaking. Concurrent COMMITS are
-        # safe: the manifest protocol lets exactly one writer create
+        # allocation takes a lock so concurrent wire INSERTs get
+        # distinct `sql{seq}` ids in their commit notes; the ids decide
+        # no row (insert breaks RMT ties inside one block). Concurrent
+        # COMMITS are safe: the manifest protocol lets exactly one writer create
         # each version, INSERT and TRUNCATE retry on the new snapshot,
         # and rewrites (OPTIMIZE FINAL, mutations, projection DDL) raise
         # CommitConflict with nothing committed. Concurrent DDL against
@@ -2349,13 +2357,14 @@ class ChDdlCatalog:
         conform the block to the declared schema (the cast CH applies
         on insert), then land it as immutable part files — the
         MergeTree ingest path, O(batch) regardless of table size.
-        ONLY a ReplacingMergeTree collapses within-batch exact
-        sort-key duplicates (its insert-block dedup); every other
-        engine keeps duplicate sort keys in the part — plain
-        MergeTree rows accumulate, SummingMergeTree and
-        AggregatingMergeTree rows fold at merge/read time, exactly
-        the CH contract (r11 fix: the dedup was wrongly applied to
-        all engines and silently dropped same-key MergeTree rows).
+        ONLY a ReplacingMergeTree collapses within-batch sort-key
+        duplicates (its insert-block dedup), by CH's rule: the
+        max-version row wins under ``ReplacingMergeTree(ver)``, and
+        among rows with an equal sort key (and equal version) the
+        one LAST in the block wins. Every other engine keeps
+        duplicate sort keys in the part — plain MergeTree rows
+        accumulate, SummingMergeTree and AggregatingMergeTree rows
+        fold at merge/read time, exactly the CH contract.
 
         ``app_id`` names the stream a foreachBatch insert belongs to;
         with it ``batch_id`` must be an int, and a batch whose id the
@@ -2378,19 +2387,15 @@ class ChDdlCatalog:
         t = self.storage_for(name)
         batch = spec.conform(df)
         if spec.engine.upper() == "REPLACINGMERGETREE":
-            from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest
+            from postgre_to_clickhouse_spark.cdc import latest
 
-            key = tuple(spec.order_by)
-            # r12: VERSIONED RMT — CH's insert-block dedup keeps the
-            # MAX-version row per sort key within the block (the
-            # version argument decides, not arrival order); the
-            # unversioned engine keeps a deterministic arbitrary row,
-            # the documented instance of CH's "last inserted"
-            # arrival-order contract
-            if spec.engine_args:
-                batch = latest(batch, key, (spec.engine_args[0],))
-            else:
-                batch = dedup_redelivery(batch, key, key)
+            # number the block's rows in block order before the dedup
+            # shuffle: after the version, the higher number wins
+            seq = "__ch_block_row"
+            batch = latest(
+                batch.withColumn(seq, F.monotonically_increasing_id()),
+                tuple(spec.order_by), (*spec.engine_args[:1], seq),
+            ).drop(seq)
         # r16: no touched-bucket discovery pass — an INSERT never reads
         # existing data, so which buckets the batch lands in is decided
         # by the hash write itself (empty partitions write no file).
@@ -2640,6 +2645,33 @@ class ChDdlCatalog:
             )
         target = self.tables.get(mv.target)
         return target.conform(out) if target is not None else out
+
+    def kafka_sink(self, kafka_table: str, app_id: str):
+        """The foreachBatch body that feeds the ``ENGINE = Kafka`` table
+        ``kafka_table`` — what CH does with each block the table
+        consumes. The batch's ``kafka_offset``, ``kafka_timestamp`` and
+        ``kafka_partition`` columns become the engine's virtual columns
+        ``_offset``, ``_timestamp`` and ``_partition``; every
+        materialized view whose FROM names the table runs over the
+        block, and :meth:`insert` lands each view's output in its target
+        tagged ``(app_id, batch_id)``, so a micro-batch replayed after a
+        restart commits nothing. A stream passes its checkpoint path as
+        ``app_id``. A Kafka table no view reads raises ChSqlError."""
+        spec = self.tables.get(kafka_table)
+        if spec is None or not spec.is_kafka_source:
+            raise ChSqlError(f"{kafka_table!r} is not a parsed ENGINE = Kafka table")
+        mvs = [mv for mv in self.mvs.values() if kafka_table in _table_refs(mv.select_sql)]
+        if not mvs:
+            raise ChSqlError(f"no materialized view reads {kafka_table!r}")
+
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            block = batch_df.withColumnsRenamed(KAFKA_VIRTUAL)
+            for mv in mvs:
+                out = self.apply_mv(spark, mv.name, {kafka_table: block})
+                self.insert(spark, mv.target, out, batch_id=batch_id, app_id=app_id)
+
+        return _apply
 
 
 def _split_statements(sql: str) -> list[list[str]]:

@@ -2231,11 +2231,22 @@ def _compile(spark: SparkSession, tokens: list[str], ctx: ChContext,
                 "LIMIT BY nondeterministic; this engine refuses instead)"
             )
         n, bycols = p.limit_by
+        # an ORDER BY / BY term the SELECT list does not output (CH
+        # takes `SELECT k ... ORDER BY k, off DESC LIMIT 1 BY k`) rides
+        # through the projection as a hidden column for the window
         inner_df = spark.sql(sel)
+        outs = inner_df.columns
+        terms = [re.sub(r"( (ASC|DESC|NULLS|FIRST|LAST))+$", "", o) for o in p.order_by]
+        hidden = {t: f"__ch_lb{i}" for i, t in enumerate(dict.fromkeys(terms + bycols))
+                  if not t.isdigit() and t.strip("`").lower() not in map(str.lower, outs)}
+        if hidden:
+            head = f"SELECT {'DISTINCT ' if p.distinct else ''}{cols}"
+            extra = "".join(f", {t} AS {a}" for t, a in hidden.items())
+            inner_df = spark.sql(head + extra + sel[len(head):])
         inner = _temp_view(inner_df, views, "__ch_lb")
-        keep = ", ".join(f"`{c}`" for c in inner_df.columns)
-        part = ", ".join(bycols)
-        order = ", ".join(p.order_by)
+        keep = ", ".join(f"`{c}`" for c in outs)
+        part = ", ".join(hidden.get(b, b) for b in bycols)
+        order = ", ".join(hidden.get(t, t) + o[len(t):] for o, t in zip(p.order_by, terms))
         sel = (
             f"SELECT {keep} FROM (SELECT *, row_number() OVER "
             f"(PARTITION BY {part} ORDER BY {order}) AS __ch_rn FROM {inner}) "

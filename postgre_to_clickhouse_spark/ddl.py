@@ -3,14 +3,10 @@ reference's CREATE DATABASE / CREATE TABLE / CREATE MATERIALIZED VIEW
 statements (``/root/reference/README.md:96,164-230``), executed against
 the Spark session catalog.
 
-The reference's three DDL objects map to:
-- `shop.users` final table        → a parquet-backed table (or view over
-  the ingested path);
-- `kafka_shop.kafka__users`       → the streaming source (no DDL needed;
-  Spark reads the topic/files directly);
-- the materialized view           → `users_latest`, a SQL VIEW wrapping
-  the engine's latest-wins semantics — queryable exactly like the
-  reference's endpoint (`SELECT * FROM shop_users`, README.md:240).
+The reference's three DDL objects themselves run verbatim through
+``ch_ddl.ChDdlCatalog``; this module registers the analytics tables as
+session views, serves the session catalog over Thrift, and applies the
+CH ALTER dialect to a manifest table.
 """
 
 from __future__ import annotations
@@ -18,29 +14,6 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from postgre_to_clickhouse_spark.session import configure
-
-
-def create_cdc_tables(spark: SparkSession, users_table_path: str) -> None:
-    """Register the reference's query surface in the session catalog:
-    `shop_users` (all version rows, A21) and `shop_users_latest`
-    (the FINAL/argMax view the README claims, A20) — both plain SQL
-    objects so any SQL client of this session sees them."""
-    configure(spark)
-    spark.sql("CREATE DATABASE IF NOT EXISTS shop")
-    spark.sql(f"""
-        CREATE OR REPLACE TEMPORARY VIEW shop_users
-        AS SELECT * FROM parquet.`{users_table_path}`
-    """)
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY VIEW shop_users_latest AS
-        SELECT user_id, username, account_type, updated_at, created_at,
-               kafka_time, kafka_offset
-        FROM (
-          SELECT *, row_number() OVER (PARTITION BY user_id
-                                       ORDER BY updated_at DESC, kafka_offset DESC) AS __rn
-          FROM shop_users
-        ) WHERE __rn = 1
-    """)
 
 
 def create_analytics_views(spark: SparkSession, sf_dir: str) -> None:
@@ -91,7 +64,7 @@ def serve_sql_endpoint(
     9004 (``/root/reference/clickhouse-server/config.d/config.xml:
     11-12,30``, ``README.md:156``); Spark's equivalent is the Thrift
     JDBC/ODBC server (HiveServer2 protocol) sharing THIS session's
-    catalog, so every view registered by :func:`create_cdc_tables` /
+    catalog, so every view registered by
     :func:`create_analytics_views` is queryable from beeline, JDBC, or
     ODBC. ``port=0`` picks a free port. Spark Connect
     (``spark.api.mode=connect`` at launch, gRPC port 15002) is the

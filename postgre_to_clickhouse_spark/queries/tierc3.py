@@ -181,14 +181,22 @@ def vocabulary_top_terms(spark, sf_dir):
 def cdc_users_pipeline(spark, sf_dir):
     """The reference's verified end-to-end behavior (README.md:237-243)
     as a driver-visible query: seed inserts + updates + redelivery +
-    out-of-order + delete fixture → unwrap → MV transform → redelivery
-    dedup → latest-wins. Deterministic fixture (no sf_dir dependency);
+    out-of-order + delete fixture → unwrap → the README's MV, parsed and
+    compiled by ``ch_ddl.ChDdlCatalog`` → redelivery dedup →
+    latest-wins. Deterministic fixture (no sf_dir dependency);
     golden-tested in tests/test_cdc_pipeline.py."""
     configure(spark)
-    from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest, mv_users, unwrap
+    from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest, unwrap
     from postgre_to_clickhouse_spark.cdc.fixtures import users_cdc_events
+    from postgre_to_clickhouse_spark.ch_ddl import KAFKA_VIRTUAL, ChDdlCatalog
+    from postgre_to_clickhouse_spark.queries.ch_dialect import _REF_DDL, _REF_MV_DDL
 
-    return latest(dedup_redelivery(mv_users(unwrap(users_cdc_events(spark))))).orderBy("user_id")
+    cat = ChDdlCatalog()
+    cat.execute(_REF_DDL)
+    cat.execute(_REF_MV_DDL)
+    src = unwrap(users_cdc_events(spark)).withColumnsRenamed(KAFKA_VIRTUAL)
+    out = cat.apply_mv(spark, "consumer__users", {"kafka__users": src})
+    return latest(dedup_redelivery(out)).orderBy("user_id")
 
 
 @register(
@@ -329,7 +337,7 @@ def manifest_evolution_read(spark, sf_dir):
     CDC-style part-ingest batches into a ``ManifestTable``, where the
     last two batches carry a NEW ``value_sq`` column (ClickHouse ALTER
     TABLE ADD COLUMN mid-stream). A compaction runs over the
-    mixed-schema parts, then ``read_latest`` resolves latest-wins per
+    mixed-schema parts, then ``cdc.latest`` resolves latest-wins per
     user. Rows whose winning version predates the migration read the
     new column as NULL — exactly the ALTER ADD COLUMN semantics. The
     oracle recomputes latest-wins + the migration boundary from raw
@@ -340,6 +348,7 @@ def manifest_evolution_read(spark, sf_dir):
     import shutil
     import tempfile
 
+    from postgre_to_clickhouse_spark.cdc import latest
     from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
 
     ev = _t(spark, sf_dir, "events").select(
@@ -369,10 +378,8 @@ def manifest_evolution_read(spark, sf_dir):
                     sort_key=("user_id", "updated_at"),
                     arrival=("kafka_offset",),
                 )
-        out = t.read_latest(
-            spark,
-            entity_key=("user_id",),
-            version_cols=("updated_at", "kafka_offset"),
+        out = latest(
+            t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
         ).select("user_id", "event_type", "value", "updated_at", "kafka_offset", "value_sq")
         return _pin(out)
     finally:
@@ -478,10 +485,13 @@ def uniq_mv_incremental(spark, sf_dir):
     distinct-user counts read back. The state is a Datasketches HLL
     sketch (lg_k 12) whose register union is commutative, associative
     and IDEMPOTENT, so replay, batch boundaries and folds are all
-    provably invisible; at the fixtures' cardinality the sketch sits
-    in its exact sparse regime, making the DuckDB exact-DISTINCT
-    oracle an equality check (the approximate regime's bounds are
-    pytest-gated in the uniq_merge_rollup family)."""
+    provably invisible. Up to sf0.01 (at most 150 distinct users
+    per event type) the sketch sits in its exact sparse regime,
+    making the DuckDB exact-DISTINCT oracle an equality check; at
+    sf0.1 every type has 1500 distinct users, past that regime, and
+    the estimate no longer equals the oracle (the approximate
+    regime's bounds are pytest-gated in the uniq_merge_rollup
+    family)."""
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id", "event_id")
     ddl = """
     CREATE TABLE states (event_type String, u AggregateFunction(uniq, Int64))

@@ -1,7 +1,8 @@
 """Manifest-committed MERGE table — the package's one commit protocol
-for stored tables (SURVEY.md A8): both streaming CDC pipelines
-(``streaming.pipeline``) sink through :meth:`ManifestTable.merge_upsert`,
-and the CH-DDL store keeps its MergeTree tables here.
+for stored tables (SURVEY.md A8): the CH-DDL store keeps its
+MergeTree tables here, and both streaming CDC pipelines
+(``streaming.pipeline``) commit into them through
+``ChDdlCatalog.kafka_sink`` and ``ChDdlCatalog.insert``.
 
 The reference's ClickHouse target is a ReplacingMergeTree
 (`/root/reference/README.md:176-177`): writers append, the engine
@@ -12,7 +13,7 @@ formats share, dependency-free:
 
 - **Immutable data files** under ``data/``, each owned by exactly one
   key-hash bucket (name-encoded). Files are never modified or
-  overwritten — a MERGE writes NEW files for the touched buckets only.
+  overwritten — a mutation writes NEW files for the touched buckets only.
 - **Versioned manifests** under ``_manifests/v{N}.json`` listing the
   files that make up that snapshot (plus lineage metadata). Table
   metadata rides in the same manifest: the recorded file schemas and
@@ -30,9 +31,6 @@ formats share, dependency-free:
   fully intact and merely orphans data files and a temp manifest,
   which :meth:`ManifestTable.vacuum` reclaims. Readers always see a
   complete snapshot — no half-written table, ever.
-- **Idempotent MERGE**: last-wins dedup on (sort_key, arrival) is
-  deterministic, so replaying a micro-batch after a crash commits a
-  snapshot with identical content.
 - **Idempotent appends** (Delta Lake's transaction identifiers): each
   manifest carries ``txns``, ``{app_id: last batch_id}``, forward
   from its base on every commit. An append tagged ``(app_id,
@@ -41,7 +39,7 @@ formats share, dependency-free:
   a replayed foreachBatch commits nothing. An untagged append never
   skips, and a batch that writes no file commits nothing.
 
-Scale: a batch touching b of ``n_buckets`` buckets reads and rewrites
+Scale: a mutation touching b of ``n_buckets`` buckets reads and rewrites
 only those buckets' files (manifest-level pruning — the untouched
 files are carried into the new manifest by reference). The manifest
 itself is O(files), kept in one JSON per version like Delta's
@@ -795,7 +793,7 @@ class ManifestTable:
         vacuum; retained versions keep the definition, so time-travel
         reads of them still use the projection). Dropping the last
         projection re-enables the bucket-scoped mutation paths
-        (merge_upsert / delete_where)."""
+        (update_where / delete_where)."""
         m = self.current_manifest()
         projs = dict(m.get("projections", {}))
         if projs.pop(name, None) is None:
@@ -1046,14 +1044,6 @@ class ManifestTable:
             return self._read_entries(spark, base, m).limit(0)
         return self._read_entries(spark, files, m)
 
-    def read_latest(
-        self,
-        spark: SparkSession,
-        entity_key=("user_id",),
-        version_cols=("updated_at", "kafka_offset"),
-    ) -> DataFrame:
-        return latest(self.read(spark), entity_key, version_cols)
-
     # -- write path ----------------------------------------------------------
     def _bucket_of(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
@@ -1161,73 +1151,14 @@ class ManifestTable:
             df.unpersist()
         return [{**f, "part": pid} for f in base] + sort_out + agg_out
 
-    def merge_upsert(self, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",)):
-        """foreachBatch body: transactional last-wins MERGE.
-
-        Reads ONLY the touched buckets' current files, merges with the
-        deduped batch, writes new files for those buckets, and commits a
-        manifest carrying every untouched file forward by reference.
-        The manifest's creation is the single atomic commit point; a
-        batch whose base another writer committed over first raises
-        :class:`CommitConflict` and commits nothing. A batch whose base
-        declares projections is refused before any work.
-        """
-
-        def _apply(batch_df: DataFrame, batch_id: int) -> None:
-            m = self.current_manifest()
-            if m.get("projections"):
-                raise NotImplementedError(
-                    "merge_upsert on a table with projections is not supported: "
-                    "rewriting touched BUCKETS would strand other buckets' rows "
-                    "inside the consumed parts' projection files. Use the "
-                    "part-based maintenance path instead (append_parts + compact "
-                    "— how ClickHouse itself maintains projections: per-part "
-                    "data, merges rebuild whole parts)."
-                )
-            spark = batch_df.sparkSession
-            # the deduped batch feeds BOTH the touched-bucket discovery
-            # and the merged write — pin it once (r16). r17: register
-            # the cache under micro_shape (see _write_part) so the
-            # batch-bounded dedup exchange is compiled narrow.
-            with _micro_shape(spark):
-                batch = dedup_redelivery(batch_df, sort_key, arrival).persist()
-            with_bucket = batch.withColumn("__bucket", self._bucket_of(F.col(self.key_col)))
-            touched = sorted(
-                r["__bucket"] for r in with_bucket.select("__bucket").distinct().collect()
-            )  # bounded by n_buckets — a layout constant
-            if not touched:  # an empty batch writes and commits nothing
-                batch.unpersist()
-                return
-            touched_files = [f for f in m["files"] if f["bucket"] in touched]
-            kept_files = [f for f in m["files"] if f["bucket"] not in touched]
-            if touched_files:
-                existing = self._read_entries(spark, touched_files, m)
-                # allowMissingColumns = schema evolution (ClickHouse ALTER ADD
-                # COLUMN / Avro evolved-field semantics): a batch carrying a NEW
-                # column widens the table, old rows read back as NULL; a batch
-                # missing an old column fills NULL for its own rows
-                merged = existing.unionByName(batch, allowMissingColumns=True)
-            else:
-                merged = batch
-            merged = dedup_redelivery(merged, sort_key, arrival)
-            try:
-                new_files = self._write_bucket_files(merged, touched)
-            finally:
-                batch.unpersist()
-            self._commit(m, kept_files + new_files, note=f"merge batch_id={batch_id}")
-
-        return _apply
-
     def append_parts(self, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",)):
         """foreachBatch body: ClickHouse-style PART ingest.
 
         This is how a MergeTree actually ingests: each batch lands as
         new immutable part files — NO read of existing data, so write
-        cost is O(batch) regardless of table size (``merge_upsert``
-        pays a read-merge-write of every touched bucket per batch,
-        which is the right trade only for small batch rates). Version
-        resolution is deferred: ``read_latest`` collapses at query time
-        (ReplacingMergeTree ``FINAL``), and :meth:`compact` folds parts
+        cost is O(batch) regardless of table size. Version resolution
+        is deferred: ``cdc.latest`` over :meth:`read` collapses at
+        query time (ReplacingMergeTree ``FINAL``), and :meth:`compact` folds parts
         together in the background exactly like the engine's merges.
         Within-batch redeliveries are still deduped before the write —
         that state is batch-bounded. Returns the version the batch
@@ -1384,8 +1315,8 @@ class ManifestTable:
             raise NotImplementedError(
                 "delete_where on a table with projections is not supported: "
                 "bucket-scoped rewrites would strand the consumed parts' "
-                "projection files (see merge_upsert). Drop the projection "
-                "first, delete, then re-add (CH DROP/MATERIALIZE PROJECTION)."
+                "projection files. Drop the projection first, delete, then "
+                "re-add (CH DROP/MATERIALIZE PROJECTION)."
             )
         if not m["files"]:
             return self.current_version()

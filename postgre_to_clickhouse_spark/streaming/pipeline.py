@@ -2,24 +2,24 @@
 
 Source options:
 - file stream of Debezium-shaped JSON events (tests / fixture replay —
-  stands in for the Kafka topic exactly like the reference's seed data);
+  stands in for the Kafka topic exactly like the reference's seed data),
+  flattened by ``cdc.unwrap``;
 - Kafka-shaped parquet of Confluent-framed Avro values
   (:func:`run_pipeline_avro_frames`), decoded by the package's one
   Confluent decoder;
 - Kafka (``streaming.kafka``) when the connector jar + broker exist.
 
-The transform chain is the *batch* operators unchanged (unwrap →
-mv_users) — batch-first design means streaming reuses them verbatim.
-The sink is the ``foreachBatch`` body the caller passes, normally
-``sinks.manifest.ManifestTable.merge_upsert()``: per-batch redelivery
-dedup (A19), a touched-bucket read-merge-write, and one atomic commit
-(creating the next manifest version). ``ManifestTable.read_latest`` is
-the ``latest`` view (A20) computed at read time.
+Both pipelines feed a ``ChDdlCatalog``'s ``ENGINE = Kafka`` table
+through :meth:`ch_ddl.ChDdlCatalog.kafka_sink`: each micro-batch runs
+the materialized views that read the table (the reference's verbatim
+MV, README.md:212-230) and commits their output through
+``ChDdlCatalog.insert`` into the targets (A12–A19). Latest-wins is
+read back with ``SELECT ... FINAL`` or ``LIMIT 1 BY`` (A20).
 
-Exactly-once posture: the checkpoint replays an uncommitted
-micro-batch, and the replay converges because the merge is
-deterministic; a crash before the manifest commit leaves the previous
-snapshot intact.
+Exactly-once posture: the checkpoint path is the sink's ``app_id``.
+A micro-batch replayed after a restart carries an id the target's
+manifest ``txns`` record already holds and commits nothing; a crash
+before the manifest commit leaves the previous snapshot intact.
 """
 
 from __future__ import annotations
@@ -30,29 +30,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
+from postgre_to_clickhouse_spark.cdc import unwrap
 from postgre_to_clickhouse_spark.cdc.schemas import KAFKA_CDC_RECORD
-
-Sink = Callable[[DataFrame, int], None]
-
-
-def read_json_event_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-based change stream: one JSON event per line, shaped like
-    KAFKA_CDC_RECORD (the Kafka-topic stand-in for tests/replay)."""
-    reader = spark.readStream.schema(KAFKA_CDC_RECORD).option("multiLine", "false")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
-
-
-def transform(stream_df: DataFrame) -> DataFrame:
-    """The standing query of the materialized view — identical code for
-    batch and streaming inputs (A12–A18)."""
-    return mv_users(unwrap(stream_df))
 
 
 def write_events_as_json(events: DataFrame, path: str, n_files: int = 1) -> None:
@@ -69,11 +48,20 @@ def write_events_as_json(events: DataFrame, path: str, n_files: int = 1) -> None
                 f.write(json.dumps(r) + "\n")
 
 
-def _start(stream: DataFrame, sink: Sink, checkpoint_path: str, available_now: bool):
-    """Run ``sink`` on every micro-batch of ``stream``.
+def _start(stream: DataFrame, catalog, kafka_table: str, checkpoint_path: str,
+           available_now: bool, decode: Callable[[DataFrame], DataFrame]):
+    """Feed every micro-batch of ``stream``, after ``decode``, to
+    ``catalog.kafka_sink(kafka_table, app_id=checkpoint_path)``. A file
+    stream does not keep the topic's order inside a micro-batch (Spark
+    packs files largest first), so each ``decode`` first puts its batch
+    back in offset order, the order a Kafka consumer hands CH its rows;
+    the last row of a block wins a ReplacingMergeTree tie.
     ``available_now=True`` drains the source and stops (test mode /
     backfill); otherwise runs continuous micro-batches (A24)."""
-    writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_path)
+    sink = catalog.kafka_sink(kafka_table, checkpoint_path)
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: sink(decode(batch_df), batch_id)
+    ).option("checkpointLocation", checkpoint_path)
     if available_now:
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
@@ -84,20 +72,25 @@ def _start(stream: DataFrame, sink: Sink, checkpoint_path: str, available_now: b
 def run_pipeline(
     spark: SparkSession,
     source_path: str,
-    sink: Sink,
+    catalog,
+    kafka_table: str,
     checkpoint_path: str,
     available_now: bool = True,
 ):
-    """End-to-end: JSON file stream → unwrap → MV transform → ``sink``
-    (the foreachBatch body, e.g. ``ManifestTable.merge_upsert()``)."""
-    stream = transform(read_json_event_stream(spark, source_path))
-    return _start(stream, sink, checkpoint_path, available_now)
+    """End-to-end: a file stream of JSON change events, one per line
+    and shaped like ``KAFKA_CDC_RECORD`` (the Kafka-topic stand-in for
+    tests and replay) → ``unwrap`` → the Kafka table ``kafka_table`` of
+    ``catalog`` (its MVs, then their targets)."""
+    stream = spark.readStream.schema(KAFKA_CDC_RECORD).json(source_path)
+    return _start(stream, catalog, kafka_table, checkpoint_path, available_now,
+                  lambda df: unwrap(df.orderBy("kafka_offset")))
 
 
 def run_pipeline_avro_frames(
     spark: SparkSession,
     frames_path: str,
-    sink: Sink,
+    catalog,
+    kafka_table: str,
     checkpoint_path: str,
     schemas_by_id: dict[int, str],
     reader_schema_json: str,
@@ -109,20 +102,17 @@ def run_pipeline_avro_frames(
     resolves to one reader schema
     (``cdc.avro_py.decode_confluent_frames``, which carries ``offset``
     and ``timestamp`` through as ``kafka_offset``/``kafka_timestamp``)
-    and goes to ``sink``. With ``ManifestTable.merge_upsert()`` equal
-    versions tie-break on the Kafka offset, as in the JSON pipeline. One
-    streaming query keeps ingesting across a CDC schema migration
-    mid-topic — the registry-compatibility behavior the reference
-    delegates to Confluent SR + AvroConfluent
-    (``/root/reference/README.md:189-202,260``).
+    and feeds the Kafka table ``kafka_table`` of ``catalog``, exactly
+    as the JSON pipeline does. One streaming query keeps ingesting
+    across a CDC schema migration mid-topic — the registry-compatibility
+    behavior the reference delegates to Confluent SR + AvroConfluent
+    (the reference ``README.md:189-202,260``).
     """
     from postgre_to_clickhouse_spark.cdc.avro_py import decode_confluent_frames
 
     stream = spark.readStream.schema("value binary, offset long, timestamp timestamp").parquet(
         frames_path
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(decode_confluent_frames(batch_df, schemas_by_id, reader_schema_json), batch_id)
-
-    return _start(stream, _apply, checkpoint_path, available_now)
+    return _start(stream, catalog, kafka_table, checkpoint_path, available_now,
+                  lambda df: decode_confluent_frames(df.orderBy("offset"), schemas_by_id,
+                                                     reader_schema_json))

@@ -165,7 +165,8 @@ def dedup_stream_ttl(
     Emits the min-``arrival_col`` row the first time a key appears;
     a redelivery after TTL expiry re-emits (bounded-state tradeoff,
     identical to the watermark variant's) — the downstream
-    ``ManifestTable.merge_upsert`` redelivery dedup absorbs it.
+    ReplacingMergeTree (``ChDdlCatalog.insert``, then ``FINAL``)
+    collapses it on the sort key.
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

@@ -12,17 +12,22 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest, mv_users, unwrap
+from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest, unwrap
 from postgre_to_clickhouse_spark.cdc.fixtures import (
     GOLDEN_ALL_VERSIONS,
     GOLDEN_LATEST,
     users_cdc_events,
 )
 from postgre_to_clickhouse_spark.cdc.schemas import USERS_FINAL
+from postgre_to_clickhouse_spark.ch_ddl import KAFKA_VIRTUAL
+from tests.test_ch_ddl import readme_catalog
 
 
-def _pipeline(spark):
-    return mv_users(unwrap(users_cdc_events(spark)))
+def _pipeline(spark, events=None):
+    """The change events through the README's parsed MV."""
+    events = users_cdc_events(spark) if events is None else events
+    src = unwrap(events).withColumnsRenamed(KAFKA_VIRTUAL)
+    return readme_catalog().apply_mv(spark, "consumer__users", {"kafka__users": src})
 
 
 def test_unwrap_drops_deletes_and_flattens(spark):
@@ -42,7 +47,9 @@ def test_unwrap_keep_deletes_surfaces_before_image(spark):
 def test_mv_schema_matches_final_table(spark):
     out = _pipeline(spark)
     assert [f.name for f in out.schema.fields] == [f.name for f in USERS_FINAL.fields]
-    assert [f.dataType for f in out.schema.fields] == [f.dataType for f in USERS_FINAL.fields]
+    # conformed to the parsed shop.users: UInt32 user_id widens to bigint
+    want = readme_catalog().tables["users"].schema
+    assert [f.dataType for f in out.schema.fields] == [f.dataType for f in want.fields]
 
 
 def test_microsecond_truncation_cast(spark):
@@ -71,6 +78,6 @@ def test_latest_golden_despite_out_of_order_arrival(spark):
 def test_batch_pipeline_is_order_insensitive(spark):
     # Same events, reversed arrival order → identical latest() state.
     shuffled = users_cdc_events(spark).orderBy(F.col("kafka_offset").desc())
-    got = latest(dedup_redelivery(mv_users(unwrap(shuffled)))).collect()
+    got = latest(dedup_redelivery(_pipeline(spark, shuffled))).collect()
     as_map = {r.user_id: (r.username, r.account_type, r.updated_at.strftime("%Y-%m-%d %H:%M:%S")) for r in got}
     assert as_map == GOLDEN_LATEST

@@ -27,6 +27,10 @@ ENGINE = ReplacingMergeTree
 ORDER BY (user_id, updated_at);
 """
 
+# the same target with its version column declared, so FINAL applies
+_USERS_VER_DDL = _USERS_DDL.replace(
+    "ENGINE = ReplacingMergeTree\n", "ENGINE = ReplacingMergeTree(updated_at)\n")
+
 _KAFKA_DDL = """
 CREATE TABLE kafka_shop.kafka__users
 (
@@ -67,15 +71,18 @@ FROM kafka_shop.kafka__users;
 """
 
 
+def readme_catalog(root=None, users=_USERS_DDL, kafka=_KAFKA_DDL, mv=_MV_DDL):
+    """A catalog provisioned with the README's DDL (storage-backed when
+    ``root`` is given)."""
+    c = ChDdlCatalog(storage_root=root)
+    for stmt in ("CREATE DATABASE shop;", "CREATE DATABASE kafka_shop;", users, kafka, mv):
+        c.execute(stmt)
+    return c
+
+
 @pytest.fixture()
 def cat():
-    c = ChDdlCatalog()
-    c.execute("CREATE DATABASE shop;")
-    c.execute("CREATE DATABASE kafka_shop;")
-    c.execute(_USERS_DDL)
-    c.execute(_KAFKA_DDL)
-    c.execute(_MV_DDL)
-    return c
+    return readme_catalog()
 
 
 def _sources(spark):
@@ -89,6 +96,12 @@ def _sources(spark):
             .withColumnRenamed("kafka_offset", "_offset")
         )
     }
+
+
+def readme_users(spark):
+    """The CDC fixture through the README's parsed MV, conformed to
+    ``shop.users``: every unwrapped change row, redeliveries included."""
+    return readme_catalog().apply_mv(spark, "consumer__users", _sources(spark))
 
 
 def test_parse_reference_ddl_verbatim(cat):
@@ -690,6 +703,63 @@ def test_optimize_final_folds_aggregate_states(spark, tmp_path):
     assert c.query(
         spark, "SELECT count() AS c FROM stats").collect()[0]["c"] == 2
     assert sorted(map(tuple, c.query(spark, q).collect())) == before
+
+
+@pytest.mark.parametrize("via", ["dataframe", "JSONEachRow"])
+@pytest.mark.parametrize("engine", ["ReplacingMergeTree", "ReplacingMergeTree(ver)"])
+def test_rmt_insert_block_last_row_wins_ties(spark, tmp_path, engine, via):
+    """CH's insert-block dedup: among rows with an equal sorting key
+    (and, under RMT(ver), an equal version) the row inserted last wins;
+    a higher version still beats a later row."""
+    import json
+
+    c = ChDdlCatalog(storage_root=str(tmp_path))
+    c.execute(f"CREATE TABLE t (k UInt32, ver UInt32, v String) ENGINE = {engine} ORDER BY (k)")
+    rows = [(1, 5, "first"), (1, 5, "second"), (2, 6, "newer"), (2, 5, "later")]
+    if via == "dataframe":
+        c.insert(spark, "t", spark.createDataFrame(rows, "k long, ver long, v string"))
+    else:
+        c.insert_json_rows(spark, "t", [json.dumps(dict(zip(("k", "ver", "v"), r))) for r in rows])
+    got = dict(map(tuple, c.query(spark, "SELECT k, v FROM t").collect()))
+    assert got == {1: "second", 2: "newer" if engine.endswith("(ver)") else "later"}
+
+
+def test_kafka_sink_feeds_every_mv_and_skips_replays(spark, tmp_path):
+    """One Kafka table feeds two MVs: the README's users RMT and a
+    SummingMergeTree count per account_type. Replaying a batch id
+    commits nothing on either target, so the counts are not doubled."""
+    from postgre_to_clickhouse_spark.cdc import unwrap
+    from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_ALL_VERSIONS, users_cdc_events
+
+    c = readme_catalog(str(tmp_path))
+    c.execute("CREATE TABLE shop.type_counts (account_type String, n UInt64) "
+              "ENGINE = SummingMergeTree ORDER BY (account_type);")
+    c.execute("CREATE MATERIALIZED VIEW kafka_shop.consumer__type_counts TO shop.type_counts "
+              "AS SELECT account_type, count() AS n FROM kafka_shop.kafka__users "
+              "GROUP BY account_type;")
+    sink = c.kafka_sink("kafka__users", "stream-a")
+    batch = unwrap(users_cdc_events(spark))
+    sink(batch, 0)
+    targets = ("users", "type_counts")
+    versions = [c.storage_for(n).current_version() for n in targets]
+    sink(batch, 0)  # the replay a restart makes
+    assert [c.storage_for(n).current_version() for n in targets] == versions
+
+    users = c.query(spark, "SELECT user_id, username, account_type, updated_at FROM shop.users")
+    assert {(r.user_id, r.updated_at.strftime("%Y-%m-%d %H:%M:%S")): (r.username, r.account_type)
+            for r in users.collect()} == GOLDEN_ALL_VERSIONS
+    counts = c.query(spark, "SELECT account_type, sum(n) AS n FROM shop.type_counts "
+                            "GROUP BY account_type")
+    assert dict(map(tuple, counts.collect())) == {"Gold": 2, "Silver": 3, "Bronze": 2}
+
+
+def test_kafka_sink_refuses_a_kafka_table_no_mv_reads(tmp_path):
+    c = readme_catalog(str(tmp_path))
+    c.execute(_KAFKA_DDL.replace("kafka__users", "kafka__orders"))
+    with pytest.raises(ChSqlError, match="no materialized view reads"):
+        c.kafka_sink("kafka__orders", "stream-a")
+    with pytest.raises(ChSqlError, match="not a parsed ENGINE = Kafka table"):
+        c.kafka_sink("users", "stream-a")
 
 
 def test_summing_merge_tree_optimize_final(spark, tmp_path):

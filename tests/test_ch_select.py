@@ -93,6 +93,20 @@ def test_limit_by_caps_rows_per_key_and_orders(spark, ctx):
         assert {r["event_id"] for r in rows} == {r["event_id"] for r in top}
 
 
+def test_limit_by_orders_and_groups_on_unselected_columns(spark):
+    """CH lets ORDER BY and BY name columns the SELECT list drops:
+    the latest row per key by a column that is not returned."""
+    t = spark.createDataFrame(
+        [(1, "a", 7, "x"), (1, "b", 9, "x"), (2, "c", 3, "y"), (2, "d", 1, "y")],
+        "k long, name string, off long, grp string")
+    ctx = ChContext({"t": t})
+    got = ch_select(spark, "SELECT k, name FROM t ORDER BY k, off DESC LIMIT 1 BY k", ctx)
+    assert got.columns == ["k", "name"]
+    assert [tuple(r) for r in got.collect()] == [(1, "b"), (2, "c")]
+    by_hidden = ch_select(spark, "SELECT name FROM t ORDER BY off LIMIT 1 BY grp", ctx)
+    assert [r.name for r in by_hidden.collect()] == ["d", "a"]
+
+
 def test_sample_equals_operator(spark, ctx):
     from postgre_to_clickhouse_spark.operators.sampling import sample_consistent
 
@@ -1058,17 +1072,23 @@ def _mv_source(spark):
 
 def test_reference_mv_text_verbatim(spark):
     """The EXACT SELECT body of the reference's materialized view
-    (README.md:212-230) compiles through the front end and equals the
-    native mv_users transform — including the µs-truncating
+    (README.md:212-230) compiles through the front end, equals the MV
+    the DDL catalog parses from the README, and reproduces the
+    hand-computed golden — including the µs-truncating
     toDateTime(x / 1000000) cast (CH DateTime is second-precision)."""
-    from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
-    from postgre_to_clickhouse_spark.cdc.fixtures import users_cdc_events
+    from postgre_to_clickhouse_spark.cdc import dedup_redelivery
+    from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_ALL_VERSIONS
+    from tests.test_ch_ddl import readme_users
 
     got = ch_select(spark, _REFERENCE_MV_TEXT,
                     ChContext({"kafka__users": _mv_source(spark)}))
-    want = mv_users(unwrap(users_cdc_events(spark)))
+    want = readme_users(spark)
     assert got.columns == want.columns
     assert _rows(got) == _rows(want)
+    assert {
+        (r.user_id, r.updated_at.strftime("%Y-%m-%d %H:%M:%S")): (r.username, r.account_type)
+        for r in dedup_redelivery(got).collect()
+    } == GOLDEN_ALL_VERSIONS
     # the truncation actually bites: john's seed row has .123456 µs
     john = [r for r in got.collect()
             if r["user_id"] == 1 and r["kafka_offset"] == 0][0]

@@ -5,27 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from postgre_to_clickhouse_spark.cdc import dedup_redelivery, mv_users, unwrap
-from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
-from postgre_to_clickhouse_spark.ddl import create_analytics_views, create_cdc_tables
+from postgre_to_clickhouse_spark.ddl import create_analytics_views
 from postgre_to_clickhouse_spark.sources.quarantine import read_json_with_quarantine
 from tests.conftest import SF_SMALL
-
-
-def test_cdc_ddl_surface(spark, tmp_path):
-    """The reference's verify query (`SELECT * FROM shop.users`,
-    README.md:240) and the claimed latest-wins semantics, both as plain
-    SQL over the session catalog."""
-    path = str(tmp_path / "users")
-    dedup_redelivery(mv_users(unwrap(users_cdc_events(spark)))).write.parquet(path)
-    create_cdc_tables(spark, path)
-
-    assert spark.sql("SELECT * FROM shop_users").count() == 6  # all version rows
-    got = {
-        r.user_id: (r.username, r.account_type, r.updated_at.strftime("%Y-%m-%d %H:%M:%S"))
-        for r in spark.sql("SELECT * FROM shop_users_latest").collect()
-    }
-    assert got == GOLDEN_LATEST
 
 
 def test_analytics_views_sql_endpoint(spark):

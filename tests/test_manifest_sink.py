@@ -1,7 +1,7 @@
-"""Manifest-committed MERGE sink (sinks/manifest.py): golden
+"""Manifest-committed MERGE table (sinks/manifest.py): golden
 convergence, snapshot isolation under crashes at every protocol step,
 bucket-level pruning, and vacuum. The streaming pipelines' restart and
-redelivery runs through this sink are in ``test_streaming.py``."""
+redelivery runs into these tables are in ``test_streaming.py``."""
 
 from __future__ import annotations
 
@@ -10,9 +10,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from postgre_to_clickhouse_spark.cdc import mv_users, unwrap
-from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
+from postgre_to_clickhouse_spark.cdc import latest
+from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_ALL_VERSIONS, GOLDEN_LATEST
 from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
+from tests.test_ch_ddl import _USERS_VER_DDL, readme_catalog, readme_users
 
 
 def _latest_map(df):
@@ -23,59 +24,44 @@ def _latest_map(df):
 
 
 def _full(spark):
-    return mv_users(unwrap(users_cdc_events(spark)))
+    return readme_users(spark)
 
 
 def test_merge_converges_to_golden_and_is_idempotent(spark, tmp_path):
-    t = ManifestTable(str(tmp_path / "t"))
-    sink = t.merge_upsert()
-    sink(_full(spark), 0)
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
-    v1, n1 = t.current_version(), t.read(spark).count()
-    sink(_full(spark), 1)  # full redelivery → new version, identical content
+    """The README's ReplacingMergeTree(updated_at) through
+    ``ChDdlCatalog.insert``: FINAL reads the golden, a replayed
+    ``(app_id, batch_id)`` commits nothing, and a full redelivery under
+    a new id adds a version but leaves FINAL unchanged."""
+    cat = readme_catalog(str(tmp_path), _USERS_VER_DDL)
+    t = cat.storage_for("users")
+    final = "SELECT user_id, username, account_type, updated_at FROM shop.users FINAL"
+
+    def final_map():
+        return {
+            (r.user_id, r.updated_at.strftime("%Y-%m-%d %H:%M:%S")): (r.username, r.account_type)
+            for r in cat.query(spark, final).collect()
+        }
+
+    cat.insert(spark, "users", _full(spark), batch_id=0, app_id="s")
+    assert final_map() == GOLDEN_ALL_VERSIONS
+    v1 = t.current_version()
+    cat.insert(spark, "users", _full(spark), batch_id=0, app_id="s")  # replay
+    assert t.current_version() == v1
+    cat.insert(spark, "users", _full(spark), batch_id=1, app_id="s")  # redelivery
     assert t.current_version() == v1 + 1
-    assert t.read(spark).count() == n1
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert final_map() == GOLDEN_ALL_VERSIONS
 
 
-def test_empty_merge_upsert_batch_commits_nothing(spark, tmp_path):
+def test_empty_append_batch_commits_nothing(spark, tmp_path):
     """A micro-batch left empty (e.g. only deletes after ``unwrap``)
-    touches no bucket, so it writes no file and makes no version."""
+    writes no file and makes no version."""
     t = ManifestTable(str(tmp_path / "t"))
-    sink = t.merge_upsert()
+    sink = t.append_parts()
     sink(_full(spark), 0)
     v = t.current_version()
     sink(_full(spark).limit(0), 1)
     assert t.current_version() == v
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
-
-
-def test_merge_prunes_untouched_buckets(spark, tmp_path):
-    """A single-key batch must carry every untouched bucket's files into
-    the new manifest BY REFERENCE (same immutable file names)."""
-    t = ManifestTable(str(tmp_path / "t"))
-    sink = t.merge_upsert()
-    full = _full(spark)
-    sink(full, 0)
-    before = {f["name"]: f["bucket"] for f in t.current_manifest()["files"]}
-
-    one = full.orderBy(F.col("kafka_offset").desc()).limit(1)
-    key = one.collect()[0].user_id
-    sink(one, 1)
-    after = {f["name"]: f["bucket"] for f in t.current_manifest()["files"]}
-
-    touched_bucket = (
-        ManifestTable(str(tmp_path / "t")).read(spark)
-        .filter(F.col("user_id") == key)
-        .select(F.pmod(F.xxhash64(F.col("user_id")), F.lit(16)).cast("int"))
-        .distinct()
-        .collect()[0][0]
-    )
-    untouched_before = {n for n, b in before.items() if b != touched_bucket}
-    untouched_after = {n for n, b in after.items() if b != touched_bucket}
-    assert untouched_before, "fixture keys all hashed to one bucket — raise n_buckets"
-    assert untouched_before == untouched_after  # carried by reference, never rewritten
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
 
 
 def test_crash_before_commit_link_preserves_snapshot(spark, tmp_path):
@@ -84,7 +70,7 @@ def test_crash_before_commit_link_preserves_snapshot(spark, tmp_path):
     readers still see the old snapshot; replaying the batch converges;
     vacuum reclaims the orphan data files and the temp manifest."""
     t = ManifestTable(str(tmp_path / "t"))
-    sink = t.merge_upsert()
+    sink = t.append_parts()
     sink(_full(spark), 0)
     v_before = t.current_version()
     files_before = {f["name"] for f in t.current_manifest()["files"]}
@@ -96,13 +82,13 @@ def test_crash_before_commit_link_preserves_snapshot(spark, tmp_path):
 
     # reader is unaffected — no v{N+1}.json, so the old snapshot is current
     assert t.current_version() == v_before
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
 
     # replay commits the very version the crash never linked; vacuum
     # removes the leavings
     sink(_full(spark), 1)
     assert t.current_version() == v_before + 1
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
     removed = t.vacuum(keep_versions=1)
     assert {o["name"] for o in orphans} <= set(removed) | files_before
     manifests = set(os.listdir(os.path.join(t.path, "_manifests")))
@@ -110,14 +96,14 @@ def test_crash_before_commit_link_preserves_snapshot(spark, tmp_path):
     data_dir = os.path.join(t.path, "data")
     live = {f["name"] for f in t.current_manifest()["files"]}
     assert live <= set(os.listdir(data_dir))
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST  # still readable post-vacuum
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST  # still readable post-vacuum
 
 
 def test_time_travel_reads_retained_versions(spark, tmp_path):
     """VERSION AS OF semantics: every retained snapshot reads back
     exactly as committed, even after later merges change the table."""
     t = ManifestTable(str(tmp_path / "t"))
-    sink = t.merge_upsert()
+    sink = t.append_parts()
     full = _full(spark)
     first = full.orderBy("kafka_offset").limit(3)
     sink(first, 0)
@@ -127,7 +113,7 @@ def test_time_travel_reads_retained_versions(spark, tmp_path):
     # the old snapshot is unchanged; the new one differs
     assert sorted(map(tuple, t.read(spark, version=0).collect())) == v0_rows
     assert t.read(spark).count() >= t.read(spark, version=0).count()
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -157,26 +143,26 @@ def test_compact_reduces_files_preserves_content(spark, tmp_path):
         per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
     assert all(n == 1 for n in per_bucket.values())
     assert _multiset(t.read(spark)) == before  # byte-level content preserved
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
     # idempotent: nothing left to compact -> version unchanged
     assert t.compact(spark) == v
 
 
 def test_compact_final_collapses_to_latest(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "t"), n_buckets=4)
-    t.merge_upsert()(_full(spark), 0)
-    latest_before = _latest_map(t.read_latest(spark))
+    t.append_parts()(_full(spark), 0)
+    latest_before = _latest_map(latest(t.read(spark)))
     raw_before = t.read(spark).count()
     v = t.compact(spark, final=True)
     assert v == t.current_version()
     # FINAL == ReplacingMergeTree OPTIMIZE FINAL: history collapsed
     assert t.read(spark).count() == len(GOLDEN_LATEST) < raw_before
-    assert _latest_map(t.read_latest(spark)) == latest_before == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == latest_before == GOLDEN_LATEST
 
 
 def test_ttl_delete_is_transactional_and_pruned(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "t"), n_buckets=4)
-    t.merge_upsert()(_full(spark), 0)
+    t.append_parts()(_full(spark), 0)
     v0 = t.current_version()
     rows = t.read(spark).select("updated_at").collect()
     cutoff = sorted(r.updated_at for r in rows)[len(rows) // 2]
@@ -199,15 +185,15 @@ def test_append_ingest_defers_dedup_to_read_and_compact(spark, tmp_path):
     sink(_full(spark), 0)
     sink(_full(spark), 1)  # full redelivery appends parts, no merge read
     # query-time FINAL resolves versions across redundant parts
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
     raw = t.read(spark).count()
     v = t.compact(spark, final=True)
     assert v == t.current_version()
     assert t.read(spark).count() == len(GOLDEN_LATEST) < raw
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
 
 
-def test_merge_upsert_schema_evolution(spark, tmp_path):
+def test_append_parts_schema_evolution(spark, tmp_path):
     """r6: a batch carrying a NEW column widens the table (ClickHouse
     ALTER ADD COLUMN / Avro evolved-field semantics) — old rows read
     back as NULL in the new column, later part files mix with earlier
@@ -215,7 +201,7 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
     from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
 
     t = ManifestTable(str(tmp_path / "tbl"), key_col="user_id", n_buckets=4)
-    apply = t.merge_upsert(sort_key=("user_id", "updated_at"), arrival=("kafka_offset",))
+    apply = t.append_parts(sort_key=("user_id", "updated_at"), arrival=("kafka_offset",))
     b1 = spark.createDataFrame(
         [(1, "alice", 100, 1), (2, "bob", 100, 2)],
         "user_id long, username string, updated_at long, kafka_offset long",
@@ -227,8 +213,8 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
         "user_id long, username string, updated_at long, kafka_offset long, email string",
     )
     apply(b2, 1)
-    out = {r.user_id: r for r in t.read_latest(
-        spark, entity_key=("user_id",), version_cols=("updated_at", "kafka_offset")
+    out = {r.user_id: r for r in latest(
+        t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
     ).collect()}
     assert out[1].username == "alice" and out[1].email is None
     assert out[2].username == "bob2" and out[2].email == "bob@x"
@@ -239,14 +225,14 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
         "user_id long, username string, updated_at long, kafka_offset long",
     )
     apply(b3, 2)
-    out2 = {r.user_id: r for r in t.read_latest(
-        spark, entity_key=("user_id",), version_cols=("updated_at", "kafka_offset")
+    out2 = {r.user_id: r for r in latest(
+        t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
     ).collect()}
     assert out2[4].email is None and out2[2].email == "bob@x"
     # compaction over mixed-schema parts keeps results identical
     t.compact(spark, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",))
-    out3 = {r.user_id: r for r in t.read_latest(
-        spark, entity_key=("user_id",), version_cols=("updated_at", "kafka_offset")
+    out3 = {r.user_id: r for r in latest(
+        t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
     ).collect()}
     assert {u: (r.username, r.email) for u, r in out2.items()} == {
         u: (r.username, r.email) for u, r in out3.items()
@@ -637,17 +623,15 @@ def test_projection_incomplete_falls_back_to_base(spark, tmp_path):
 
 
 def test_projection_guards_bucket_scoped_mutations(spark, tmp_path):
-    """merge_upsert/delete_where on a projection-carrying table must
-    refuse loudly (bucket-scoped rewrites would strand projection
-    rows), not corrupt silently."""
+    """delete_where on a projection-carrying table must refuse loudly
+    (bucket-scoped rewrites would strand projection rows), not corrupt
+    silently."""
     import pytest
 
     t = ManifestTable(str(tmp_path / "t"), key_col="uid", n_buckets=2)
     df = spark.range(10).select(F.col("id").alias("uid"), F.col("id").alias("seq"))
     t.append_parts(sort_key=("uid", "seq"), arrival=("uid",))(df, 0)
     t.add_projection(spark, "by_seq", "seq")
-    with pytest.raises(NotImplementedError):
-        t.merge_upsert()(df, 1)
     with pytest.raises(NotImplementedError):
         t.delete_where(spark, "seq < 5")
 
@@ -688,7 +672,7 @@ def test_update_where_mutates_only_matching_rows(spark, tmp_path):
     (simultaneous, not sequential), NULL-predicate rows survive
     untouched, and the pre-mutation snapshot stays readable."""
     t = ManifestTable(str(tmp_path / "t"), n_buckets=4)
-    t.merge_upsert()(_full(spark), 0)
+    t.append_parts()(_full(spark), 0)
     v0 = t.current_version()
     before = {
         (r.user_id, r.kafka_offset): (r.username, r.account_type)
@@ -750,7 +734,7 @@ def test_update_where_refusals_and_bucket_pruning(spark, tmp_path):
     import pytest
 
     t = ManifestTable(str(tmp_path / "t"), n_buckets=8)
-    t.merge_upsert()(_full(spark), 0)
+    t.append_parts()(_full(spark), 0)
     with pytest.raises(ValueError, match="bucket key"):
         t.update_where(spark, {"user_id": "user_id + 1"}, "true")
     with pytest.raises(ValueError, match="unknown column"):

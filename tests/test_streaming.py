@@ -1,8 +1,8 @@
 """Streaming parity tests (SURVEY.md §5.2.4): the same operators driven
 through Structured Streaming with availableNow triggers, asserting
 batch ≡ streaming results, checkpoint restart idempotency, and the
-watermarked windowed aggregation mode (B18). Both CDC pipelines commit
-through a ``ManifestTable``."""
+watermarked windowed aggregation mode (B18). Both CDC pipelines feed
+the README's Kafka table through ``ChDdlCatalog.kafka_sink``."""
 
 from __future__ import annotations
 
@@ -11,15 +11,24 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from postgre_to_clickhouse_spark.cdc import dedup_redelivery, mv_users, unwrap
-from postgre_to_clickhouse_spark.cdc.fixtures import GOLDEN_LATEST, users_cdc_events
-from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
+from postgre_to_clickhouse_spark.cdc import dedup_redelivery, unwrap
+from postgre_to_clickhouse_spark.cdc.fixtures import (
+    GOLDEN_ALL_VERSIONS,
+    GOLDEN_LATEST,
+    users_cdc_events,
+)
+from postgre_to_clickhouse_spark.ch_ddl import KAFKA_VIRTUAL
 from postgre_to_clickhouse_spark.streaming import pipeline as P
+from tests.test_ch_ddl import _KAFKA_DDL, _MV_DDL, _USERS_VER_DDL, readme_catalog
+
+_LATEST_SQL = ("SELECT user_id, username, account_type, updated_at FROM shop.users "
+               "ORDER BY user_id, updated_at DESC, kafka_offset DESC LIMIT 1 BY user_id")
 
 
 @pytest.fixture()
 def stream_dirs(tmp_path):
-    return str(tmp_path / "src"), ManifestTable(str(tmp_path / "tbl")), str(tmp_path / "ckpt")
+    cat = readme_catalog(str(tmp_path / "store"), _USERS_VER_DDL)
+    return str(tmp_path / "src"), cat, str(tmp_path / "ckpt")
 
 
 def _latest_map(df):
@@ -29,58 +38,68 @@ def _latest_map(df):
     }
 
 
+def _final_map(spark, cat):
+    return {
+        (r.user_id, r.updated_at.strftime("%Y-%m-%d %H:%M:%S")): (r.username, r.account_type)
+        for r in cat.query(spark, "SELECT user_id, username, account_type, updated_at "
+                                  "FROM shop.users FINAL").collect()
+    }
+
+
 def test_streaming_pipeline_matches_batch_golden(spark, stream_dirs):
-    src, t, ckpt = stream_dirs
+    src, cat, ckpt = stream_dirs
     events = users_cdc_events(spark)
     P.write_events_as_json(events, src, n_files=3)  # 3 micro-batches
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
-    # all-versions view matches the batch pipeline applied directly
-    assert t.read(spark).count() == 6  # GOLDEN_ALL_VERSIONS cardinality
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt)
+    assert _final_map(spark, cat) == GOLDEN_ALL_VERSIONS
+    assert _latest_map(cat.query(spark, _LATEST_SQL)) == GOLDEN_LATEST
 
 
 def test_streaming_restart_is_idempotent(spark, stream_dirs):
-    src, t, ckpt = stream_dirs
+    src, cat, ckpt = stream_dirs
+    t = cat.storage_for("users")
     P.write_events_as_json(users_cdc_events(spark), src, n_files=2)
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
-    n1, v1 = t.read(spark).count(), t.current_version()
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)  # same checkpoint: no new data
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt)
+    v1 = t.current_version()
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt)  # same checkpoint: no new data
     # no new data → no new commit, not merely the same content
-    assert (t.read(spark).count(), t.current_version()) == (n1, v1)
-    assert n1 == 6
+    assert t.current_version() == v1
+    assert _final_map(spark, cat) == GOLDEN_ALL_VERSIONS
 
 
 def test_streaming_redelivered_batch_is_idempotent(spark, stream_dirs):
     """Replaying the same source into a FRESH checkpoint (simulating
-    at-least-once redelivery of every batch) must converge to the same
-    table — the manifest merge is deterministic."""
-    src, t, ckpt = stream_dirs
+    at-least-once redelivery of every batch) lands every row again,
+    and FINAL still reads one row per (user_id, updated_at)."""
+    src, cat, ckpt = stream_dirs
     P.write_events_as_json(users_cdc_events(spark), src, n_files=3)
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt + "_2")  # fresh checkpoint → full replay
-    assert t.read(spark).count() == 6
-    assert _latest_map(t.read_latest(spark)) == GOLDEN_LATEST
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt)
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt + "_2")  # fresh checkpoint → full replay
+    assert _final_map(spark, cat) == GOLDEN_ALL_VERSIONS
+    assert _latest_map(cat.query(spark, _LATEST_SQL)) == GOLDEN_LATEST
 
 
 def test_streaming_transform_equals_batch_transform(spark, stream_dirs):
-    """A27 unification: identical operator chain under read vs
-    readStream — the streamed table holds exactly the batch transform's
-    rows, one per (user_id, updated_at) after redelivery dedup."""
-    src, t, ckpt = stream_dirs
+    """A27 unification: the same MV under read vs readStream — FINAL
+    over the streamed table holds exactly the batch MV's rows, one per
+    (user_id, updated_at) after redelivery dedup."""
+    src, cat, ckpt = stream_dirs
     events = users_cdc_events(spark)
     P.write_events_as_json(events, src, n_files=2)
 
-    batch_out = dedup_redelivery(mv_users(unwrap(events)))
-    P.run_pipeline(spark, src, t.merge_upsert(), ckpt)
-    stream_out = t.read(spark).select(*batch_out.columns)
+    cols = ["user_id", "username", "account_type", "updated_at", "created_at"]
+    mv_out = cat.apply_mv(spark, "consumer__users",
+                          {"kafka__users": unwrap(events).withColumnsRenamed(KAFKA_VIRTUAL)})
+    batch_out = dedup_redelivery(mv_out).select(*cols)
+    P.run_pipeline(spark, src, cat, "kafka__users", ckpt)
+    stream_out = cat.query(spark, f"SELECT {', '.join(cols)} FROM shop.users FINAL")
     assert sorted(map(tuple, stream_out.collect())) == sorted(map(tuple, batch_out.collect()))
 
 
 def test_equal_versions_tie_break_on_kafka_offset_in_both_pipelines(spark, tmp_path):
-    """Two distinct events with equal (user_id, updated_at) resolve by
-    Kafka offset in the JSON and the Avro pipeline alike: the
-    first-delivered (offset 7) row is kept, though the source file
-    lists offset 9 first."""
+    """Two distinct events with equal (user_id, updated_at) resolve the
+    ClickHouse way in the JSON and the Avro pipeline alike: the row
+    inserted last (Kafka offset 9, after offset 7) is kept."""
     from postgre_to_clickhouse_spark.cdc import avro as A
     from postgre_to_clickhouse_spark.cdc import avro_py as AP
     from postgre_to_clickhouse_spark.cdc.schemas import KAFKA_CDC_RECORD, USERS_AVRO_SCHEMA
@@ -92,9 +111,9 @@ def test_equal_versions_tie_break_on_kafka_offset_in_both_pipelines(spark, tmp_p
         return {"user_id": 1, "username": name, "account_type": "free",
                 "updated_at": updated, "created_at": created}
 
-    arrivals = [(9, row("at_offset_9")), (7, row("at_offset_7"))]
+    arrivals = [(7, row("at_offset_7")), (9, row("at_offset_9"))]
 
-    json_t = ManifestTable(str(tmp_path / "json_tbl"))
+    json_cat = readme_catalog(str(tmp_path / "json_store"), _USERS_VER_DDL)
     events = spark.createDataFrame(
         [{"event": {"before": None, "after": r, "source": None, "op": "u", "ts_ms": 0},
           "kafka_timestamp": ts, "kafka_offset": off, "kafka_partition": 0}
@@ -102,22 +121,22 @@ def test_equal_versions_tie_break_on_kafka_offset_in_both_pipelines(spark, tmp_p
         KAFKA_CDC_RECORD,
     )
     P.write_events_as_json(events, str(tmp_path / "json_src"))
-    P.run_pipeline(spark, str(tmp_path / "json_src"), json_t.merge_upsert(),
+    P.run_pipeline(spark, str(tmp_path / "json_src"), json_cat, "kafka__users",
                    str(tmp_path / "json_ckpt"))
 
-    avro_t = ManifestTable(str(tmp_path / "avro_tbl"))
+    avro_cat = readme_catalog(str(tmp_path / "avro_store"), _USERS_VER_DDL)
     frames = [(bytearray(A.frame(AP.encode_record(r, USERS_AVRO_SCHEMA), 1)), off, ts)
               for off, r in arrivals]
     spark.createDataFrame(frames, "value binary, offset long, timestamp timestamp") \
         .coalesce(1).write.parquet(str(tmp_path / "frames"))
-    P.run_pipeline_avro_frames(spark, str(tmp_path / "frames"), avro_t.merge_upsert(),
+    P.run_pipeline_avro_frames(spark, str(tmp_path / "frames"), avro_cat, "kafka__users",
                                str(tmp_path / "avro_ckpt"), {1: USERS_AVRO_SCHEMA},
                                USERS_AVRO_SCHEMA)
 
-    for t in (json_t, avro_t):
-        got = [(r.username, r.kafka_offset) for r in t.read(spark).collect()]
-        assert got == [("at_offset_7", 7)]
-        assert [r.username for r in t.read_latest(spark).collect()] == ["at_offset_7"]
+    for cat in (json_cat, avro_cat):
+        for final in ("", " FINAL"):
+            got = cat.query(spark, f"SELECT username, kafka_offset FROM shop.users{final}")
+            assert [tuple(r) for r in got.collect()] == [("at_offset_9", 9)]
 
 
 def test_watermarked_window_agg_stream(spark, tmp_path):
@@ -159,16 +178,26 @@ def test_watermarked_window_agg_stream(spark, tmp_path):
 # -- Avro-framed streaming with schema evolution (round 4) ------------------
 def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     """Two micro-batch files: v1-schema records then v2 (adds nullable
-    email, widens user_id). One streaming query ingests both, the final
-    latest-state table carries the reader-schema columns, and replaying
-    with the same checkpoint commits nothing (restart idempotency)."""
+    email, widens user_id). One streaming query ingests both through a
+    Kafka table, MV and target that declare ``email``; the latest-state
+    read carries it, and replaying with the same checkpoint commits
+    nothing (restart idempotency)."""
     from postgre_to_clickhouse_spark.cdc import avro as A
     from postgre_to_clickhouse_spark.cdc import avro_py as AP
     from postgre_to_clickhouse_spark.cdc.schemas import USERS_AVRO_SCHEMA
     from tests.test_avro_framing import USERS_V2_AVRO_SCHEMA
 
     frames_dir = str(tmp_path / "frames")
-    t = ManifestTable(str(tmp_path / "table"))
+    email_col = "    kafka_offset UInt64,\n    email Nullable(String)\n"
+    cat = readme_catalog(
+        str(tmp_path / "store"),
+        users=_USERS_VER_DDL.replace("    kafka_offset UInt64\n", email_col),
+        kafka=_KAFKA_DDL.replace("    created_at UInt64\n",
+                                 "    created_at UInt64,\n    email Nullable(String)\n"),
+        mv=_MV_DDL.replace("    kafka_offset UInt64\n", email_col)
+                  .replace("_offset AS kafka_offset\n", "_offset AS kafka_offset,\n    email\n"),
+    )
+    t = cat.storage_for("users")
     ckpt = str(tmp_path / "ckpt")
 
     v1 = [
@@ -176,7 +205,8 @@ def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
         {"user_id": 2, "username": "bob", "account_type": "pro", "updated_at": 20, "created_at": 2},
     ]
     v2 = [
-        # update of user 1 under the NEW schema (higher updated_at wins)
+        # update of user 1 under the NEW schema (both versions truncate to
+        # second 0, so the later offset wins)
         {"user_id": 1, "username": "ann2", "account_type": "pro", "updated_at": 15,
          "created_at": 1, "email": "ann@example.org"},
         {"user_id": 3, "username": "cat", "account_type": "free", "updated_at": 30,
@@ -192,17 +222,18 @@ def test_streaming_avro_frames_schema_evolution(spark, tmp_path):
     spark.createDataFrame(f2, kafka).coalesce(1).write.mode("append").parquet(frames_dir)
 
     schemas = {1: USERS_AVRO_SCHEMA, 2: USERS_V2_AVRO_SCHEMA}
-    P.run_pipeline_avro_frames(spark, frames_dir, t.merge_upsert(), ckpt, schemas,
+    P.run_pipeline_avro_frames(spark, frames_dir, cat, "kafka__users", ckpt, schemas,
                                USERS_V2_AVRO_SCHEMA)
 
-    got = {r.user_id: (r.username, r.email) for r in t.read_latest(spark).collect()}
+    latest_sql = _LATEST_SQL.replace("account_type, updated_at FROM", "email FROM")
+    got = {r.user_id: (r.username, r.email) for r in cat.query(spark, latest_sql).collect()}
     assert got == {1: ("ann2", "ann@example.org"), 2: ("bob", None), 3: ("cat", None)}
 
-    n_before, v_before = t.read(spark).count(), t.current_version()
+    v_before = t.current_version()
     # restart with the SAME checkpoint: source fully drained -> no commit
-    P.run_pipeline_avro_frames(spark, frames_dir, t.merge_upsert(), ckpt, schemas,
+    P.run_pipeline_avro_frames(spark, frames_dir, cat, "kafka__users", ckpt, schemas,
                                USERS_V2_AVRO_SCHEMA)
-    assert (t.read(spark).count(), t.current_version()) == (n_before, v_before)
+    assert t.current_version() == v_before
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
