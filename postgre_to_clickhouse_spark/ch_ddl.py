@@ -80,6 +80,7 @@ from postgre_to_clickhouse_spark.ch_select import (
     ChSqlError,
     _is_ident,
     _kw,
+    _rewrite_all,
     _split_commas,
     _tokenize,
     ch_select,
@@ -822,15 +823,12 @@ class ChDdlCatalog:
         # r14: plain CREATE VIEW — name -> verbatim SELECT text,
         # expanded at read time (CH's ordinary View engine)
         self.views: dict[str, str] = {}
-        # r11 (VERDICT r10 #3): storage-backed statements. When a
-        # storage_root is given, each declared MergeTree-family table
-        # lazily gets a ManifestTable under <root>/<name>, and the
-        # catalog additionally accepts the CH ALTER dialect
-        # (mutations + projection DDL — ddl.execute_alter's forms), so
-        # a user's full provisioning script (CREATE + ALTER + SELECT)
-        # runs through ONE object instead of hitting the seam between
-        # ChDdlCatalog (CREATE only) and ddl.execute_alter (handle
-        # required) one statement in.
+        # storage-backed statements: when a storage_root is given,
+        # each declared MergeTree-family table lazily gets a
+        # ManifestTable under <root>/<name>, and the catalog also takes
+        # the CH ALTER dialect (mutations + projection DDL, parsed by
+        # _alter), so a user's full provisioning script (CREATE +
+        # ALTER + SELECT) runs through ONE object.
         self.storage_root = storage_root
         self.n_buckets = n_buckets
         self.storage: dict[str, object] = {}
@@ -1066,12 +1064,27 @@ class ChDdlCatalog:
         return spec
 
     def _alter(self, tokens: list[str], spark: SparkSession | None):
-        """Route a ClickHouse ``ALTER TABLE`` statement — the mutation
-        and projection forms :func:`ddl.execute_alter` parses
-        (UPDATE/DELETE WHERE, ADD/DROP PROJECTION; reference terminal
-        surface README.md:163-230, CH 24.3) — to the declared table's
-        storage handle. Undeclared tables, Kafka-engine tables, and a
-        missing SparkSession all refuse loudly."""
+        """Route a ClickHouse ``ALTER TABLE`` statement. Column and TTL
+        clauses change the declared spec; the mutation and projection
+        clauses (the reference's terminal surface, README.md:163-230,
+        CH 24.3) parse here on the statement's own tokens and run on
+        the table's storage handle:
+
+        - ``UPDATE c = e[, ...] WHERE p`` and ``DELETE WHERE p``: every
+          ``e`` and ``p`` compiles through the dialect's expression
+          rewriter (the one SELECT WHERE, VALUES and DEFAULT use), so a
+          CH function works in a mutation as it does in a SELECT. Key
+          columns (ORDER BY and PARTITION BY sources) cannot be
+          updated, as in CH;
+        - ``ADD PROJECTION p (SELECT ... ORDER BY c)`` (sort layout) or
+          ``ADD PROJECTION p (SELECT k[, ...], agg(x) [AS out][, ...]
+          GROUP BY k[, ...])`` with agg one of sum/count/min/max
+          (aggregate layout);
+        - ``DROP PROJECTION p``.
+
+        Undeclared tables, Kafka-engine tables, a missing SparkSession
+        and every other clause refuse with :class:`ChSqlError`, as do
+        the store's own refusals (a duplicate projection, ...)."""
         if len(tokens) < 4 or _kw(tokens[1]) != "TABLE":
             raise ChSqlError(
                 f"unsupported ALTER statement: {' '.join(tokens[:4])} ..."
@@ -1113,9 +1126,94 @@ class ChDdlCatalog:
                 "or, on a ReplacingMergeTree, OPTIMIZE TABLE ... FINAL "
                 "to rewrite parts onto the current names first"
             )
-        from postgre_to_clickhouse_spark.ddl import execute_alter
+        t = self.storage_for(name)
+        try:
+            if kw2[0] == "UPDATE":
+                return self._update(self.tables[name], t, body[1:], spark)
+            if kw2 == ("DELETE", "WHERE"):
+                return t.delete_where(spark, _predicate(body[2:], "DELETE"))
+            if kw2 == ("ADD", "PROJECTION") and len(body) > 2:
+                return self._add_projection(t, body[2], body[3:], spark)
+            if kw2 == ("DROP", "PROJECTION") and len(body) == 3:
+                return t.drop_projection(body[2])
+        except ChSqlError:
+            raise
+        except ValueError as e:  # the store's refusals answer as CH errors
+            raise ChSqlError(str(e)) from None
+        raise ChSqlError(
+            f"unsupported ALTER TABLE clause: {_render_toks(body)!r}")
 
-        return execute_alter(spark, self.storage_for(name), " ".join(tokens))
+    @staticmethod
+    def _update(spec: ChTableSpec, t, toks: list[str],
+                spark: SparkSession) -> int:
+        """``ALTER TABLE t UPDATE c = e[, ...] WHERE p`` (``toks`` after
+        UPDATE)."""
+        at = _find_clause(toks, "WHERE")
+        if at is None:
+            raise ChSqlError("ALTER TABLE ... UPDATE needs a WHERE clause")
+        assignments: dict[str, str] = {}
+        for item in _split_commas(toks[:at]):
+            if len(item) < 3 or not _is_ident(item[0]) or item[1] != "=":
+                raise ChSqlError(
+                    f"bad UPDATE assignment {_render_toks(item)!r}: "
+                    "expected `column = expression`")
+            assignments[item[0]] = _rewrite_all(item[2:])
+        declared = {f.name for f in spec.schema.fields}
+        unknown = sorted(set(assignments) - declared)
+        if unknown:
+            raise ChSqlError(f"UPDATE of undeclared column(s) {unknown}")
+        keys = sorted(set(assignments) & {*spec.order_by, *spec.partition_src})
+        if keys:
+            raise ChSqlError(
+                f"Cannot UPDATE key column(s) {keys}: they decide row "
+                "order, placement and deduplication (CH refuses the same)")
+        return t.update_where(
+            spark, assignments, _predicate(toks[at + 1:], "UPDATE"))
+
+    @staticmethod
+    def _add_projection(t, proj: str, toks: list[str],
+                        spark: SparkSession) -> int:
+        """``ADD PROJECTION p (SELECT ... ORDER BY c)`` → a sort
+        projection on ``c``; ``ADD PROJECTION p (SELECT k, agg(x) [AS
+        out], ... GROUP BY k, ...)`` → an aggregate projection (an
+        unnamed ``count()`` is ``n``, any other ``fn(x)`` is
+        ``fn_x``)."""
+        if (len(toks) < 3 or toks[0] != "(" or toks[-1] != ")"
+                or _kw(toks[1]) != "SELECT"):
+            raise ChSqlError(
+                "ADD PROJECTION takes `name (SELECT ...)`")
+        sel = toks[2:-1]
+        gb = _find_clause(sel, "GROUP", "BY")
+        if gb is not None:
+            keys = _split_commas(sel[gb + 2:])
+            if not keys or any(len(k) != 1 or not _is_ident(k[0]) for k in keys):
+                raise ChSqlError("projection GROUP BY takes plain columns")
+            group_by = tuple(k[0] for k in keys)
+            aggs: dict[str, tuple[str, str]] = {}
+            for item in _split_commas(sel[:gb]):
+                if len(item) == 1 and item[0] in group_by:
+                    continue
+                alias = None
+                if len(item) > 2 and _kw(item[-2]) == "AS" and _is_ident(item[-1]):
+                    item, alias = item[:-2], item[-1]
+                fn = _kw(item[0]).lower() if item else ""
+                arg = item[2:-1]
+                if (fn not in ("sum", "count", "min", "max")
+                        or item[1:2] != ["("] or item[-1] != ")"
+                        or len(arg) > 1 or (not arg and fn != "count")
+                        or (arg and arg[0] != "*" and not _is_ident(arg[0]))):
+                    raise ChSqlError(
+                        f"aggregate projection item {_render_toks(item)!r} "
+                        "is not a re-aggregatable sum/count/min/max term")
+                src = arg[0] if arg else "*"
+                aggs[alias or ("n" if fn == "count" else f"{fn}_{src}")] = (fn, src)
+            return t.add_agg_projection(spark, proj, group_by, aggs)
+        ob = _find_clause(sel, "ORDER", "BY")
+        if ob is not None and len(sel) == ob + 3 and _is_ident(sel[-1]):
+            return t.add_projection(spark, proj, sel[-1])
+        raise ChSqlError(
+            "ADD PROJECTION needs ORDER BY <column> (sort layout) or "
+            f"GROUP BY (aggregate layout): {_render_toks(sel)!r}")
 
     def _explain(self, tokens: list[str], spark: SparkSession):
         """CH ``EXPLAIN [PLAN|PIPELINE|AST|SYNTAX] SELECT ...``: one
@@ -1462,8 +1560,6 @@ class ChDdlCatalog:
                     "MATERIALIZED/ALIAS columns are supported on "
                     f"MergeTree and ReplacingMergeTree, not {spec.engine}"
                 )
-            from postgre_to_clickhouse_spark.ch_select import _rewrite_all
-
             # verbatim CH expression text → Spark SQL (r12, same
             # rewrite the CREATE-time clauses get). An added
             # MATERIALIZED column behaves like DEFAULT for parts older
@@ -1670,8 +1766,6 @@ class ChDdlCatalog:
             # each row literal runs through the dialect expression
             # rewriter, so CH function names (toDateTime, toUInt32,
             # ...) work inside VALUES exactly as they do in SELECTs
-            from postgre_to_clickhouse_spark.ch_select import _rewrite_all
-
             body = _rewrite_all(rest[1:])
             if not body.strip():
                 raise ChSqlError("VALUES needs at least one row")
@@ -1698,12 +1792,14 @@ class ChDdlCatalog:
                          lines: list[str],
                          cols: list[str] | None = None) -> int:
         """CH ``INSERT INTO t [(cols)] FORMAT JSONEachRow`` data rows
-        (the HTTP upload path clients actually use against 8123). Rows
-        are grouped by their PRESENT key set and each group conforms as
-        its own block, so a field ABSENT from a row materializes the
-        column DEFAULT (CH's input_format_defaults_for_omitted_fields
-        behavior) while an explicit ``null`` stays NULL — a flat
-        missing→NULL read could not tell the two apart. The body
+        (the HTTP upload path clients actually use against 8123). Each
+        maximal run of consecutive rows with one PRESENT key set
+        conforms as its own block, so a field ABSENT from a row
+        materializes the column DEFAULT (CH's
+        input_format_defaults_for_omitted_fields behavior) while an
+        explicit ``null`` stays NULL — a flat missing→NULL read could
+        not tell the two apart. The blocks keep body order, so the
+        ReplacingMergeTree last-row tie rule follows the body. The body
         commits as one version (:meth:`_insert_blocks`). Values travel
         as strings and take the declared types through conform's cast
         (the CH input coercion); array-typed columns refuse loudly
@@ -1718,7 +1814,7 @@ class ChDdlCatalog:
         unknown_cols = sorted(allowed - set(declared))
         if unknown_cols:
             raise ChSqlError(f"INSERT column(s) not declared: {unknown_cols}")
-        groups: dict[tuple, list[dict]] = {}
+        runs: list[tuple[tuple, list[dict]]] = []
         for i, ln in enumerate(lines):
             if not ln.strip():
                 continue
@@ -1741,15 +1837,18 @@ class ChDdlCatalog:
                         "the subset — use INSERT ... SELECT"
                     )
             ks = tuple(k for k in declared if k in row)
-            groups.setdefault(ks, []).append(row)
-        if not groups:
+            if runs and runs[-1][0] == ks:
+                runs[-1][1].append(row)
+            else:
+                runs.append((ks, [row]))
+        if not runs:
             raise ChSqlError("JSONEachRow body carries no rows")
         return self._insert_blocks(spark, name, [
             spark.createDataFrame(
                 [tuple(None if r[k] is None else str(r[k]) for k in ks)
                  for r in rs],
                 ", ".join(f"{k} string" for k in ks))
-            for ks, rs in sorted(groups.items())
+            for ks, rs in runs
         ], "json")
 
     def _insert_blocks(self, spark: SparkSession, name: str,
@@ -2081,7 +2180,13 @@ class ChDdlCatalog:
           AggregateFunction (sum states re-sum in exact decimal, uniq
           sketches union register-wise) down to ONE state row per
           sorting key;
+        - SummingMergeTree: sum the summed columns per sorting key;
         - MergeTree: FINAL is a no-op beyond compaction (CH same).
+
+        This is the package's one ReplacingMergeTree fold. Every fold
+        commits through ``ManifestTable._rewrite_buckets``, so a table
+        with projections refuses (``NotImplementedError``) with nothing
+        committed.
         """
         if len(tokens) < 3 or _kw(tokens[1]) != "TABLE":
             raise ChSqlError("OPTIMIZE TABLE <name> [FINAL]?")
@@ -2095,7 +2200,7 @@ class ChDdlCatalog:
         spec = self.tables[name]
         t = self.storage_for(name)
         if not final or spec.engine.upper() == "MERGETREE":
-            return t.compact(spark, final=False, min_files_per_bucket=2)
+            return t.compact(spark)
         m = t.current_manifest()  # the fold's base: read before the fold
         if spec.engine.upper() == "REPLACINGMERGETREE":
             if spec.final_spec is None:
@@ -2115,7 +2220,11 @@ class ChDdlCatalog:
             folded = self._fold_sums(spark, name)
         else:
             raise ChSqlError(f"OPTIMIZE FINAL unsupported for {spec.engine}")
-        return self._rewrite_all(t, m, folded)
+        # every bucket rewrites from the fold; an INSERT committed after
+        # m makes the commit raise CommitConflict instead of folding its
+        # rows away
+        buckets = sorted({f["bucket"] for f in m["files"] if not f.get("proj")})
+        return t._rewrite_buckets(m, buckets, folded, "optimize final fold")
 
     def _fold_states(self, spark: SparkSession, name: str) -> DataFrame:
         """One merged state row per sorting key — each AggregateFunction
@@ -2217,26 +2326,6 @@ class ChDdlCatalog:
         folded = df.groupBy(*spec.order_by).agg(*aggs)
         return folded.select(*[f.name for f in spec.schema.fields])
 
-    def _rewrite_all(self, t, m: dict, folded: DataFrame) -> int:
-        """Commit a snapshot where every non-empty bucket is rewritten
-        from ``folded``, which was read from snapshot ``m`` or a later
-        one — the manifest protocol's whole-fold commit (new immutable
-        files, one atomic manifest creation on base ``m``; crash-safe
-        like every other commit). An INSERT committed after ``m``
-        makes the commit raise ``CommitConflict`` instead of folding
-        its rows away. Refused when ``m`` declares projections."""
-        if m.get("projections"):
-            raise ChSqlError(
-                "OPTIMIZE FINAL with projections declared: drop the "
-                "projections first, fold, re-add (the CH DROP/"
-                "MATERIALIZE loop — same boundary as mutations)"
-            )
-        touched = sorted({f["bucket"] for f in m["files"] if not f.get("proj")})
-        if not touched:
-            return t.current_version()
-        new_files = t._write_bucket_files(folded, touched)
-        return t._commit(m, new_files, note="optimize final fold")
-
     def _modify_ttl(self, name: str, toks: list[str]):
         """CH ``MODIFY TTL col + INTERVAL n unit`` (r11): record the
         row-expiry rule — METADATA-ONLY, like CH (TTL applies on
@@ -2303,14 +2392,14 @@ class ChDdlCatalog:
         version = None
         if ttl is not None:
             col, n, unit = ttl
-            version = t.apply_ttl(spark, col, _cutoff(n, unit))
+            cutoff = _cutoff(n, unit)
+            version = t.delete_where(spark, f"{col} < TIMESTAMP '{cutoff}'",
+                                     where=[(col, None, cutoff)])
         for col, (src, n, unit) in sorted(col_ttls.items()):
             cutoff = _cutoff(n, unit)
-            reset = spec.defaults.get(col, "NULL")
-            rng = ([(src, None, cutoff)] if src in t.stats_cols else None)
             version = t.update_where(
-                spark, {col: reset},
-                f"{src} < TIMESTAMP '{cutoff}'", where=rng,
+                spark, {col: spec.defaults.get(col, "NULL")},
+                f"{src} < TIMESTAMP '{cutoff}'", where=[(src, None, cutoff)],
             )
         return version
 
@@ -2700,6 +2789,13 @@ def _strip_if_not_exists(toks: list[str]) -> list[str]:
     return toks
 
 
+def _predicate(toks: list[str], what: str) -> str:
+    """A mutation's WHERE tokens compiled to Spark SQL."""
+    if not toks:
+        raise ChSqlError(f"ALTER TABLE ... {what} WHERE needs a predicate")
+    return _rewrite_all(toks)
+
+
 def _find_clause(tokens: list[str], *words: str) -> int | None:
     """Index of the depth-0 keyword run ``words`` in tokens."""
     depth = 0
@@ -2787,8 +2883,6 @@ def _parse_create_table(tokens: list[str]) -> ChTableSpec:
             # dialect rewriter (r12) so CH names (toStartOfDay,
             # toInt64, ...) work exactly as they do in SELECTs; plain
             # SQL passes through unchanged
-            from postgre_to_clickhouse_spark.ch_select import _rewrite_all
-
             expr = _rewrite_all(item[d_at + 1:])
             {"DEFAULT": defaults, "MATERIALIZED": materialized,
              "ALIAS": aliases}[kind][item[0]] = expr

@@ -715,10 +715,10 @@ def ch_ddl_alter_pipeline(spark, sf_dir):
     script — CREATE DATABASE / CREATE TABLE (MergeTree) / ALTER TABLE
     UPDATE / ALTER TABLE DELETE WHERE / ALTER TABLE ADD PROJECTION —
     executed statement-for-statement by ONE
-    :class:`ch_ddl.ChDdlCatalog` (r10's catalog spoke CREATE only and
-    refused ALTER; the CH ALTER dialect lived behind a separate
-    handle-taking entry point — a user pasting CREATE + ALTER hit the
-    seam one statement in). The events table is inserted as two part
+    :class:`ch_ddl.ChDdlCatalog`, whose ``_alter`` parses the ALTER
+    clauses on their own tokens and compiles each predicate and
+    right-hand side through the dialect's expression rewriter. The
+    events table is inserted as two part
     batches, the mutations rewrite only touched buckets, the aggregate
     projection backfills existing parts (CH MATERIALIZE PROJECTION)
     and the final read merges per-part partial states ONLY

@@ -373,11 +373,7 @@ def manifest_evolution_read(spark, sf_dir):
                 )
             apply_batch(batch, b)
             if b == 2:  # background merge over MIXED-schema parts
-                t.compact(
-                    spark,
-                    sort_key=("user_id", "updated_at"),
-                    arrival=("kafka_offset",),
-                )
+                t.compact(spark)
         out = latest(
             t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
         ).select("user_id", "event_type", "value", "updated_at", "kafka_offset", "value_sq")

@@ -173,7 +173,7 @@ def manifest_projection_read(spark, sf_dir):
         for b in range(4):  # time-interleaved: every batch spans the range
             apply_batch(ev.filter(F.pmod("kafka_offset", F.lit(4)) == b), b)
             if b == 2:  # background part-merge must rebuild the projection
-                t.compact(spark, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",))
+                t.compact(spark)
         q_lo, q_hi = bounds[2], bounds[3] - 1  # third quartile, inclusive
         probe = [("updated_at", q_lo, q_hi)]
         n_base = len(t.files_for())

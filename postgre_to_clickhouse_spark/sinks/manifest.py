@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
 
-from postgre_to_clickhouse_spark.cdc import dedup_redelivery, latest
+from postgre_to_clickhouse_spark.cdc import dedup_redelivery
 from postgre_to_clickhouse_spark.session import micro_shape as _micro_shape
 
 _MANIFESTS = "_manifests"
@@ -1177,32 +1177,22 @@ class ManifestTable:
         return _apply
 
     # -- maintenance ---------------------------------------------------------
-    def compact(
-        self,
-        spark: SparkSession,
-        final: bool = False,
-        sort_key=("user_id", "updated_at"),
-        arrival=("kafka_offset",),
-        min_files_per_bucket: int = 2,
-        merge_parts: int | None = None,
-    ) -> int:
+    def compact(self, spark: SparkSession, merge_parts: int | None = None) -> int:
         """ClickHouse background-merge parity: rewrite each bucket that
-        has accumulated ``min_files_per_bucket`` or more files into one
-        file. With ``final=True`` the rewrite also collapses version
-        history to the last-wins row per entity — ClickHouse's
-        ``OPTIMIZE TABLE ... FINAL`` on a ReplacingMergeTree
-        (`/root/reference/README.md:176-177`); ``final=False`` preserves
-        content byte-for-byte and only reduces file count (the routine
+        has accumulated two or more files into one file. Content is
+        preserved byte-for-byte; only the file count drops (the routine
         merge ClickHouse runs in the background, Delta's OPTIMIZE).
+        Version collapse is the catalog's ``OPTIMIZE TABLE ... FINAL``
+        (``ChDdlCatalog``), which folds on the table's declared key.
 
-        Same commit protocol as merges — new immutable files, untouched
-        buckets carried by reference, one atomic manifest creation; a
-        crash at any point leaves the previous snapshot intact, and a
-        concurrent commit on the same base raises
-        :class:`CommitConflict`. Readers of
-        retained versions are unaffected (their files are reclaimed
-        only by a later vacuum). Returns the new version, or the
-        current one if nothing needed compacting.
+        Same commit as every bucket rewrite (:meth:`_rewrite_buckets`):
+        new immutable files, untouched buckets carried by reference,
+        one atomic manifest creation; a crash at any point leaves the
+        previous snapshot intact, and a concurrent commit on the same
+        base raises :class:`CommitConflict`. Readers of retained
+        versions are unaffected (their files are reclaimed only by a
+        later vacuum). Returns the new version, or the current one if
+        nothing needed compacting.
 
         Scale: compaction is per-bucket-parallel and touches only the
         fragmented buckets' bytes — the small-file problem grows with
@@ -1220,32 +1210,17 @@ class ManifestTable:
         """
         m = self.current_manifest()
         if m.get("projections"):
-            return self._compact_parts(spark, m, final, sort_key, arrival, merge_parts)
+            return self._compact_parts(spark, m, merge_parts)
         per_bucket: dict[int, int] = {}
         for f in m["files"]:
             per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
-        touched = sorted(b for b, n in per_bucket.items() if n >= min_files_per_bucket)
-        if not touched and not final:
-            return self.current_version()
-        if final:  # a FINAL collapse rewrites every non-empty bucket
-            touched = sorted(per_bucket)
-        touched_files = [f for f in m["files"] if f["bucket"] in touched]
-        kept_files = [f for f in m["files"] if f["bucket"] not in touched]
-        if not touched_files:
-            return self.current_version()
-        data = self._read_entries(spark, touched_files, m)
-        if final:
-            data = latest(data, entity_key=(self.key_col,), version_cols=sort_key[1:] + arrival)
-        new_files = self._write_bucket_files(data, touched)
-        return self._commit(
-            m,
-            kept_files + new_files,
-            note=f"compact final={final} buckets={len(touched)}",
-        )
+        touched = sorted(b for b, n in per_bucket.items() if n >= 2)
+        if not touched:
+            return m["version"]
+        data = self._read_entries(spark, [f for f in m["files"] if f["bucket"] in touched], m)
+        return self._rewrite_buckets(m, touched, data, f"compact buckets={len(touched)}")
 
-    def _compact_parts(
-        self, spark: SparkSession, m: dict, final, sort_key, arrival, merge_parts=None
-    ) -> int:
+    def _compact_parts(self, spark: SparkSession, m: dict, merge_parts: int | None) -> int:
         """Part-merge compaction for projection-carrying tables: merge
         selected parts into ONE new part, rebuilding the base buckets
         and each projection's copy for the merged rows, then commit a
@@ -1253,22 +1228,19 @@ class ManifestTable:
         drop together — a projection can never reference rows its base
         no longer has.
 
-        Selection: ``final`` or ``merge_parts=None`` merges ALL parts
-        (the OPTIMIZE FINAL shape); ``merge_parts=k`` merges only the
-        k SMALLEST parts by on-disk bytes (part-id tiebreak) — the
-        ClickHouse background-merge policy, whose rewrite volume per
-        round is the small parts' bytes regardless of table size.
-        Incremental merges are content-preserving (no version
-        collapse — the FINAL read resolves versions either way)."""
-        base = [f for f in m["files"] if not f.get("proj")]
-        if not base:
-            return self.current_version()
+        Selection: ``merge_parts=None`` merges ALL parts;
+        ``merge_parts=k`` merges only the k SMALLEST parts by on-disk
+        bytes (part-id tiebreak) — the ClickHouse background-merge
+        policy, whose rewrite volume per round is the small parts'
+        bytes regardless of table size. Merges are content-preserving
+        (no version collapse — the FINAL read resolves versions)."""
         groups: dict = {}
-        for f in base:
-            groups.setdefault(f.get("part"), []).append(f)
-        if len(groups) <= 1 and not final:
-            return self.current_version()
-        if final or merge_parts is None:
+        for f in m["files"]:
+            if not f.get("proj"):
+                groups.setdefault(f.get("part"), []).append(f)
+        if len(groups) <= 1:
+            return m["version"]
+        if merge_parts is None:
             chosen = list(groups)
         else:
             if merge_parts < 2:
@@ -1282,93 +1254,103 @@ class ManifestTable:
             }
             chosen = sorted(groups, key=lambda p: (sizes[p], str(p)))[:merge_parts]
             if len(chosen) < 2:
-                return self.current_version()
+                return m["version"]
         sel = [f for pid in chosen for f in groups[pid]]
         data = self._read_entries(spark, sel, m)
-        if final:
-            data = latest(data, entity_key=(self.key_col,), version_cols=sort_key[1:] + arrival)
         buckets = sorted({f["bucket"] for f in sel})
         new_files = self._write_part(data, buckets, m["projections"])
         chosen_set = set(chosen)
         kept = [f for f in m["files"] if f.get("part") not in chosen_set]
         return self._commit(
-            m,
-            kept + new_files,
-            note=f"compact parts final={final} merged={len(chosen)}/{len(groups)}",
+            m, kept + new_files, note=f"compact parts merged={len(chosen)}/{len(groups)}"
         )
 
-    def delete_where(
-        self, spark: SparkSession, predicate: str, where=None, equals=None, tokens=None
-    ) -> int:
-        """Transactional row delete — the mechanism behind ClickHouse
-        row TTL (``TTL updated_at + INTERVAL ...``) and Delta's DELETE.
-
-        One pruned scan finds which FILES contain matching rows (the
-        predicate and the file-name virtual column are the only things
-        read); only those files' buckets rewrite — a table where the
-        expired rows cluster in old files (the natural layout for
-        time-keyed data) rewrites a small tail, not 100 TB. Returns the
-        new version (unchanged if nothing matched).
-        """
-        m = self.current_manifest()
-        if m.get("projections"):
-            raise NotImplementedError(
-                "delete_where on a table with projections is not supported: "
-                "bucket-scoped rewrites would strand the consumed parts' "
-                "projection files. Drop the projection first, delete, then "
-                "re-add (CH DROP/MATERIALIZE PROJECTION)."
-            )
-        if not m["files"]:
-            return self.current_version()
-        by_name = {f["name"]: f for f in m["files"]}
-        # Zone-map-accelerated hit finding: files whose [min, max]
-        # PROVABLY contain no row in `where` need not be scanned at
-        # all (a file not scanned cannot contribute a touched bucket,
-        # and the zone maps prove it holds no matching row). The
-        # rewrite below still reads every file of a touched bucket.
-        candidates = (
-            self.files_for(where, equals=equals, tokens=tokens, version=m["version"])
-            if (where or equals or tokens)
-            else m["files"]
-        )
+    # -- bucket rewrites (mutations, TTL, compaction, OPTIMIZE FINAL) ---------
+    def _hit_buckets(
+        self, spark: SparkSession, m: dict, predicate: str, where=None
+    ) -> tuple[list[int], str]:
+        """The buckets of snapshot ``m`` holding a row where the Spark
+        SQL ``predicate`` is TRUE, plus a ``scanned=M/N`` audit of how
+        many of its base files the scan read. ``where`` is a zone-map
+        probe (``[(col, lo, hi)]``, see :meth:`files_for`): a file whose
+        bounds PROVE no row is in range is not scanned (it cannot
+        contribute a touched bucket); a file without bounds for the
+        column is always scanned. One fixed-shape metadata action reads
+        only the predicate's columns and the file-name virtual column;
+        its result is bounded by file count, not row count."""
+        base = [f for f in m["files"] if not f.get("proj")]
+        candidates = self._prune(base, where)
+        scanned = f"scanned={len(candidates)}/{len(base)}"
         if not candidates:
-            return self.current_version()
-        # r17: fixed-shape metadata action (scan + one distinct
-        # exchange) — one planning round instead of one per AQE stage
+            return [], scanned
+        # r17: one planning round instead of one per AQE stage
         with _micro_shape(spark, width=None):
-            hit_paths = (
+            hits = (
                 self._read_entries(spark, candidates, m)
                 .filter(predicate)
                 .select(F.input_file_name().alias("__f"))
                 .distinct()
                 .collect()
-            )  # bounded by file count, not row count
-        hit_names = {os.path.basename(r["__f"]) for r in hit_paths}
-        if not hit_names:
-            return self.current_version()
-        touched = sorted({by_name[n]["bucket"] for n in hit_names})
-        touched_files = [f for f in m["files"] if f["bucket"] in touched]
-        kept_files = [f for f in m["files"] if f["bucket"] not in touched]
+            )
+        bucket_of = {f["name"]: f["bucket"] for f in base}
+        return sorted({bucket_of[os.path.basename(r["__f"])] for r in hits}), scanned
+
+    def _rewrite_buckets(self, m: dict, buckets: list[int], frame: DataFrame, note: str) -> int:
+        """The one bucket-rewrite commit: every file of ``buckets`` in
+        snapshot ``m`` is replaced by ``frame``'s rows (one new file per
+        bucket), every other file carries by reference, and the result
+        commits on base ``m``. ``frame`` holds the rows those buckets
+        keep — read from ``m`` (or a later snapshot) — so a commit
+        that lands after ``m`` raises :class:`CommitConflict` instead
+        of rewriting its rows away. Mutations, TTL, compaction and the
+        catalog's OPTIMIZE FINAL all commit here.
+
+        A snapshot with projections refuses before anything is
+        written: a bucket rewrite would strand the rewritten parts'
+        projection files (drop the projection, rewrite, re-add — CH's
+        DROP/MATERIALIZE PROJECTION loop)."""
+        projs = m.get("projections")
+        if projs:
+            raise NotImplementedError(
+                f"{note.split()[0]} on a table with projection(s) {sorted(projs)} "
+                "is not supported: a bucket rewrite would strand the rewritten "
+                "parts' projection files. Drop the projection first, rewrite, "
+                "then re-add (CH DROP/MATERIALIZE PROJECTION)."
+            )
+        if not buckets:
+            return m["version"]
+        kept = [f for f in m["files"] if f["bucket"] not in buckets]
+        return self._commit(m, kept + self._write_bucket_files(frame, buckets), note)
+
+    def delete_where(self, spark: SparkSession, predicate: str, where=None) -> int:
+        """Transactional row delete — the mechanism behind ClickHouse
+        row TTL (``TTL updated_at + INTERVAL ...``), ``ALTER TABLE ...
+        DELETE WHERE`` and Delta's DELETE.
+
+        One pruned scan finds which FILES contain matching rows
+        (:meth:`_hit_buckets`; ``where`` is its zone-map probe); only
+        those files' buckets rewrite — a table where the expired rows
+        cluster in old files (the natural layout for time-keyed data)
+        rewrites a small tail, not 100 TB. Returns the new version
+        (unchanged if nothing matched).
+        """
+        m = self.current_manifest()
+        touched, scanned = self._hit_buckets(spark, m, predicate, where)
+        if not touched:
+            return m["version"]
         # DELETE semantics: drop rows where the predicate is TRUE; rows
         # where it is NULL (e.g. a NULL timestamp under TTL) survive —
         # plain NOT(pred) would silently delete them in rewritten
         # buckets while identical rows in untouched buckets survive.
-        survivors = self._read_entries(spark, touched_files, m).filter(
-            f"NOT coalesce(({predicate}), false)"
-        )
-        new_files = self._write_bucket_files(survivors, touched)
-        return self._commit(
-            m, kept_files + new_files, note=f"delete_where buckets={len(touched)}"
+        survivors = self._read_entries(
+            spark, [f for f in m["files"] if f["bucket"] in touched], m
+        ).filter(f"NOT coalesce(({predicate}), false)")
+        return self._rewrite_buckets(
+            m, touched, survivors, f"delete_where buckets={len(touched)} {scanned}"
         )
 
     def update_where(
-        self,
-        spark: SparkSession,
-        assignments: dict[str, str],
-        predicate: str,
-        where=None,
-        equals=None,
-        tokens=None,
+        self, spark: SparkSession, assignments: dict[str, str], predicate: str, where=None
     ) -> int:
         """Transactional column update — ClickHouse
         ``ALTER TABLE ... UPDATE col = expr, ... WHERE pred`` (the
@@ -1384,13 +1366,13 @@ class ManifestTable:
         table's bucket key cannot be updated (CH likewise refuses to
         mutate key columns — the row's placement depends on it).
 
-        Scale shape is delete_where's: zone-map/bloom `where`/`equals`/
-        `tokens` probes bound the hit-finding scan to files that can
-        possibly match, then only TOUCHED buckets rewrite — a mutation
-        whose predicate lives in a time slice rewrites that slice's
-        buckets, not 100 TB. The commit note records
-        ``scanned=M/N`` so callers (and tests) can audit the pruning.
-        Returns the new version (unchanged if nothing matched).
+        Scale shape is delete_where's: the zone-map ``where`` probe
+        bounds the hit-finding scan to files that can possibly match,
+        then only TOUCHED buckets rewrite — a mutation whose predicate
+        lives in a time slice rewrites that slice's buckets, not 100
+        TB. The commit note records ``scanned=M/N`` so callers (and
+        tests) can audit the pruning. Returns the new version
+        (unchanged if nothing matched).
         """
         if self.key_col in assignments:
             raise ValueError(
@@ -1399,40 +1381,10 @@ class ManifestTable:
                 "column mutations). Delete + re-insert instead."
             )
         m = self.current_manifest()
-        if m.get("projections"):
-            raise NotImplementedError(
-                "update_where on a table with projections is not supported: "
-                "bucket-scoped rewrites would strand the consumed parts' "
-                "projection files. Drop the projection first, update, then "
-                "re-add (CH DROP/MATERIALIZE PROJECTION)."
-            )
-        if not m["files"]:
-            return self.current_version()
-        by_name = {f["name"]: f for f in m["files"]}
-        candidates = (
-            self.files_for(where, equals=equals, tokens=tokens, version=m["version"])
-            if (where or equals or tokens)
-            else m["files"]
-        )
-        if not candidates:
-            return self.current_version()
-        # r17: fixed-shape metadata action (scan + one distinct
-        # exchange) — one planning round instead of one per AQE stage
-        with _micro_shape(spark, width=None):
-            hit_paths = (
-                self._read_entries(spark, candidates, m)
-                .filter(predicate)
-                .select(F.input_file_name().alias("__f"))
-                .distinct()
-                .collect()
-            )  # bounded by file count, not row count
-        hit_names = {os.path.basename(r["__f"]) for r in hit_paths}
-        if not hit_names:
-            return self.current_version()
-        touched = sorted({by_name[n]["bucket"] for n in hit_names})
-        touched_files = [f for f in m["files"] if f["bucket"] in touched]
-        kept_files = [f for f in m["files"] if f["bucket"] not in touched]
-        src = self._read_entries(spark, touched_files, m)
+        touched, scanned = self._hit_buckets(spark, m, predicate, where)
+        if not touched:
+            return m["version"]
+        src = self._read_entries(spark, [f for f in m["files"] if f["bucket"] in touched], m)
         dtypes = dict(src.dtypes)
         missing = sorted(set(assignments) - set(dtypes))
         if missing:
@@ -1444,27 +1396,9 @@ class ManifestTable:
                 for c, e in assignments.items()
             }
         )
-        new_files = self._write_bucket_files(updated, touched)
-        return self._commit(
-            m,
-            kept_files + new_files,
-            note=(
-                f"update_where buckets={len(touched)} "
-                f"cols={sorted(assignments)} "
-                f"scanned={len(candidates)}/{len(m['files'])}"
-            ),
-        )
-
-    def apply_ttl(self, spark: SparkSession, ts_col: str, older_than: str) -> int:
-        """Row TTL: drop rows with ``ts_col`` strictly before
-        ``older_than`` (a TIMESTAMP literal string) — ClickHouse
-        ``TTL`` clause semantics expressed as a transactional delete.
-        When ``ts_col`` is zone-mapped the hit-finding scan reads ONLY
-        files whose [min, max] can reach below the cutoff — on a
-        time-keyed part log that is the expired tail, not the table."""
-        rng = [(ts_col, None, older_than)] if ts_col in self.stats_cols else None
-        return self.delete_where(
-            spark, f"{ts_col} < TIMESTAMP '{older_than}'", where=rng
+        return self._rewrite_buckets(
+            m, touched, updated,
+            f"update_where buckets={len(touched)} cols={sorted(assignments)} {scanned}",
         )
 
     def apply_ttl_rollup(
@@ -1509,41 +1443,20 @@ class ManifestTable:
         bad = sorted(set(set_exprs) & set(group_by))
         if bad:
             raise ValueError(f"SET on GROUP BY column(s): {bad}")
-        m = self.current_manifest()
-        if m.get("projections"):
-            raise NotImplementedError(
-                "apply_ttl_rollup on a table with projections is not "
-                "supported: drop the projection first, roll up, re-add."
-            )
-        if not m["files"]:
-            return self.current_version()
-        by_name = {f["name"]: f for f in m["files"]}
         # cutoff literal: integer epoch columns take the number as-is,
-        # timestamp columns a TIMESTAMP literal (mirrors apply_ttl)
+        # timestamp columns a TIMESTAMP literal
         if isinstance(older_than, int) or str(older_than).lstrip("-").isdigit():
             cut_lit = str(older_than)
         else:
             cut_lit = f"TIMESTAMP '{older_than}'"
         predicate = f"{ts_col} < {cut_lit}"
-        rng = [(ts_col, None, older_than)] if ts_col in self.stats_cols else None
-        candidates = self.files_for(rng, version=m["version"]) if rng else m["files"]
-        if not candidates:
-            return self.current_version()
-        with _micro_shape(spark, width=None):  # r17: same fixed-shape hit-find as update
-            hits = (
-                self._read_entries(spark, candidates, m)
-                .filter(predicate)
-                .select(F.input_file_name().alias("__f"))
-                .distinct()
-                .collect()
-            )
-        hit_names = {os.path.basename(r["__f"]) for r in hits}
-        if not hit_names:
-            return self.current_version()
-        touched = sorted({by_name[n]["bucket"] for n in hit_names})
-        touched_files = [f for f in m["files"] if f["bucket"] in touched]
-        kept_files = [f for f in m["files"] if f["bucket"] not in touched]
-        src = self._read_entries(spark, touched_files, m)
+        m = self.current_manifest()
+        touched, scanned = self._hit_buckets(
+            spark, m, predicate, [(ts_col, None, older_than)]
+        )
+        if not touched:
+            return m["version"]
+        src = self._read_entries(spark, [f for f in m["files"] if f["bucket"] in touched], m)
         dtypes = dict(src.dtypes)
         missing = sorted((set(set_exprs) | set(group_by)) - set(dtypes))
         if missing:
@@ -1564,14 +1477,8 @@ class ManifestTable:
             aggs.append(F.expr(e).cast(dtypes[c]).alias(c))
         rolled = expired.groupBy(*group_by).agg(*aggs).select(*src.columns)
         merged = survivors.select(*src.columns).unionByName(rolled)
-        new_files = self._write_bucket_files(merged, touched)
-        return self._commit(
-            m,
-            kept_files + new_files,
-            note=(
-                f"ttl_rollup buckets={len(touched)} "
-                f"scanned={len(candidates)}/{len(m['files'])}"
-            ),
+        return self._rewrite_buckets(
+            m, touched, merged, f"ttl_rollup buckets={len(touched)} {scanned}"
         )
 
     def describe_parts(self, spark: SparkSession, version: int | None = None) -> DataFrame:

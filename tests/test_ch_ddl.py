@@ -375,13 +375,109 @@ def test_catalog_alter_refusals(spark, tmp_path):
         c.execute("ALTER TABLE user_events DELETE WHERE 1 = 1")
     with pytest.raises(ChSqlError, match="unsupported ALTER"):
         c.execute("ALTER USER admin", spark=spark)
-    with pytest.raises(ValueError, match="unsupported ALTER TABLE clause"):
+    with pytest.raises(ChSqlError, match="unsupported ALTER TABLE clause"):
         c.execute("ALTER TABLE user_events FREEZE", spark=spark)
+    for bad, match in (
+        ("ALTER TABLE user_events UPDATE value = 1", "needs a WHERE"),
+        ("ALTER TABLE user_events UPDATE value WHERE 1 = 1", "bad UPDATE assignment"),
+        ("ALTER TABLE user_events UPDATE nope = 1 WHERE 1 = 1", "undeclared column"),
+        ("ALTER TABLE user_events DELETE WHERE", "needs a predicate"),
+        ("ALTER TABLE user_events DROP PROJECTION nope", "does not exist"),
+    ):
+        with pytest.raises(ChSqlError, match=match):
+            c.execute(bad, spark=spark)
     # no storage root -> loud, names the fix
     c2 = ChDdlCatalog()
     c2.execute(_PROVISION)
     with pytest.raises(ChSqlError, match="storage_root"):
         c2.execute("ALTER TABLE user_events DELETE WHERE 1 = 1", spark=spark)
+
+
+def test_alter_freeze_over_http_keeps_the_connection(spark, tmp_path):
+    """An ALTER outside the subset is answered as an error over the
+    wire, and the same keep-alive connection still serves the next
+    statement."""
+    import http.client
+
+    from postgre_to_clickhouse_spark.ch_http import serve_ch_http
+
+    ep = serve_ch_http(spark, _ue_catalog(spark, tmp_path))
+    conn = http.client.HTTPConnection("127.0.0.1", ep.port, timeout=120)
+    try:
+        conn.request("POST", "/", body=b"ALTER TABLE user_events FREEZE")
+        r = conn.getresponse()
+        assert r.status == 500 and b"ChSqlError" in r.read()
+        sock = conn.sock
+        conn.request("POST", "/", body=b"SELECT count() FROM user_events")
+        r = conn.getresponse()
+        assert (r.status, r.read()) == (200, b"6\n")
+        assert conn.sock is sock
+    finally:
+        conn.close()
+        ep.stop()
+
+
+_TS_ROWS = [
+    (1, "2024-01-01 10:00:00", "a"), (2, "2024-02-15 08:30:00", "b"),
+    (3, "2024-01-01 23:59:59", "c"), (4, "2024-03-01 00:00:00", "d"),
+]
+
+
+@pytest.mark.parametrize("mutation, predicted", [
+    ("DELETE WHERE toYYYYMM(ts) = 202402",
+     "SELECT k, ts, v FROM t WHERE NOT (toYYYYMM(ts) = 202402)"),
+    ("UPDATE v = concat(v, toString(k)) WHERE toDate(ts) = '2024-01-01'",
+     "SELECT k, ts, if(toDate(ts) = '2024-01-01', concat(v, toString(k)), v) AS v FROM t"),
+])
+def test_mutations_compile_ch_functions(spark, tmp_path, mutation, predicted):
+    """A mutation's predicate and right-hand sides compile through the
+    dialect like a SELECT's, so CH functions work in both: the table
+    after the ALTER equals what the matching SELECT predicted."""
+    c = ChDdlCatalog(storage_root=str(tmp_path))
+    c.execute("CREATE TABLE t (k UInt32, ts DateTime, v String) "
+              "ENGINE = MergeTree ORDER BY (k)")
+    values = ", ".join(f"({k}, toDateTime('{ts}'), '{v}')" for k, ts, v in _TS_ROWS)
+    c.execute(f"INSERT INTO t VALUES {values}", spark=spark)
+    assert c.query(spark, "SELECT count() AS n FROM t WHERE toYYYYMM(ts) = 202402"
+                   ).collect()[0]["n"] == 1
+    want = sorted(map(tuple, c.query(spark, predicted).collect()))
+    c.execute(f"ALTER TABLE t {mutation}", spark=spark)
+    assert sorted(map(tuple, c.query(spark, "SELECT k, ts, v FROM t").collect())) == want
+
+
+def test_update_of_key_columns_refuses(spark, tmp_path):
+    """CH's "Cannot UPDATE key column": every ORDER BY and PARTITION BY
+    source column refuses, and nothing commits."""
+    c = ChDdlCatalog(storage_root=str(tmp_path))
+    c.execute("CREATE TABLE t (k UInt32, e UInt32, ts DateTime, v String) "
+              "ENGINE = MergeTree PARTITION BY toYYYYMM(ts) ORDER BY (k, e)")
+    c.execute("INSERT INTO t VALUES (1, 10, toDateTime('2024-01-01 00:00:00'), 'x')",
+              spark=spark)
+    version = c.storage_for("t").current_version()
+    for stmt in ("UPDATE e = e + 1 WHERE k = 1",
+                 "UPDATE k = 2 WHERE e = 10",
+                 "UPDATE v = 'y', ts = ts WHERE k = 1"):
+        with pytest.raises(ChSqlError, match="Cannot UPDATE key column"):
+            c.execute(f"ALTER TABLE t {stmt}", spark=spark)
+    assert c.storage_for("t").current_version() == version
+    assert [tuple(r) for r in c.query(spark, "SELECT e, v FROM t").collect()] == [(10, "x")]
+
+
+def test_optimize_final_refuses_with_projections(spark, tmp_path):
+    """OPTIMIZE FINAL rewrites every bucket, which would strand a
+    projection's files: a projection-carrying RMT(ver) refuses, naming
+    the projection, and commits nothing."""
+    c = ChDdlCatalog(storage_root=str(tmp_path))
+    c.execute("CREATE TABLE u (k UInt32, v String, ver UInt32) "
+              "ENGINE = ReplacingMergeTree(ver) ORDER BY (k)")
+    c.execute("INSERT INTO u VALUES (1, 'a', 1), (2, 'b', 1)", spark=spark)
+    c.execute("INSERT INTO u VALUES (1, 'c', 2)", spark=spark)
+    c.execute("ALTER TABLE u ADD PROJECTION by_v (SELECT * ORDER BY v)", spark=spark)
+    t = c.storage_for("u")
+    version = t.current_version()
+    with pytest.raises(NotImplementedError, match="by_v"):
+        c.execute("OPTIMIZE TABLE u FINAL", spark=spark)
+    assert t.current_version() == version
 
 
 # --- r11: DEFAULT columns + metadata-only ALTER ADD/DROP COLUMN -----
@@ -705,23 +801,29 @@ def test_optimize_final_folds_aggregate_states(spark, tmp_path):
     assert sorted(map(tuple, c.query(spark, q).collect())) == before
 
 
-@pytest.mark.parametrize("via", ["dataframe", "JSONEachRow"])
+@pytest.mark.parametrize("via", ["dataframe", "JSONEachRow", "JSONEachRow omitted field"])
 @pytest.mark.parametrize("engine", ["ReplacingMergeTree", "ReplacingMergeTree(ver)"])
 def test_rmt_insert_block_last_row_wins_ties(spark, tmp_path, engine, via):
     """CH's insert-block dedup: among rows with an equal sorting key
     (and, under RMT(ver), an equal version) the row inserted last wins;
-    a higher version still beats a later row."""
+    a higher version still beats a later row. In a JSONEachRow body
+    the later line wins even when it omits a field (its DEFAULT)."""
     import json
 
     c = ChDdlCatalog(storage_root=str(tmp_path))
-    c.execute(f"CREATE TABLE t (k UInt32, ver UInt32, v String) ENGINE = {engine} ORDER BY (k)")
+    c.execute(f"CREATE TABLE t (k UInt32, ver UInt32, v String DEFAULT 'dflt') "
+              f"ENGINE = {engine} ORDER BY (k)")
     rows = [(1, 5, "first"), (1, 5, "second"), (2, 6, "newer"), (2, 5, "later")]
     if via == "dataframe":
         c.insert(spark, "t", spark.createDataFrame(rows, "k long, ver long, v string"))
     else:
-        c.insert_json_rows(spark, "t", [json.dumps(dict(zip(("k", "ver", "v"), r))) for r in rows])
+        lines = [dict(zip(("k", "ver", "v"), r)) for r in rows]
+        if via == "JSONEachRow omitted field":
+            del lines[1]["v"]
+        c.insert_json_rows(spark, "t", [json.dumps(r) for r in lines])
     got = dict(map(tuple, c.query(spark, "SELECT k, v FROM t").collect()))
-    assert got == {1: "second", 2: "newer" if engine.endswith("(ver)") else "later"}
+    assert got == {1: "dflt" if via.endswith("omitted field") else "second",
+                   2: "newer" if engine.endswith("(ver)") else "later"}
 
 
 def test_kafka_sink_feeds_every_mv_and_skips_replays(spark, tmp_path):

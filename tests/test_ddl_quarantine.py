@@ -67,15 +67,16 @@ def test_thrift_sql_endpoint_wire_roundtrip(spark):
         spark.catalog.dropGlobalTempView("wire_probe")
 
 
-def test_execute_alter_clickhouse_dialect(spark, tmp_path):
-    """r9: the CH ALTER dialect a reference user types — UPDATE/DELETE
-    mutations, sort + aggregate ADD PROJECTION, DROP PROJECTION — all
-    route to the manifest-table ops; anything unrecognized raises."""
+def test_catalog_alter_clickhouse_dialect(spark, tmp_path):
+    """The CH ALTER dialect a reference user types — UPDATE/DELETE
+    mutations, sort + aggregate ADD PROJECTION, DROP PROJECTION — runs
+    through ``ChDdlCatalog.execute`` onto the table's manifest storage;
+    anything unrecognized raises ``ChSqlError``."""
     import pytest
     from pyspark.sql import functions as F
 
-    from postgre_to_clickhouse_spark.ddl import execute_alter
-    from postgre_to_clickhouse_spark.sinks.manifest import ManifestTable
+    from postgre_to_clickhouse_spark.ch_ddl import ChDdlCatalog
+    from postgre_to_clickhouse_spark.ch_select import ChSqlError
 
     df = spark.range(100).select(
         (F.col("id") % 10).alias("uid"),
@@ -83,26 +84,29 @@ def test_execute_alter_clickhouse_dialect(spark, tmp_path):
         (F.col("id") % 3).cast("string").alias("cat"),
         (F.col("id") * 1.5).alias("val"),
     )
-    t = ManifestTable(str(tmp_path / "t"), key_col="uid", n_buckets=2)
-    t.append_parts(sort_key=("uid", "seq"), arrival=("uid",))(df, 0)
+    c = ChDdlCatalog(storage_root=str(tmp_path), n_buckets=2)
+    c.execute("CREATE TABLE t (uid Int64, seq Int64, cat String, val Float64) "
+              "ENGINE = MergeTree ORDER BY (uid, seq)")
+    c.insert(spark, "t", df)
+    t = c.storage_for("t")
 
-    execute_alter(
-        spark, t, "ALTER TABLE t UPDATE val = val * 2, cat = upper(cat) WHERE seq < 10"
+    c.execute(
+        "ALTER TABLE t UPDATE val = val * 2, cat = upper(cat) WHERE seq < 10", spark=spark
     )
     got = {r.seq: (r.val, r.cat) for r in t.read(spark).collect()}
     for s in range(100):
         want = (s * 1.5 * 2, str(s % 3).upper()) if s < 10 else (s * 1.5, str(s % 3))
         assert got[s] == want, s
 
-    execute_alter(spark, t, "ALTER TABLE t DELETE WHERE seq >= 90;")
+    c.execute("ALTER TABLE t DELETE WHERE seq >= 90;", spark=spark)
     assert t.read(spark).count() == 90
 
-    execute_alter(spark, t, "ALTER TABLE t ADD PROJECTION by_seq (SELECT * ORDER BY seq)")
+    c.execute("ALTER TABLE t ADD PROJECTION by_seq (SELECT * ORDER BY seq)", spark=spark)
     assert t.projections["by_seq"]["sort_col"] == "seq"
-    execute_alter(
-        spark, t,
+    c.execute(
         "ALTER TABLE t ADD PROJECTION by_cat "
         "(SELECT cat, count(*) AS n, sum(val) AS v, min(seq) GROUP BY cat)",
+        spark=spark,
     )
     spec = t.projections["by_cat"]
     assert spec["kind"] == "agg" and spec["aggs"] == {
@@ -114,16 +118,16 @@ def test_execute_alter_clickhouse_dialect(spark, tmp_path):
         F.min("seq").alias("min_seq")).collect()))
     assert got == want
 
-    execute_alter(spark, t, "ALTER TABLE t DROP PROJECTION by_cat")
+    c.execute("ALTER TABLE t DROP PROJECTION by_cat", spark=spark)
     assert "by_cat" not in t.projections
 
-    # CH's canonical empty-paren count() is accepted (ADVICE r9)
-    execute_alter(
-        spark, t,
+    # CH's canonical empty-paren count() is accepted
+    c.execute(
         "ALTER TABLE t ADD PROJECTION by_cat2 (SELECT cat, count() GROUP BY cat)",
+        spark=spark,
     )
     assert t.projections["by_cat2"]["aggs"] == {"n": ["count", "*"]}
-    execute_alter(spark, t, "ALTER TABLE t DROP PROJECTION by_cat2")
+    c.execute("ALTER TABLE t DROP PROJECTION by_cat2", spark=spark)
 
     for bad in (
         "SELECT 1",
@@ -131,6 +135,7 @@ def test_execute_alter_clickhouse_dialect(spark, tmp_path):
         "ALTER TABLE t ADD PROJECTION p (SELECT avg(val) GROUP BY cat)",
         "ALTER TABLE t ADD PROJECTION p (SELECT cat, sum() GROUP BY cat)",
         "ALTER TABLE t ADD PROJECTION p (SELECT cat)",
+        "ALTER TABLE t ADD PROJECTION by_seq (SELECT * ORDER BY val)",
     ):
-        with pytest.raises(ValueError):
-            execute_alter(spark, t, bad)
+        with pytest.raises(ChSqlError):
+            c.execute(bad, spark=spark)

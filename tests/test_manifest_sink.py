@@ -148,16 +148,23 @@ def test_compact_reduces_files_preserves_content(spark, tmp_path):
     assert t.compact(spark) == v
 
 
-def test_compact_final_collapses_to_latest(spark, tmp_path):
-    t = ManifestTable(str(tmp_path / "t"), n_buckets=4)
-    t.append_parts()(_full(spark), 0)
-    latest_before = _latest_map(latest(t.read(spark)))
+def test_optimize_final_collapses_to_latest(spark, tmp_path):
+    """The README's users as ``ReplacingMergeTree(updated_at) ORDER BY
+    (user_id)``, inserted as three arrival slices so each user's
+    history spans parts: ``OPTIMIZE TABLE ... FINAL`` collapses the
+    snapshot itself to the latest row per user."""
+    cat = readme_catalog(
+        str(tmp_path), _USERS_VER_DDL.replace("ORDER BY (user_id, updated_at)", "ORDER BY (user_id)")
+    )
+    t = cat.storage_for("users")
+    for i in range(3):
+        cat.insert(spark, "users", _full(spark).filter(f"kafka_offset % 3 = {i}"), batch_id=i)
     raw_before = t.read(spark).count()
-    v = t.compact(spark, final=True)
-    assert v == t.current_version()
-    # FINAL == ReplacingMergeTree OPTIMIZE FINAL: history collapsed
+    v = t.current_version()
+    cat.execute("OPTIMIZE TABLE shop.users FINAL", spark=spark)
+    assert t.current_version() == v + 1
     assert t.read(spark).count() == len(GOLDEN_LATEST) < raw_before
-    assert _latest_map(latest(t.read(spark))) == latest_before == GOLDEN_LATEST
+    assert _latest_map(t.read(spark)) == GOLDEN_LATEST
 
 
 def test_ttl_delete_is_transactional_and_pruned(spark, tmp_path):
@@ -168,7 +175,10 @@ def test_ttl_delete_is_transactional_and_pruned(spark, tmp_path):
     cutoff = sorted(r.updated_at for r in rows)[len(rows) // 2]
     n_old = sum(1 for r in rows if r.updated_at < cutoff)
     assert n_old > 0
-    v1 = t.apply_ttl(spark, "updated_at", cutoff.strftime("%Y-%m-%d %H:%M:%S"))
+    cut_s = cutoff.strftime("%Y-%m-%d %H:%M:%S")
+    v1 = t.delete_where(
+        spark, f"updated_at < TIMESTAMP '{cut_s}'", where=[("updated_at", None, cut_s)]
+    )
     assert v1 == v0 + 1
     after = t.read(spark)
     assert after.count() == len(rows) - n_old
@@ -180,16 +190,18 @@ def test_ttl_delete_is_transactional_and_pruned(spark, tmp_path):
 
 
 def test_append_ingest_defers_dedup_to_read_and_compact(spark, tmp_path):
-    t = ManifestTable(str(tmp_path / "t"), n_buckets=4)
-    sink = t.append_parts()
-    sink(_full(spark), 0)
-    sink(_full(spark), 1)  # full redelivery appends parts, no merge read
-    # query-time FINAL resolves versions across redundant parts
-    assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
+    """A full redelivery appends parts (no merge read): the FINAL read
+    resolves versions across the redundant parts, and ``OPTIMIZE
+    TABLE ... FINAL`` folds them away in storage."""
+    cat = readme_catalog(str(tmp_path), _USERS_VER_DDL)
+    t = cat.storage_for("users")
+    cat.insert(spark, "users", _full(spark), batch_id=0)
+    cat.insert(spark, "users", _full(spark), batch_id=1)
+    final = "SELECT user_id, username, account_type, updated_at, kafka_offset FROM shop.users FINAL"
+    assert _latest_map(latest(cat.query(spark, final))) == GOLDEN_LATEST
     raw = t.read(spark).count()
-    v = t.compact(spark, final=True)
-    assert v == t.current_version()
-    assert t.read(spark).count() == len(GOLDEN_LATEST) < raw
+    cat.execute("OPTIMIZE TABLE shop.users FINAL", spark=spark)
+    assert t.read(spark).count() == len(GOLDEN_ALL_VERSIONS) < raw
     assert _latest_map(latest(t.read(spark))) == GOLDEN_LATEST
 
 
@@ -230,7 +242,7 @@ def test_append_parts_schema_evolution(spark, tmp_path):
     ).collect()}
     assert out2[4].email is None and out2[2].email == "bob@x"
     # compaction over mixed-schema parts keeps results identical
-    t.compact(spark, sort_key=("user_id", "updated_at"), arrival=("kafka_offset",))
+    t.compact(spark)
     out3 = {r.user_id: r for r in latest(
         t.read(spark), ("user_id",), ("updated_at", "kafka_offset")
     ).collect()}
@@ -274,7 +286,7 @@ def test_zone_map_stats_prune_files_and_preserve_results(spark, tmp_path):
     assert none.count() == 0 and none.columns == t.read(spark).columns
 
     # compaction rewrites files — zone maps must survive it
-    t.compact(spark, min_files_per_bucket=2)
+    t.compact(spark)
     assert all("stats" in f for f in t.current_manifest()["files"])
 
 
@@ -294,8 +306,8 @@ def test_zone_map_missing_stats_files_always_scanned(spark, tmp_path):
 
 
 def test_ttl_uses_zone_maps_and_preserves_semantics(spark, tmp_path):
-    """apply_ttl on a zone-mapped time column: the hit-finding scan is
-    range-pruned to files that can reach below the cutoff, and the
+    """A TTL delete on a zone-mapped time column: the hit-finding scan
+    is range-pruned to files that can reach below the cutoff, and the
     delete result is identical to the unpruned definition."""
     import datetime as dt
 
@@ -313,7 +325,10 @@ def test_ttl_uses_zone_maps_and_preserves_semantics(spark, tmp_path):
     pruned = t.files_for([("ts", None, cutoff)])
     assert 0 < len(pruned) < len(t.current_manifest()["files"])
 
-    t.apply_ttl(spark, "ts", cutoff)
+    t.delete_where(spark, f"ts < TIMESTAMP '{cutoff}'", where=[("ts", None, cutoff)])
+    note = t.current_manifest()["note"]
+    scanned, total = map(int, note.split("scanned=")[1].split("/"))
+    assert scanned == len(pruned) < total, note
     kept = sorted(r.uid for r in t.read(spark).collect())
     assert kept == [i for i in range(40) if base + dt.timedelta(days=i // 10) >= dt.datetime(2024, 1, 2)]
 
@@ -1205,7 +1220,7 @@ def test_manifest_mutation_model_sequences(spark, tmp_path):
                 ]
                 model = live + rolled
             else:
-                t.compact(spark, min_files_per_bucket=2)  # content no-op
+                t.compact(spark)  # content no-op
             assert snapshot(t) == model_sorted(model), (trial, _step, op)
         # time travel: any recorded pre-op version still reads cleanly
         op, v = history[len(history) // 2]
